@@ -184,6 +184,93 @@ class ParquetTableSpec extends SparkSpec {
     assert(t.latestVersion == v + 1)
   }
 
+  /** The two table layouts: a snapshot table, and one partitioned by `p`. */
+  private val layouts = Seq(Nil, Seq("p"))
+
+  test("append: a crash before the commit record leaves nothing visible; redelivery lands once") {
+    for (keys <- layouts; txn <- Seq(None, Some(("app", 1L)))) {
+      val root = tmpDir("pt_append_crash")
+      val t = new ParquetTable(spark, root, keys)
+      t.create(Seq((1, "a", "p1"), (2, "b", "p2")).toDF("k", "v", "p"))
+      def ks(x: ParquetTable) = x.read.select("k").as[Int].collect().sorted.toSeq
+      val batch = Seq((3, "c", "p1"), (4, "d", "p3")).toDF("k", "v", "p")
+      t.onPreCommit = () => throw new RuntimeException("injected crash")
+      intercept[RuntimeException](t.append(batch, txn = txn))
+      val restarted = new ParquetTable(spark, root, keys)
+      val why = s"keys=$keys txn=$txn"
+      assert(restarted.latestVersion == 0L, why)
+      assert(ks(restarted) == Seq(1, 2), s"crashed append visible: $why")
+      restarted.append(batch, txn = txn) // redelivery
+      assert(ks(restarted) == Seq(1, 2, 3, 4), why)
+      if (txn.nonEmpty) {
+        restarted.append(batch, txn = txn) // a recorded txn replays as a no-op
+        assert(ks(restarted) == Seq(1, 2, 3, 4), why)
+      }
+    }
+  }
+
+  test("a DataFrame read before a commit keeps returning the version it was read at") {
+    val ops: Seq[(String, ParquetTable => Unit)] = Seq(
+      "compact" -> (_.compact()),
+      "merge" -> (_.merge(Seq((1, "a2", "p1"), (7, "g", "p1")).toDF("k", "v", "p"),
+        "target.k = updates.k", Seq(WhenMatched(None, UpdateAll)),
+        Seq(WhenNotMatched(None, InsertAll)))),
+      "delete" -> (_.delete("k = 2")),
+      "overwrite" -> (_.overwrite(Seq((9, "z", "p9")).toDF("k", "v", "p"))))
+    for (keys <- layouts) {
+      val t = new ParquetTable(spark, tmpDir("pt_iso"), keys)
+      t.create(Seq((1, "a", "p1"), (2, "b", "p2"), (3, "c", "p1"), (4, "d", "p2"),
+        (5, "e", "p1"), (6, "f", "p2")).toDF("k", "v", "p").repartition(3))
+      ops.foreach { case (name, op) =>
+        val before = t.read
+        val expected = rowsOf(before)
+        val v = t.latestVersion
+        op(t)
+        assert(t.latestVersion == v + 1, s"$name did not commit (keys=$keys)")
+        assert(rowsOf(before) == expected, s"$name changed an earlier read (keys=$keys)")
+      }
+    }
+  }
+
+  test("commit metrics round-trip control characters, quotes and backslashes") {
+    val t = new ParquetTable(spark, tmpDir("pt_metrics"))
+    val odd = Map("note" -> "a\nb\t\"c\\", "k\"ey\n" -> "\u0001")
+    t.create(Seq(1).toDF("k"), odd)
+    assert(new ParquetTable(spark, t.root).lastMetrics == odd)
+  }
+
+  /** Spark jobs started by `body` on this thread (tagged by a job group). */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // listenerBus is private[spark]; drain it reflectively
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("read plans from the commit log: no Spark job on a 40-file table, either layout") {
+    for (keys <- layouts) {
+      val t = new ParquetTable(spark, tmpDir("pt_read_jobs"), keys)
+      t.create(Seq((0, "v", "p0")).toDF("k", "v", "p"))
+      (1 until 40).foreach(i => t.append(Seq((i, "v", s"p${i % 4}")).toDF("k", "v", "p")))
+      assert(jobsDuring(t.read.columns) == 0, s"keys=$keys")
+      assert(t.read.count() == 40L)
+    }
+  }
+
   test("append schema evolution fuzz: union schema, nulls where a batch lacked a column") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import org.apache.spark.sql.Row
@@ -197,18 +284,20 @@ class ParquetTableSpec extends SparkSpec {
       n <- Gen.choose(1, 5)
       sets <- Gen.listOfN(n, Gen.someOf(pool))
     } yield sets.map(_.toSeq.sorted)
-    val prop = Prop.forAll(genBatches) { batches =>
-      val t = new ParquetTable(spark, tmpDir("pt_evofuzz"))
+    val prop = Prop.forAll(genBatches) { batches => layouts.forall { keys =>
+      // the partition column rides along on the partitioned layout
+      val t = new ParquetTable(spark, tmpDir("pt_evofuzz"), keys)
       batches.zipWithIndex.foreach { case (cols, i) =>
+        val all = cols ++ keys
         val schema = StructType(StructField("k", LongType, nullable = false) +:
-          cols.map(c => StructField(c, LongType, nullable = true)))
-        val row = Row.fromSeq(i.toLong +: cols.map(c =>
+          all.map(c => StructField(c, LongType, nullable = true)))
+        val row = Row.fromSeq(i.toLong +: all.map(c =>
           (i * 10 + pool.indexOf(c)).toLong))
         t.append(spark.createDataFrame(
           java.util.Collections.singletonList(row), schema))
       }
       val seen = batches.flatten.distinct
-      val schemaOk = t.read.columns.toSet == (Set("k") ++ seen)
+      val schemaOk = t.read.columns.toSet == (Set("k") ++ seen ++ keys)
       val rows = t.read.collect().map { r =>
         r.getLong(r.fieldIndex("k")) -> r
       }.toMap
@@ -222,9 +311,9 @@ class ParquetTableSpec extends SparkSpec {
         }
       }
       if (!(schemaOk && valsOk && rows.size == batches.size))
-        println(s"batches=$batches schema=${t.read.columns.toSeq} rows=$rows")
+        println(s"keys=$keys batches=$batches schema=${t.read.columns.toSeq} rows=$rows")
       schemaOk && valsOk && rows.size == batches.size
-    }
+    } }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(res.passed, res.status.toString)

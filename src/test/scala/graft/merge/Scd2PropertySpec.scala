@@ -112,17 +112,24 @@ class Scd2PropertySpec extends SparkSpec {
     // the exactly-once contract under fuzz: crash AFTER data files land
     // but BEFORE the commit record (the onPreCommit seam), restart with a
     // fresh table handle, redeliver the same (appId, batchId) txn — the
-    // final table must be byte-equal to the run that never crashed,
-    // whichever batch the crash hits (including the bootstrap create).
+    // crash must leave the table as it was, and the final table must be
+    // byte-equal to the run that never crashed, whichever batch the crash
+    // hits (including the bootstrap create), on either layout.
     val updateMap = Map(
       "current_flag" -> "false", "expiry_date" -> "updates.eff_date")
     val insertMap = Map(
       "k" -> "updates.k", "v" -> "updates.v", "current_flag" -> "true",
       "eff_date" -> "updates.eff_date",
       "expiry_date" -> "cast(null as date)")
-    def applyAll(root: String, batches: List[List[Scd2PropUpdate]],
-                 crashAt: Option[Int]): Set[Seq[Any]] = {
-      var table = new ParquetTable(spark, root)
+    // returns the final rows, and whether every crash left the table as
+    // it was (same version, same rows) until the redelivery
+    def applyAll(root: String, keys: Seq[String],
+                 batches: List[List[Scd2PropUpdate]],
+                 crashAt: Option[Int]): (Set[Seq[Any]], Boolean) = {
+      var table = new ParquetTable(spark, root, keys)
+      var atomic = true
+      def state() =
+        if (table.exists) Some((table.latestVersion, rowsOf(table.read))) else None
       def write(b: List[Scd2PropUpdate], i: Int): Unit =
         Scd.writeScd2(table, b.toDF(), Seq("k"),
           matchCondition =
@@ -132,25 +139,29 @@ class Scd2PropertySpec extends SparkSpec {
       batches.zipWithIndex.foreach { case (b, i) =>
         if (b.nonEmpty) {
           if (crashAt.contains(i)) {
+            val before = state()
             table.onPreCommit = () => throw new RuntimeException("boom")
             assert(scala.util.Try(write(b, i)).isFailure,
               "injected crash must fire")
-            table = new ParquetTable(spark, root) // restart
+            table = new ParquetTable(spark, root, keys) // restart
+            atomic &&= state() == before
             write(b, i) // redelivery, same txn
           } else write(b, i)
         }
       }
-      if (table.exists) rowsOf(table.read) else Set.empty
+      (if (table.exists) rowsOf(table.read) else Set.empty, atomic)
     }
+    // both layouts: a snapshot target and one partitioned by the key
     val prop = Prop.forAll(genScenario, Gen.choose(0, 3)) {
-      (batches, crashIdx) =>
-        val clean = applyAll(tmpDir("scd2p_clean"), batches, None)
-        val crashed = applyAll(tmpDir("scd2p_crash"), batches,
+      (batches, crashIdx) => Seq(Nil, Seq("k")).forall { keys =>
+        val (clean, _) = applyAll(tmpDir("scd2p_clean"), keys, batches, None)
+        val (crashed, atomic) = applyAll(tmpDir("scd2p_crash"), keys, batches,
           Some(crashIdx))
-        if (clean != crashed)
-          println(s"crashIdx=$crashIdx batches=$batches\n" +
-            s"clean=$clean\ncrashed=$crashed")
-        clean == crashed
+        if (clean != crashed || !atomic)
+          println(s"keys=$keys crashIdx=$crashIdx batches=$batches\n" +
+            s"clean=$clean\ncrashed=$crashed\natomic=$atomic")
+        clean == crashed && atomic
+      }
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(8), prop)

@@ -109,13 +109,20 @@ class Scd4PropertySpec extends SparkSpec {
   }
 
   test("writeScd4: a crash in EITHER table's commit window replays cleanly") {
-    def applyAll(prefix: String, batches: List[List[Scd4PropRow]],
+    // returns both tables' final rows, and whether every crash left both
+    // tables as they were (same versions, same rows) until the redelivery
+    def applyAll(prefix: String, keys: Seq[String],
+                 batches: List[List[Scd4PropRow]],
                  crashAt: Option[(Int, Boolean)]) // (batch, onHistory?)
-        : (Set[Seq[Any]], Map[Seq[Any], Int]) = {
+        : ((Set[Seq[Any]], Map[Seq[Any], Int]), Boolean) = {
       val curRoot = tmpDir(s"${prefix}_cur")
       val histRoot = tmpDir(s"${prefix}_hist")
-      var cur = new ParquetTable(spark, curRoot)
-      var hist = new ParquetTable(spark, histRoot)
+      var cur = new ParquetTable(spark, curRoot, keys)
+      var hist = new ParquetTable(spark, histRoot, keys)
+      var atomic = true
+      def state(t: ParquetTable) =
+        if (t.exists) Some((t.latestVersion, t.read.collect().map(_.toSeq).toSeq
+          .groupBy(identity).view.mapValues(_.length).toMap)) else None
       def write(b: List[Scd4PropRow], i: Int): Unit =
         Scd.writeScd4(cur, hist, b.toDF(), Seq("k"),
           txn = Some(("scd4prop", i.toLong)))
@@ -128,27 +135,36 @@ class Scd4PropertySpec extends SparkSpec {
           if (crashAt.exists(_._1 == i)) {
             // the hook may legitimately not fire (e.g. a bootstrap batch
             // never touches the history table) — redeliver only on crash
+            val before = (state(cur), state(hist))
+            val onHistory = crashAt.exists(_._2)
             val attempt = scala.util.Try(write(b, i))
-            cur = new ParquetTable(spark, curRoot) // restart both handles
-            hist = new ParquetTable(spark, histRoot)
-            if (attempt.isFailure) write(b, i) // redelivery, same txn
+            cur = new ParquetTable(spark, curRoot, keys) // restart both handles
+            hist = new ParquetTable(spark, histRoot, keys)
+            if (attempt.isFailure) {
+              // history commits before current: a crash on current leaves
+              // the history commit in place, a crash on history neither
+              atomic &&= (if (onHistory) (state(cur), state(hist)) == before
+                          else state(cur) == before._1)
+              write(b, i) // redelivery, same txn
+            }
           } else write(b, i)
         }
       }
-      (if (cur.exists) rowsOf(cur.read) else Set.empty,
-        if (hist.exists) hist.read.collect().map(_.toSeq).toSeq
-          .groupBy(identity).view.mapValues(_.length).toMap
-        else Map.empty)
+      ((if (cur.exists) rowsOf(cur.read) else Set.empty,
+        state(hist).map(_._2).getOrElse(Map.empty)), atomic)
     }
+    // both layouts: snapshot tables, and both tables partitioned by the key
     val prop = Prop.forAll(genScenario, Gen.choose(0, 3),
       Gen.oneOf(true, false)) { (batches, crashIdx, onHistory) =>
-      val clean = applyAll("scd4p_clean", batches, None)
-      val crashed = applyAll("scd4p_crash", batches,
-        Some((crashIdx, onHistory)))
-      if (clean != crashed)
-        println(s"crashIdx=$crashIdx onHistory=$onHistory " +
-          s"batches=$batches\nclean=$clean\ncrashed=$crashed")
-      clean == crashed
+      Seq(Nil, Seq("k")).forall { keys =>
+        val (clean, _) = applyAll("scd4p_clean", keys, batches, None)
+        val (crashed, atomic) = applyAll("scd4p_crash", keys, batches,
+          Some((crashIdx, onHistory)))
+        if (clean != crashed || !atomic)
+          println(s"keys=$keys crashIdx=$crashIdx onHistory=$onHistory " +
+            s"batches=$batches\nclean=$clean\ncrashed=$crashed\natomic=$atomic")
+        clean == crashed && atomic
+      }
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(8), prop)

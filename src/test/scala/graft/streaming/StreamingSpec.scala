@@ -115,11 +115,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("partitioned table: crash after data write replays idempotently to exactly-once state") {
-    // the partitioned path rewrites touched partitions IN PLACE (dynamic
-    // overwrite), so unlike the snapshot path the new data is already
-    // visible when the crash hits the commit-log window — the guarantee
-    // here is idempotent replay to the exactly-once FINAL state, not
-    // point-in-time invisibility (ParquetTable.merge scaladoc)
+    // the same atomic guarantee as the snapshot layout: the crash leaves
+    // version and contents as they were, and the restart commits once
     val inDir = tmpDir("pcrash_in")
     val ckpt = tmpDir("pcrash_ckpt")
     val table = new ParquetTable(spark, tmpDir("pcrash_table"),
@@ -148,14 +145,15 @@ class StreamingSpec extends SparkSpec {
     table.onPreCommit = () => throw new RuntimeException("injected crash")
     intercept[Exception] { runOnce() }
     table.onPreCommit = () => ()
-    // commit log is behind the in-place data swap
-    assert(table.latestVersion == 0L)
     def state() = table.read.select("id", "name", "region").collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    // nothing became visible: version and contents are pre-batch
+    assert(table.latestVersion == 0L)
+    assert(state() == Map(1L -> ("alice", "east"), 2L -> ("bob", "west")))
     val expected = Map(1L -> ("alicia", "east"), 2L -> ("bob", "west"),
       3L -> ("carol", "west"))
-    // restart: the batch replays (txn never logged) and the SCD1 merge is
-    // idempotent over the half-committed data — exactly-once final state
+    // restart: the batch replays (its txn never reached the log) and the
+    // commit lands exactly once
     runOnce()
     assert(table.latestVersion == 1L)
     assert(state() == expected)
