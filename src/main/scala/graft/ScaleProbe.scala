@@ -799,9 +799,8 @@ object ScaleProbe {
       // under test: the manual-DPP IN-list bounds the REWRITE SET by
       // touched partitions — parts_rewritten must stay 4 (and
       // bytes_rewritten ~4/64 of total) as the table grows 10x; a broken
-      // bound shows up as parts_rewritten == 64. Measured from the data
-      // directory itself (file-name-set diff per partition dir), not
-      // from the code's own claims.
+      // bound shows up as parts_rewritten == 64. Measured as the diff of
+      // each partition's live file set before and after the merge.
       "q52_scd2_parts_total" -> (() => scdWrite("scd2_parts_total")),
       "q52_scd2_parts_rewritten" -> (() => scdWrite("scd2_parts_rewritten")),
       "q52_scd2_bytes_total" -> (() => scdWrite("scd2_bytes_total")),
@@ -809,28 +808,7 @@ object ScaleProbe {
       "q59_scd4_parts_total" -> (() => scdWrite("scd4_parts_total")),
       "q59_scd4_parts_rewritten" -> (() => scdWrite("scd4_parts_rewritten")),
       "q59_scd4_bytes_total" -> (() => scdWrite("scd4_bytes_total")),
-      "q59_scd4_bytes_rewritten" -> (() => scdWrite("scd4_bytes_rewritten")),
-
-      // MinHash-index APPEND cost at the probed decade (r17): a 90% base,
-      // then ONE 10% batch appended (a) as a committed SEGMENT (the r17
-      // IndexLog path — O(batch) data written) vs (b) through the
-      // pre-r17 unpartitioned ParquetTable append, which rewrites the
-      // full corpus-sized snapshot per nightly batch. "count" is wall
-      // MILLISECONDS; the claim under test is that (a) stays flat-ish
-      // per decade while (b) grows with the INDEX, which is what makes
-      // nightly appends affordable at 100 TB.
-      "minhash_idx_append_segment_ms" ->
-        (() => minhashAppend(spark, docs, viaSegment = true)._1),
-      "minhash_idx_append_rewrite_ms" ->
-        (() => minhashAppend(spark, docs, viaSegment = false)._1),
-      // the same append, measured in BYTES WRITTEN by the append itself
-      // (segment dir vs the new full snapshot) — the noise-free form of
-      // the O(batch)-vs-O(index) claim: segment bytes track the BATCH
-      // across decades, snapshot bytes track the INDEX
-      "minhash_idx_append_segment_bytes" ->
-        (() => minhashAppend(spark, docs, viaSegment = true)._2),
-      "minhash_idx_append_rewrite_bytes" ->
-        (() => minhashAppend(spark, docs, viaSegment = false)._2)
+      "q59_scd4_bytes_rewritten" -> (() => scdWrite("scd4_bytes_rewritten"))
     )
 
     val unknown = args.drop(1).filterNot(n => probes.exists(_._1 == n))
@@ -849,40 +827,6 @@ object ScaleProbe {
       println(f"""{"probe":"$name","count":$n,"sec":$dt%.2f,"sf":"$sfDir"}""")
     }
     spark.stop()
-  }
-
-  /** Append a 10% batch onto a 90% MinHash index, either as an
-    * [[graft.operators.Dedup.appendToMinHashIndex]] SEGMENT or through
-    * the pre-r17 full-snapshot ParquetTable append (rebuilt here from the
-    * table API — the operator no longer exposes it). Returns (wall ms of
-    * the append alone, bytes the append wrote: the segment dir or the new
-    * snapshot version dir). */
-  private def minhashAppend(spark: SparkSession,
-      docs: org.apache.spark.sql.DataFrame,
-      viaSegment: Boolean): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val h = pmod(graft.functions.Hashes.portableHash32(
-      col("doc_id").cast("string")), lit(10000L))
-    val dir = java.nio.file.Files.createTempDirectory("probe_mh").toString
-    Dedup.writeMinHashIndex(docs.filter(h < 9000), dir,
-      bands = 4, rowsPerBand = 2)
-    val batch = docs.filter(h >= 9000)
-    val t0 = System.nanoTime()
-    val written =
-      if (viaSegment) {
-        Dedup.appendToMinHashIndex(batch, dir, txn = Some(("probe", 1L)))
-        new java.io.File(s"$dir/appends/probe-1")
-      } else {
-        val t = new graft.merge.ParquetTable(spark, s"$dir/index")
-        t.append(Dedup.minHashIndexTable(batch, "text", "doc_id",
-          bands = 4, rowsPerBand = 2))
-        new java.io.File(f"$dir/index/snap/v${t.latestVersion}%05d")
-      }
-    val ms = (System.nanoTime() - t0) / 1000000L
-    def du(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-    (ms, du(written))
   }
 
   /** Multi-occupancy band-bucket mass (Σ s over buckets with s ≥ 2) of a
@@ -986,9 +930,8 @@ object ScaleProbe {
     * distinct keys, like the stats-batch orders probe), merge an update
     * batch touching EXACTLY 4 partitions through the production
     * writeScd2/writeScd4 paths, and measure the rewrite set from the
-    * DATA DIRECTORY — a partition counts as rewritten iff its file-name
-    * set changed (dynamic overwrite writes fresh UUID part files), so
-    * the numbers come from disk, not from the code's own bookkeeping. */
+    * live files — a partition counts as rewritten iff its live file set
+    * changed (a commit never rewrites a file, it replaces it). */
   private def scdWriteProbes(spark: SparkSession,
                              sfDir: String): Map[String, Long] = {
     import org.apache.spark.sql.functions._
@@ -1028,17 +971,12 @@ object ScaleProbe {
     import org.apache.spark.sql.functions._
     import graft.merge.{ParquetTable, Scd}
 
-    def partFiles(dataDir: String): Map[String, Seq[(String, Long)]] = {
-      val d = new java.io.File(dataDir)
-      if (!d.exists()) Map.empty
-      else d.listFiles().filter(_.isDirectory).map { pd =>
-        pd.getName -> pd.listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.length())).toSeq.sortBy(_._1)
-      }.toMap
-    }
-    def stats(prefix: String, before: Map[String, Seq[(String, Long)]],
-              after: Map[String, Seq[(String, Long)]]): Map[String, Long] = {
+    // (partition values -> live (file, bytes)); live files are immutable
+    def partFiles(t: ParquetTable): Map[Map[String, String], Seq[(String, Long)]] =
+      t.liveFiles.groupBy(_.partitionValues).view
+        .mapValues(_.map(f => (f.path, f.size)).sortBy(_._1)).toMap
+    def stats(prefix: String, before: Map[Map[String, String], Seq[(String, Long)]],
+              after: Map[Map[String, String], Seq[(String, Long)]]): Map[String, Long] = {
       val rewritten = after.keys
         .filter(k => before.get(k) != after.get(k)).toSet
       Map(
@@ -1060,12 +998,12 @@ object ScaleProbe {
       "current_flag" -> "true")
     Scd.writeScd2(t2, c, Seq("c_custkey"), matchCond,
       Map("current_flag" -> "false"), insertMap)
-    val before2 = partFiles(s"$root/scd2/data")
+    val before2 = partFiles(t2)
     Scd.writeScd2(t2,
       c.filter(col("pk") < 4)
         .withColumn("c_acctbal", col("c_acctbal") + 100.0),
       Seq("c_custkey"), matchCond, Map("current_flag" -> "false"), insertMap)
-    val after2 = partFiles(s"$root/scd2/data")
+    val after2 = partFiles(t2)
 
     // ---- SCD4 (q59 shape, pk-partitioned current + append history) ----
     val cur = new ParquetTable(spark, s"$root/scd4_cur", Seq("pk"))
@@ -1074,14 +1012,14 @@ object ScaleProbe {
       .withColumn("deleted_flag", lit(false))
       .withColumn("updated_at", lit(1700000000L) + col("c_custkey"))
     Scd.writeScd4(cur, hist, seed4, Seq("c_custkey"))
-    val before4 = partFiles(s"$root/scd4_cur/data")
+    val before4 = partFiles(cur)
     Scd.writeScd4(cur, hist,
       seed4.filter(col("pk") < 4)
         .withColumn("c_acctbal", col("c_acctbal") + 100.0)
         .withColumn("row_active", col("c_custkey") % 5 =!= 0)
         .withColumn("updated_at", lit(1700100000L) + col("c_custkey")),
       Seq("c_custkey"))
-    val after4 = partFiles(s"$root/scd4_cur/data")
+    val after4 = partFiles(cur)
 
     stats("scd2", before2, after2) ++ stats("scd4", before4, after4)
   }

@@ -3915,12 +3915,11 @@ object SparkEntry {
         col("hamming").cast("long").as("hamming"))
   }
 
-  /** Persisted-MinHash-index COMPACTION gate (r17 — the q317 protocol on
-    * the artifact a nightly crawl compacts most often): build the base
-    * from 80% of the corpus, append two committed segments, fold them
-    * back into the ParquetTable base (id-dedup, atomic snapshot flip),
-    * REFUSE to answer unless the segment dirs and append log are really
-    * gone, then run the incremental near-dup query. The oracle is q187's
+  /** Persisted-MinHash-index COMPACTION gate (r17 — the artifact a
+    * nightly crawl compacts most often): build the base from 80% of the
+    * corpus, append two batches, compact the index table (one atomic
+    * commit), REFUSE to answer unless that commit replaced every appended
+    * file, then run the incremental near-dup query. The oracle is q187's
     * independent replay of the one-shot semantics over the full 90%
     * index — compaction changes layout, never results. */
   private def q321(s: SparkSession, dir: String): DataFrame = {
@@ -3934,10 +3933,12 @@ object SparkEntry {
       txn = Some(("q321", 1L)))
     Dedup.appendToMinHashIndex(docs.filter(h >= 8500 && h < 9000), idxDir,
       txn = Some(("q321", 2L)))
+    val index = new graft.merge.ParquetTable(s, s"$idxDir/index")
+    val appended = index.liveFiles.map(_.path).toSet
     Dedup.compactMinHashIndex(s, idxDir)
-    require(!new java.io.File(s"$idxDir/appends").exists() &&
-        !new java.io.File(s"$idxDir/append_log").exists(),
-      "compactMinHashIndex left segment dirs or the append log behind")
+    require(index.lastMetrics.contains("filesBefore") &&
+        index.liveFiles.forall(f => !appended(f.path)),
+      "compactMinHashIndex did not replace the appended files")
     Dedup.nearDupsAgainstIndex(s, idxDir, docs.filter(h >= 9000),
         threshold = 0.2)
       .select(col("corpus_id"), col("batch_id"),

@@ -1,56 +1,118 @@
 package graft.merge
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
-/** Copy-on-write Parquet table with a tiny JSON commit log — the engine's
-  * stand-in for the Delta features the reference leans on (mergeSchema,
-  * operationMetrics, txnAppId/txnVersion idempotency; reference
-  * M/commons/Task.scala:96,215,264-266 and
+/** Copy-on-write Parquet table with a JSON add/remove commit log — the
+  * engine's stand-in for the Delta features the reference leans on
+  * (mergeSchema, operationMetrics, txnAppId/txnVersion idempotency;
+  * reference M/commons/Task.scala:96,215,264-266 and
   * M/writter/config/WriteStreamConfig.scala:39-47).
   *
   * Layout:
   * {{{
-  *   <root>/data/...                partitioned parquet (stable directory)
-  *   <root>/snap/v00042/...         unpartitioned snapshots (one dir per commit)
-  *   <root>/_graft_log/00042.json   commit entries (metrics, txn, partitions)
+  *   <root>/data/v00042/...         the files commit 42 adds (hive `k=v/` dirs on a partitioned table)
+  *   <root>/_graft_log/00042.json   commit 42: files added (with partition values and size),
+  *                                  files removed, table schema, metrics, txn
   * }}}
   *
-  * Scale design: partitioned tables are updated with DYNAMIC PARTITION
-  * OVERWRITE, so a merge rewrites only the partitions the update batch
+  * One protocol for both layouts, Delta's: a commit never touches a file an
+  * earlier version reads. It writes new files under its own version
+  * directory and publishes them, with the list of live files it replaces,
+  * by one atomic rename of its log record. Readers resolve the live file
+  * set from the log ([[read]] lists no directory and starts no Spark job).
+  * A partitioned table replaces only the files of the partitions a batch
   * touches (the manual DPP the reference splices into its merge conditions,
   * ref M/utility/Utility.scala:339-348) — on a 100 TB table a CDC batch that
-  * touches 3 of 10k partitions rewrites 0.03% of the data. Unpartitioned
-  * tables fall back to full-snapshot COW with an atomic log append as the
-  * commit point. Readers resolve the latest snapshot from the log, so a
-  * failed half-written snapshot directory is never visible.
+  * touches 3 of 10k partitions rewrites 0.03% of the data; an unpartitioned
+  * table is the case where a rewrite replaces every live file. Appends only
+  * add files on either layout.
+  *
+  * CRASH SEMANTICS: every operation is atomic on both layouts. A crash
+  * before the log rename leaves files no commit lists — invisible to every
+  * reader, cleared when the same version is retried, and deleted by
+  * [[vacuum]]. A DataFrame from [[read]] keeps reading the version it was
+  * taken at until [[vacuum]] drops that version's files.
   */
 object ParquetTable {
   // One JVM-wide monitor per table root: multiple pipelines (IngestionJob
   // fan-out, shared Journal tables) commit from different driver threads;
   // without this, two writers read the same latestVersion and race the
-  // commit file / _temporary staging dirs. Cross-process writers would need
-  // a real lock service — out of scope for a single-driver engine.
+  // commit file / version directory. Cross-process writers would need a
+  // real lock service — out of scope for a single-driver engine.
   private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[merge] def monitorFor(root: String): Object =
     monitors.computeIfAbsent(root, _ => new Object)
+
+  /** One data file: its path under the table root, its partition values in
+    * Spark's string form (a key is absent when its value is NULL) and its
+    * size in bytes. */
+  final case class DataFile(path: String, partitionValues: Map[String, String], size: Long) {
+    def values(keys: Seq[String]): Seq[String] = keys.map(partitionValues.get(_).orNull)
+  }
+
+  private final case class Txn(appId: String, version: Long)
+
+  /** One log record. `schema` is the table schema after this commit, as
+    * Spark's JSON. */
+  private final case class Commit(version: Long, action: String,
+                                  metrics: Map[String, String], txn: Option[Txn],
+                                  schema: String, add: Seq[DataFile],
+                                  remove: Seq[String])
+
+  private implicit val formats: Formats = DefaultFormats
+
+  /** Spark's view of one table version: the logged files grouped by
+    * partition, pruned by the scan's partition filters. */
+  private final class LogFileIndex(root: Path, files: Seq[DataFile],
+                                   val partitionSchema: StructType,
+                                   timeZone: String) extends FileIndex {
+    private val partitions: Seq[(InternalRow, Seq[FileStatusWithMetadata])] =
+      files.groupBy(_.values(partitionSchema.fieldNames.toSeq)).toSeq.map { case (vals, fs) =>
+        InternalRow.fromSeq(partitionSchema.zip(vals).map { case (k, v) =>
+          Cast(Literal(v), k.dataType, Some(timeZone)).eval() }) ->
+          fs.sortBy(_.path).map(f => FileStatusWithMetadata(new FileStatus(
+            f.size, false, 0, 0, 0, new HPath(root.resolve(f.path).toUri))))
+      }
+
+    override def rootPaths: Seq[HPath] = Seq(new HPath(root.toUri))
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val keep = partitionFilters.reduceOption(And).map(f =>
+        Predicate.createInterpreted(f.transform { case a: AttributeReference =>
+          val i = partitionSchema.fieldIndex(a.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        }))
+      partitions.collect { case (values, fs) if keep.forall(_.eval(values)) =>
+        PartitionDirectory(values, fs) }
+    }
+    override def inputFiles: Array[String] =
+      partitions.flatMap(_._2).map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.size).sum
+  }
 }
 
 final class ParquetTable(val spark: SparkSession, val root: String,
                          val partitionKeys: Seq[String] = Nil) {
-  private val dataDir = s"$root/data"
-  private val snapDir = s"$root/snap"
+  import ParquetTable._
+
   private val logDir = s"$root/_graft_log"
   private val monitor = ParquetTable.monitorFor(root)
-  /** Commit files are immutable once written — cache parsed entries so a
-    * long-running stream's per-batch seenTxn doesn't re-read the whole log. */
-  private val entryCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, Map[String, String]]()
 
   def exists: Boolean = Files.exists(Paths.get(logDir)) && latestVersion >= 0
 
@@ -73,192 +135,141 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     finally stream.close()
   }
 
-  private def commitEntry(version: Long): Option[Map[String, String]] = {
-    val cached = entryCache.get(version)
-    if (cached != null) return Some(cached)
+  private def commitEntry(version: Long): Option[Commit] = {
     val f = Paths.get(logDir, f"$version%05d.json")
     if (!Files.exists(f)) None
-    else {
-      val e = parseFlatJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-      entryCache.put(version, e)
-      Some(e)
-    }
+    else Some(Serialization.read[Commit](new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
   }
 
-  /** appId -> highest committed txnVersion. Folded forward incrementally
-    * (only log versions past `txnScannedThrough` are ever parsed), and
-    * updated directly on each commit — so a long-running stream's per-batch
-    * [[seenTxn]] probe is O(1), not O(commits). All access is under
-    * `monitor`. */
+  // The log folded forward through version `folded`: the live files, the
+  // schema, and appId -> highest committed txnVersion. Only versions past
+  // `folded` are ever parsed, and a commit this handle writes is folded in
+  // from memory — so a long-running stream's per-batch [[seenTxn]] probe is
+  // O(1), not O(commits). All access is synchronized on this handle.
+  private var folded = -1L
+  private var live = Map.empty[String, DataFile]
+  private var liveSchema = new StructType()
   private val txnHighWater = scala.collection.mutable.HashMap[String, Long]()
-  private var txnScannedThrough: Long = -1L
 
-  private def foldTxnThrough(latest: Long): Unit = {
-    var v = txnScannedThrough + 1
-    while (v <= latest) {
-      commitEntry(v).foreach { e =>
-        for (a <- e.get("txnAppId"); tv <- e.get("txnVersion"))
-          txnHighWater(a) = math.max(txnHighWater.getOrElse(a, Long.MinValue), tv.toLong)
-      }
-      v += 1
+  private def foldThrough(latest: Long): Unit = synchronized {
+    while (folded < latest) {
+      folded += 1
+      commitEntry(folded).foreach(fold)
     }
-    txnScannedThrough = math.max(txnScannedThrough, latest)
   }
+
+  private def fold(c: Commit): Unit = {
+    live = live -- c.remove ++ c.add.map(f => f.path -> f)
+    liveSchema = DataType.fromJson(c.schema).asInstanceOf[StructType]
+    c.txn.foreach(t => txnHighWater(t.appId) =
+      math.max(txnHighWater.getOrElse(t.appId, Long.MinValue), t.version))
+  }
+
+  /** The latest version, its schema and its live files. */
+  private def snapshot: (Long, StructType, Seq[DataFile]) = synchronized {
+    val v = latestVersion
+    foldThrough(v)
+    (v, liveSchema, live.values.toSeq)
+  }
+
+  /** The files the latest version reads. */
+  private[graft] def liveFiles: Seq[DataFile] = snapshot._3
 
   /** Idempotency check for exactly-once foreachBatch commits: has this app
     * already committed `version` (or anything newer)? Txn versions are
     * monotonically increasing per appId — the Delta idempotent-writer
     * contract the reference relies on — so `version <= high-water` means
     * "already applied, skip the replay". */
-  def seenTxn(appId: String, version: Long): Boolean = monitor.synchronized {
-    foldTxnThrough(latestVersion)
+  def seenTxn(appId: String, version: Long): Boolean = synchronized {
+    foldThrough(latestVersion)
     txnHighWater.get(appId).exists(version <= _)
   }
 
   def read: DataFrame = {
-    require(exists, s"table $root does not exist")
-    if (partitionKeys.nonEmpty) spark.read.parquet(dataDir)
-    else spark.read.parquet(f"$snapDir/v${latestVersion}%05d")
+    val (v, s, files) = snapshot
+    require(v >= 0, s"table $root does not exist")
+    scan(s, files)
   }
 
-  /** Distinct partition-key tuples present in a batch (the manual-DPP driver
-    * list, ref M/utility/Utility.scala:339-348). Bounded: one row per touched
-    * partition, not per batch row. */
-  private def touchedPartitions(batch: DataFrame): Array[org.apache.spark.sql.Row] =
-    batch.select(partitionKeys.map(col): _*).distinct().collect()
+  /** `files` as a DataFrame of `schema` (partition columns last, as Spark
+    * reads a hive layout), planned without listing or inference. */
+  private def scan(schema: StructType, files: Seq[DataFile]): DataFrame = {
+    val partitionSchema = StructType(partitionKeys.map(schema(_)))
+    val index = new LogFileIndex(Paths.get(root).toAbsolutePath, files,
+      partitionSchema, spark.conf.get("spark.sql.session.timeZone"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      StructType(schema.filterNot(f => partitionKeys.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
-  private def prunerFor(touched: Array[org.apache.spark.sql.Row]): org.apache.spark.sql.Column =
-    touched.foldLeft(lit(false)) { (acc, row) =>
-      val one = partitionKeys.zipWithIndex.map { case (k, i) =>
-        if (row.isNullAt(i)) col(k).isNull else col(k) === lit(row.get(i))
-      }.reduce(_ && _)
-      acc || one
+  /** The live files a write keyed by `batch` replaces: those of the
+    * partitions the batch touches (one row per touched partition is
+    * collected, not one per batch row) — every file on an unpartitioned
+    * table. */
+  private def touched(files: Seq[DataFile], batch: DataFrame): Seq[DataFile] =
+    if (partitionKeys.isEmpty) files
+    else {
+      // Spark names a partition by its value cast to string: compare in that form
+      val hit = batch.select(partitionKeys.map(col(_).cast(StringType)): _*)
+        .distinct().collect().map(_.toSeq).toSet
+      files.filter(f => hit(f.values(partitionKeys)))
     }
 
-  /** The table restricted to the partitions `batch` touches — the same manual
-    * DPP `merge` applies, exposed so callers that stage multi-step merge
-    * sources (SCD2's rows-to-insert probe, SCD4's history snapshot join) can
-    * bound their target READS as well as the rewrite. Falls back to a full
-    * read for unpartitioned tables. */
-  def readPruned(batch: DataFrame): DataFrame =
-    if (partitionKeys.isEmpty) read
-    else read.filter(prunerFor(touchedPartitions(batch)))
+  /** The table restricted to the partitions `batch` touches — the same
+    * manual DPP `merge` applies, exposed so callers that stage multi-step
+    * merge sources (SCD2's rows-to-insert probe, SCD4's history snapshot
+    * join) can bound their target READS as well as the rewrite. The whole
+    * table when it is unpartitioned. */
+  def readPruned(batch: DataFrame): DataFrame = {
+    val (v, s, files) = snapshot
+    require(v >= 0, s"table $root does not exist")
+    scan(s, touched(files, batch))
+  }
 
   /** Create with initial contents (ref create-if-absent probe `checkTable`,
     * M/utility/Utility.scala:361-371). The creating batch's txn is recorded
     * so a checkpoint replay of batch 0 is skipped like any other batch. */
   def create(df: DataFrame, metrics: Map[String, String] = Map.empty,
              txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
-    if (partitionKeys.nonEmpty)
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(dataDir)
-    else
-      df.write.mode(SaveMode.Overwrite).parquet(f"$snapDir/v${0}%05d")
-    writeCommit(0L, "CREATE", metrics, txn)
+    commit(0L, "CREATE", Some(df), new StructType(), Nil, metrics, txn)
   }
 
-  /** Append rows (bookkeeping tables, SCD4 history). Schema union on write
-    * replaces Delta's `mergeSchema`. */
+  /** Append rows (bookkeeping tables, SCD4 history): adds files, rewrites
+    * none. The schema union replaces Delta's `mergeSchema`. */
   def append(df: DataFrame, metrics: Map[String, String] = Map.empty,
              txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
-    if (!exists) { create(df, metrics, txn); return } // keep the batch's idempotency record
-    if (partitionKeys.nonEmpty) {
-      val aligned = alignSchema(df)
-      aligned.write.mode(SaveMode.Append).partitionBy(partitionKeys: _*).parquet(dataDir)
-      writeCommit(latestVersion + 1, "APPEND", metrics, txn)
-    } else {
-      val next = latestVersion + 1
-      val cur = read
-      unionMergeSchema(cur, df).write.mode(SaveMode.Overwrite).parquet(f"$snapDir/v$next%05d")
-      writeCommit(next, "APPEND", metrics, txn)
-    }
+    val (v, s, _) = snapshot
+    if (v < 0) create(df, metrics, txn) // keep the batch's idempotency record
+    else commit(v + 1, "APPEND", Some(df), s, Nil, metrics, txn)
   }
 
-  /** MERGE the update batch in.
+  /** MERGE the update batch in, replacing the files of the partitions it
+    * touches (every file on an unpartitioned table).
     *
     * CONTRACT (standard for hive-partitioned tables): partition-key values
-    * are immutable under updates. The manual DPP below scans only the
-    * partitions named by the update batch's CURRENT values — an update that
-    * moved a row's partition key would leave the stale row in its old
-    * partition unscanned (choose stable columns as partition keys).
-    *
-    * CRASH SEMANTICS differ by layout. Unpartitioned (snapshot) tables are
-    * ATOMIC: data lands in a fresh `snap/vNNNNN` dir and only the commit-log
-    * record makes it visible, so a crash in between leaves the previous
-    * version readable (StreamingSpec "crash between data write and commit
-    * log"). Partitioned tables rewrite touched partitions IN PLACE (dynamic
-    * overwrite), so a crash in the same window leaves the new data visible
-    * with the commit log behind — the guarantee is the weaker idempotent-
-    * replay one: the checkpoint re-runs the batch, the merge re-applies
-    * over the half-committed state to the same result, and the txn record
-    * then closes the window (StreamingSpec "partitioned table: crash after
-    * data write"). Callers needing point-in-time atomicity should use the
-    * snapshot layout. */
+    * are immutable under updates. The manual DPP scans only the partitions
+    * named by the update batch's CURRENT values — an update that moved a
+    * row's partition key would leave the stale row in its old partition
+    * unscanned (choose stable columns as partition keys). */
   def merge(updates: DataFrame, condition: String,
             matched: Seq[MergeInto.WhenMatched],
             notMatched: Seq[MergeInto.WhenNotMatched],
             txn: Option[(String, Long)] = None,
             metrics: Map[String, String] = Map.empty): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
-    require(exists, s"merge target $root does not exist")
-
-    if (partitionKeys.nonEmpty) {
-      // Manual DPP (ref M/utility/Utility.scala:339-348): the distinct
-      // partition-key values of the update batch bound BOTH the target read
-      // and the rewrite — only touched partitions are scanned and replaced.
-      val touched = touchedPartitions(updates)
-      val targetTouched = read.filter(prunerFor(touched))
-      val merged = MergeInto(targetTouched, updates, condition, matched, notMatched)
-      rewriteTouchedPartitions(touched, merged, "MERGE", metrics, txn)
-    } else {
-      val merged = MergeInto(read, updates, condition, matched, notMatched)
-      val next = latestVersion + 1
-      merged.write.mode(SaveMode.Overwrite).parquet(f"$snapDir/v$next%05d")
-      writeCommit(next, "MERGE", metrics, txn)
-    }
-  }
-
-  /** The partitioned copy-on-write rewrite shared by [[merge]] and
-    * [[delete]]: dynamic-overwrite only the touched partitions with
-    * `newContent`, then explicitly drop touched partitions whose rows all
-    * vanished (dynamic overwrite cannot see them — they are absent from
-    * the write). */
-  private def rewriteTouchedPartitions(touched: Array[org.apache.spark.sql.Row],
-                                       newContent: DataFrame, action: String,
-                                       metrics: Map[String, String],
-                                       txn: Option[(String, Long)]): Unit = {
-    val content = newContent
-      .localCheckpoint() // materialize BEFORE overwriting the dirs we read from
-    // per-WRITER dynamic overwrite: mutating the session conf would leak
-    // into other tables' concurrent writers (their full overwrites would
-    // silently keep partitions they meant to drop)
-    content.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionKeys: _*).parquet(dataDir)
-    // Dynamic overwrite replaces exactly the partitions present in the
-    // content; a touched partition whose rows were ALL deleted is absent
-    // from the write and must be dropped explicitly.
-    val remaining = content.select(partitionKeys.map(col): _*).distinct().collect()
-      .map(_.toSeq).toSet
-    touched.map(_.toSeq).filterNot(remaining.contains).foreach { vals =>
-      // Spark writes Hive-ESCAPED partition dir names (':' -> '%3A' etc.);
-      // raw toString would miss those dirs and resurrect deleted rows
-      val rel = partitionKeys.zip(vals).map { case (k, v) =>
-        if (v == null) s"$k=__HIVE_DEFAULT_PARTITION__"
-        else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(k, v.toString)
-      }.mkString("/")
-      deleteRecursively(Paths.get(dataDir, rel))
-    }
-    writeCommit(latestVersion + 1, action, metrics, txn)
+    val (v, s, files) = snapshot
+    require(v >= 0, s"merge target $root does not exist")
+    val replaced = touched(files, updates)
+    val merged = MergeInto(scan(s, replaced), updates, condition, matched, notMatched)
+    commit(v + 1, "MERGE", Some(merged), s, replaced, metrics, txn)
   }
 
   /** `DELETE WHERE condition` — the GDPR-erasure primitive on the COW
     * table. SQL DELETE semantics: rows where the predicate is TRUE go;
-    * FALSE and NULL rows stay. Partitioned tables rewrite ONLY the
-    * partitions that contain matching rows (the same manual-DPP bound as
-    * [[merge]] — an erasure request touching one user never rewrites the
-    * whole table); snapshot tables write the kept rows as a new version.
+    * FALSE and NULL rows stay. Only the partitions that contain matching
+    * rows are rewritten (the same manual-DPP bound as [[merge]] — an
+    * erasure request touching one user never rewrites the whole table).
     * Records a DELETE commit either way, so [[lastMetrics]] carries the
     * caller's audit numbers and a no-match delete is still a visible,
     * idempotency-checkable operation. */
@@ -266,59 +277,53 @@ final class ParquetTable(val spark: SparkSession, val root: String,
              metrics: Map[String, String] = Map.empty,
              txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
-    require(exists, s"delete target $root does not exist")
+    val (v, s, files) = snapshot
+    require(v >= 0, s"delete target $root does not exist")
     val hit = coalesce(expr(condition), lit(false))
-    if (partitionKeys.nonEmpty) {
-      val touched = touchedPartitions(read.filter(hit))
-      if (touched.isEmpty) writeCommit(latestVersion + 1, "DELETE", metrics, txn)
-      else {
-        val kept = read.filter(prunerFor(touched)).filter(!hit)
-        rewriteTouchedPartitions(touched, kept, "DELETE", metrics, txn)
-      }
-    } else {
-      val next = latestVersion + 1
-      read.filter(!hit).write.mode(SaveMode.Overwrite)
-        .parquet(f"$snapDir/v$next%05d")
-      writeCommit(next, "DELETE", metrics, txn)
+    val replaced = touched(files, scan(s, files).filter(hit))
+    commit(v + 1, "DELETE", Option.when(replaced.nonEmpty)(scan(s, replaced).filter(!hit)),
+      s, replaced, metrics, txn)
+  }
+
+  /** Retention cleanup — Delta `VACUUM`: delete every data file that none
+    * of the `keepLast` most recent versions reads (the current version is
+    * always kept), including the files of crashed, never-committed writes.
+    * The commit LOG stays intact — history remains auditable, only the data
+    * bytes of expired versions go, which is the actual storage-cost and
+    * GDPR point of vacuuming (a deleted row's bytes otherwise live on in
+    * old files indefinitely). */
+  def vacuum(keepLast: Int = 1): Unit = monitor.synchronized {
+    require(keepLast >= 1, "keepLast >= 1")
+    val (v, _, files) = snapshot
+    val data = Paths.get(root, "data")
+    if (v < 0 || !Files.exists(data)) return
+    // a file live at version u - 1 is live at u or removed by commit u
+    val kept = files.map(_.path).toSet ++
+      (v - keepLast + 2 to v).flatMap(u => commitEntry(u).toSeq.flatMap(_.remove))
+    val base = Paths.get(root)
+    def isKept(p: Path): Boolean = {
+      val n = p.getFileName.toString
+      // a checksum file `.<name>.crc` follows the file it covers
+      val covered = if (n.startsWith(".") && n.endsWith(".crc"))
+        p.resolveSibling(n.drop(1).dropRight(4)) else p
+      kept(base.relativize(covered).toString)
+    }
+    val walk = Files.walk(data)
+    val paths = try walk.iterator().asScala.toList finally walk.close()
+    paths.filter(p => Files.isRegularFile(p) && !isKept(p)).foreach(Files.delete)
+    paths.reverse.filter(p => Files.isDirectory(p) && p != data).foreach { d =>
+      val l = Files.list(d)
+      val empty = try !l.iterator().hasNext finally l.close()
+      if (empty) Files.delete(d)
     }
   }
 
-  /** Retention cleanup — Delta `VACUUM`'s equivalent for the SNAPSHOT
-    * layout: physically drop all snapshot versions older than the
-    * `keepLast` most recent (the current version is always kept). The
-    * commit LOG stays intact — history remains auditable, only the data
-    * bytes of expired versions go, which is the actual storage-cost and
-    * GDPR point of vacuuming (a deleted row's bytes otherwise live on in
-    * old snapshots indefinitely). Partitioned tables rewrite in place
-    * (one live copy), so vacuum is a no-op there. */
-  def vacuum(keepLast: Int = 1): Unit = monitor.synchronized {
-    require(keepLast >= 1, "keepLast >= 1")
-    if (partitionKeys.nonEmpty || !Files.exists(Paths.get(snapDir))) return
-    val cutoff = latestVersion - keepLast + 1
-    val listing = Files.list(Paths.get(snapDir))
-    try listing.iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong < cutoff
-      }
-      .toList.foreach(deleteRecursively)
-    finally listing.close()
-  }
-
-  /** Replace full contents (new snapshot / full overwrite). For PARTITIONED
-    * tables the incoming plan may still lazily read this table's dataDir
-    * (e.g. scd2Apply over table.read) — materialize it first, or Spark
-    * refuses to overwrite a path being read. */
+  /** Replace full contents (new snapshot / full overwrite). */
   def overwrite(df: DataFrame, metrics: Map[String, String] = Map.empty,
                 txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
-    val next = math.max(latestVersion + 1, 0L)
-    if (partitionKeys.nonEmpty)
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(dataDir)
-    else
-      df.write.mode(SaveMode.Overwrite).parquet(f"$snapDir/v$next%05d")
-    writeCommit(next, "OVERWRITE", metrics, txn)
+    val (v, _, files) = snapshot
+    commit(v + 1, "OVERWRITE", Some(df), new StructType(), files, metrics, txn)
   }
 
   /** Bin-pack compaction — Delta `OPTIMIZE`'s equivalent on the COW table:
@@ -329,66 +334,24 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     * scannable: a year of micro-batch appends leaves thousands of KB-sized
     * files whose per-file open/footer cost dominates the scan.
     *
-    * Snapshot layout: the repartitioned contents land in a fresh
-    * `snap/vNNNNN` (atomic visibility like every snapshot write).
-    * Partitioned layout: rows are repartitioned BY THE PARTITION KEYS so
-    * each partition value collapses to one task -> one file per partition
-    * (the common small-file case: many appends x few partitions), then
-    * dynamically overwritten in place. Skipped (no new version) when the
+    * Rows are repartitioned BY THE PARTITION KEYS, so each partition value
+    * collapses to one task -> one file per partition (the common small-file
+    * case: many appends x few partitions). Skipped (no new version) when the
     * current layout is already within the target file count. */
   def compact(targetBytes: Long = 128L << 20,
               txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
-    require(exists, s"compact target $root does not exist")
+    val (v, s, files) = snapshot
+    require(v >= 0, s"compact target $root does not exist")
     require(targetBytes > 0, "targetBytes > 0")
-    val dir = if (partitionKeys.nonEmpty) dataDir
-              else f"$snapDir/v${latestVersion}%05d"
-    val files = Files.walk(Paths.get(dir)).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-      .toSeq
-    val bytes = files.map(Files.size).sum
+    val bytes = files.map(_.size).sum
     val wantFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
     if (files.size <= wantFiles) return // already packed; no empty commit
     val metrics = Map(
       "filesBefore" -> files.size.toString, "bytesBefore" -> bytes.toString,
       "targetFiles" -> wantFiles.toString)
-    val next = latestVersion + 1
-    if (partitionKeys.nonEmpty) {
-      // materialize before overwriting the directory being read (same
-      // constraint as merge's COW rewrite)
-      val packed = read
-        .repartition(wantFiles.toInt, partitionKeys.map(col): _*)
-        .localCheckpoint()
-      packed.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionKeys: _*).parquet(dataDir)
-    } else {
-      read.repartition(wantFiles.toInt)
-        .write.mode(SaveMode.Overwrite).parquet(f"$snapDir/v$next%05d")
-    }
-    writeCommit(next, "COMPACT", metrics, txn)
-  }
-
-  /** Schema union (Delta `mergeSchema` equivalent): pad each side with the
-    * other's missing columns as NULLs. */
-  private def unionMergeSchema(a: DataFrame, b: DataFrame): DataFrame = {
-    val aCols = a.columns.toSeq
-    val bCols = b.columns.toSeq
-    val all = aCols ++ bCols.filterNot(aCols.contains)
-    def pad(df: DataFrame, have: Seq[String]) = {
-      val bTypes = (a.schema ++ b.schema).map(f => f.name -> f.dataType).toMap
-      df.select(all.map(c =>
-        if (have.contains(c)) col(c) else lit(null).cast(bTypes(c)).as(c)): _*)
-    }
-    pad(a, aCols).unionByName(pad(b, bCols))
-  }
-
-  private def alignSchema(df: DataFrame): DataFrame = {
-    val cur = read.schema
-    val have = df.columns.toSet
-    df.select(cur.map(f =>
-      if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)): _*)
+    val packed = scan(s, files).repartition(wantFiles.toInt, partitionKeys.map(col): _*)
+    commit(v + 1, "COMPACT", Some(packed), s, files, metrics, txn)
   }
 
   /** TEST SEAM — crash injection for recovery tests: runs after a commit's
@@ -397,48 +360,62 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     * simulates that crash; production value is a no-op. */
   private[graft] var onPreCommit: () => Unit = () => ()
 
-  private def writeCommit(version: Long, action: String,
-                          metrics: Map[String, String],
-                          txn: Option[(String, Long)]): Unit = {
+  /** Write `df` (if any) as the files of `version` and commit them with the
+    * removal of `replaced`. The schema rule serves every operation (Delta's
+    * `mergeSchema`): the columns of `base` keep their types, columns new in
+    * `df` are appended, and `df` is projected onto the result (NULL where
+    * it lacks a column). CREATE and OVERWRITE pass an empty `base`. */
+  private def commit(version: Long, action: String, df: Option[DataFrame],
+                     base: StructType, replaced: Seq[DataFile],
+                     metrics: Map[String, String],
+                     txn: Option[(String, Long)]): Unit = {
+    val added = df.map(_.schema).getOrElse(new StructType())
+      .filterNot(f => base.fieldNames.contains(f.name))
+    val schema = StructType((base ++ added).map(_.copy(nullable = true)))
+    val dir = f"data/v$version%05d"
+    val out = Paths.get(root, dir)
+    val files = df.toSeq.flatMap { d =>
+      val have = d.columns.toSet
+      deleteRecursively(out) // what a crashed attempt at this version left
+      d.select(schema.map(f => (if (have(f.name)) col(s"`${f.name.replace("`", "``")}`")
+          else lit(null)).cast(f.dataType).as(f.name)): _*)
+        .write.mode(SaveMode.ErrorIfExists).partitionBy(partitionKeys: _*)
+        .parquet(out.toString)
+      val walk = Files.walk(out)
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+        .map { p =>
+          val rel = out.relativize(p)
+          val values = rel.iterator().asScala.toSeq.dropRight(1)
+            .map(_.toString.split("=", 2))
+            .collect { case Array(k, v) if v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
+              ExternalCatalogUtils.unescapePathName(k) -> ExternalCatalogUtils.unescapePathName(v) }
+          DataFile(s"$dir/$rel", values.toMap, Files.size(p))
+        }.toList
+      finally walk.close()
+    }
+    val c = Commit(version, action, metrics, txn.map { case (a, v) => Txn(a, v) },
+      schema.json, files, replaced.map(_.path))
     onPreCommit()
     Files.createDirectories(Paths.get(logDir))
-    val fields = Map("version" -> version.toString, "action" -> action) ++
-      metrics.map { case (k, v) => s"metric:$k" -> v } ++
-      txn.map { case (a, v) => Map("txnAppId" -> a, "txnVersion" -> v.toString) }
-        .getOrElse(Map.empty)
-    val json = fields.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-      .mkString("{", ",", "}")
     val tmp = Paths.get(logDir, f".$version%05d.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, Serialization.write(c).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(logDir, f"$version%05d.json"),
       StandardCopyOption.ATOMIC_MOVE)
-    // keep the O(1) seenTxn map current without re-reading the file we just
-    // wrote; earlier unscanned commits (if any) stay pending for foldTxnThrough
-    txn.foreach { case (a, v) =>
-      txnHighWater(a) = math.max(txnHighWater.getOrElse(a, Long.MinValue), v)
+    synchronized { // fold the record just written without re-reading it
+      if (folded == version - 1) { fold(c); folded = version }
     }
-    if (txnScannedThrough == version - 1) txnScannedThrough = version
   }
 
   /** Last commit's metrics — the `operationMetrics` equivalent the reference
     * reads via `describe history` (ref M/commons/Task.scala:264-266). */
   def lastMetrics: Map[String, String] =
-    commitEntry(latestVersion).getOrElse(Map.empty)
-      .collect { case (k, v) if k.startsWith("metric:") => k.stripPrefix("metric:") -> v }
+    commitEntry(latestVersion).map(_.metrics).getOrElse(Map.empty)
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private def deleteRecursively(p: Path): Unit = {
     if (!Files.exists(p)) return
-    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    val walk = Files.walk(p)
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    finally walk.close()
   }
-
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-
-  private def parseFlatJson(s: String): Map[String, String] = {
-    // flat {"k":"v",...} parser (we only ever write flat string maps)
-    val re = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    re.findAllMatchIn(s).map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
 }

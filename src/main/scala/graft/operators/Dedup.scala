@@ -248,9 +248,9 @@ object Dedup {
     * shingled, hashed, and signed ONCE into a
     * [[graft.merge.ParquetTable]] at `path/index`, with the banding
     * parameters pinned in a sidecar file. The ParquetTable commit log makes
-    * every later append atomic (data files without a log row are invisible
-    * to readers) and idempotent under foreachBatch txn replay — the same
-    * guarantees the SCD sinks ride.
+    * every later append and compaction atomic (files no commit lists are
+    * invisible to readers) and idempotent under foreachBatch txn replay —
+    * the same guarantees the SCD sinks ride.
     *
     * Pinning (bands, rowsPerBand, shingleK) IN the artifact is the
     * operational point: a reader or appender joining with different
@@ -270,15 +270,11 @@ object Dedup {
     // unrelated data; same scoped-delete contract as writeIvfIndex)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
-    // a full rebuild supersedes any append segments: leaving the log would
-    // make readers union stale segments on top of the rewritten base
-    Seq(s"$path/index", indexParamsPath(path), s"$path/append_log",
-        s"$path/append_log.tmp", s"$path/appends").foreach { p =>
+    Seq(s"$path/index", indexParamsPath(path)).foreach { p =>
       fs.delete(new org.apache.hadoop.fs.Path(p), true)
     }
-    new graft.merge.ParquetTable(spark, s"$path/index")
-      .create(minHashIndexTable(df, textCol, idCol, bands, rowsPerBand,
-        shingleK))
+    minHashIndex(spark, path).create(minHashIndexTable(df, textCol, idCol,
+      bands, rowsPerBand, shingleK))
     val out = fs.create(new org.apache.hadoop.fs.Path(indexParamsPath(path)),
       true)
     try out.write(
@@ -299,80 +295,46 @@ object Dedup {
     MinHashIndexParams(kv("bands"), kv("rowsPerBand"), kv("shingleK"))
   }
 
-  /** Sign `batch` with the index's pinned parameters and append its rows as
-    * a SEGMENT under the [[IndexLog]] two-step commit — one signature pass
-    * over the batch and one write of BATCH-sized data, never a rewrite of
-    * the corpus-sized base (the pre-r17 ParquetTable snapshot append paid a
-    * full-index rewrite per nightly batch — O(corpus) I/O per append, the
-    * exact cost this index exists to avoid at 100 TB). Crash-safe and
-    * replay-safe exactly like [[Similarity.appendToIvfIndex]]: data files
-    * without a log row are invisible, a replayed `txn` (appId, batchId)
-    * already in the log is a no-op. The usual flow: [[nearDupsAgainstIndex]]
-    * first (dedup the batch against everything accepted so far), drop the
-    * dups, then append the survivors; [[compactMinHashIndex]] folds the
-    * accumulated segments back into the base nightly. */
+  private def minHashIndex(spark: org.apache.spark.sql.SparkSession,
+                           path: String) =
+    new graft.merge.ParquetTable(spark, s"$path/index")
+
+  /** Sign `batch` with the index's pinned parameters and append its rows
+    * to the index table — one signature pass over the batch and one write
+    * of BATCH-sized data (a ParquetTable append only adds files), never a
+    * rewrite of the corpus-sized index. Atomic and replay-safe like every
+    * ParquetTable commit: a crashed append is invisible, a replayed `txn`
+    * (appId, batchId) is a no-op. The usual flow:
+    * [[nearDupsAgainstIndex]] first (dedup the batch against everything
+    * accepted so far), drop the dups, then append the survivors;
+    * [[compactMinHashIndex]] packs the accumulated small files nightly. */
   def appendToMinHashIndex(batch: DataFrame, path: String,
                            textCol: String = "text",
                            idCol: String = "doc_id",
                            txn: Option[(String, Long)] = None): Unit = {
     val spark = batch.sparkSession
-    val (appId, batchId) = txn.getOrElse(("graft", -1L))
-    if (batchId >= 0 && IndexLog.committed(spark, path)
-        .exists(s => s._1 == appId && s._2 == batchId))
-      return // replayed batch: already committed, exactly-once no-op
     val p = readMinHashIndexParams(spark, path)
-    val segment =
-      if (batchId >= 0) s"$appId-$batchId"
-      else s"$appId-u${java.util.UUID.randomUUID().toString.take(8)}"
-    minHashIndexTable(batch, textCol, idCol, p.bands, p.rowsPerBand,
-        p.shingleK)
-      .write.mode("overwrite").parquet(IndexLog.segmentDir(path, segment))
-    // data files are fully written; the single-file log append is the commit
-    IndexLog.commit(spark, path, appId, batchId, segment)
+    minHashIndex(spark, path).append(minHashIndexTable(batch, textCol, idCol,
+      p.bands, p.rowsPerBand, p.shingleK), txn = txn)
   }
 
-  /** The index's visible signature rows: the ParquetTable base plus every
-    * COMMITTED append segment (crashed appends have no log row and are
-    * never read) — the union every reader consumes. */
+  /** The index's visible signature rows (its latest committed version). */
   def minHashIndexRows(spark: org.apache.spark.sql.SparkSession,
-                       path: String): DataFrame = {
-    val base = new graft.merge.ParquetTable(spark, s"$path/index").read
-    IndexLog.committed(spark, path)
-      .map(s => spark.read.parquet(IndexLog.segmentDir(path, s._3)))
-      .foldLeft(base)(_ unionByName _)
-  }
+                       path: String): DataFrame =
+    minHashIndex(spark, path).read
 
-  /** Fold committed append segments back into the ParquetTable base — the
-    * dedup index's OPTIMIZE, the twin of [[Similarity.compactIvfIndex]]
-    * (q317's protocol) for the artifact a nightly crawl compacts far more
-    * often than its ANN index: per-append segments otherwise accumulate one
-    * directory (and its file-open tax) per night forever. Compaction
-    * changes LAYOUT, never results — [[nearDupsAgainstIndex]] reads the
-    * same row set before and after (the q321 gate + DedupSpec pin it).
-    *
-    * Protocol: capture the committed segment list, fold base ∪ segments
-    * with an id-dedup (crash-RETRY convergence: a refold after any crash
-    * re-deduplicates to the same contents), overwrite the base — ATOMIC
-    * here, unlike the IVF corpus: the snapshot-layout ParquetTable writes
-    * a fresh `snap/vNNNNN` and flips visibility in its commit log — then
-    * retire ONLY the folded segments ([[IndexLog.retire]]): a segment
-    * committed by a concurrent append during the fold keeps its data and
-    * log row. */
+  /** Pack the index's files — the dedup index's OPTIMIZE
+    * ([[graft.merge.ParquetTable.compact]]): per-append files otherwise
+    * accumulate one file-open tax per night forever. Compaction changes
+    * LAYOUT, never results — [[nearDupsAgainstIndex]] reads the same row
+    * set before and after (the q321 gate + DedupSpec pin it) — and, like
+    * every ParquetTable commit, it is atomic. */
   def compactMinHashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    val segs = IndexLog.committed(spark, path)
-    if (segs.isEmpty) return // nothing to fold; no empty rewrite
-    val table = new graft.merge.ParquetTable(spark, s"$path/index")
-    val merged = segs
-      .map(s => spark.read.parquet(IndexLog.segmentDir(path, s._3)))
-      .foldLeft(table.read)(_ unionByName _)
-      .dropDuplicates("id")
-    table.overwrite(merged)
-    IndexLog.retire(spark, path, segs)
-  }
+                          path: String): Unit =
+    minHashIndex(spark, path).compact()
 
   /** [[incrementalNearDups]] against the PERSISTED index: read the committed
-    * signature rows (base + committed segments), join the batch's banded
+    * signature rows, join the batch's banded
     * keys — the per-batch dedup a continuously-ingested corpus runs without
     * ever re-signing itself. */
   def nearDupsAgainstIndex(spark: org.apache.spark.sql.SparkSession,

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** The append-segment commit log shared by the persisted ANN index
-  * ([[Similarity.appendToIvfIndex]]) and the persisted MinHash dedup index
-  * ([[Dedup.appendToMinHashIndex]]): a parquet table of
+/** The append-segment commit log of the persisted ANN indexes
+  * ([[Similarity.appendToIvfIndex]], [[Similarity.appendToIvfPqIndex]]),
+  * whose probes read bucket directories directly: a parquet table of
   * (app_id, batch_id, segment) rows under `<path>/append_log`, one row per
   * COMMITTED append segment directory under `<path>/appends/<segment>`.
   *

@@ -465,7 +465,7 @@ object Similarity {
   }
 
   /** Committed append segments of an IVF index, from its commit log
-    * ([[IndexLog]] — shared with the persisted MinHash index). A segment is
+    * ([[IndexLog]]). A segment is
     * visible ONLY once its log row exists, so a crashed append (data files
     * written, no log row) is invisible to every reader. */
   private[operators] def committedSegments(
@@ -528,16 +528,15 @@ object Similarity {
     * with the retrain-rewrite cycle ([[writeIvfIndex]]) rather than
     * replacing it.
     *
-    * Protocol (the ParquetTable partitioned-compact pattern): materialize
-    * base ∪ committed segments (localCheckpoint — we overwrite the
+    * Protocol: materialize base ∪ committed segments (localCheckpoint — we overwrite the
     * directory being read), dedup on `idCol` (makes a RETRY after any
     * crash converge instead of double-folding), dynamic-partition
     * overwrite of `corpus/`, then truncate the log and drop the segment
     * dirs. A crash after the corpus rewrite but before the log truncation
-    * leaves segment rows visible TWICE until the compact is retried —
-    * the same bounded in-place-rewrite window the ParquetTable compact
-    * documents; readers needing stricter isolation compact in their
-    * maintenance window like every other in-place table service.
+    * leaves segment rows visible TWICE until the compact is retried — a
+    * bounded in-place-rewrite window; readers needing stricter isolation
+    * compact in their maintenance window like every other in-place table
+    * service.
     * Only the segments captured at entry are retired ([[IndexLog.retire]]):
     * a segment committed by a concurrent append while the fold ran keeps
     * both its data and its log row (r16 ADVICE — the previous

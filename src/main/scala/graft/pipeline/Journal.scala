@@ -21,9 +21,8 @@ import graft.merge.ParquetTable
 final class Journal(spark: SparkSession, root: String) {
   import spark.implicits._
 
-  // status/errors are date-partitioned so every append only ADDS files —
-  // an unpartitioned ParquetTable append rewrites the full snapshot, which
-  // turns a busy journal into O(n^2) I/O over the table's lifetime
+  // partitioned by date (and the fact table by pipeline too), as in the
+  // reference; a ParquetTable append only adds files on either layout
   val status = new ParquetTable(spark, s"$root/pipeline_status",
     partitionKeys = Seq("lastUpdateDate"))
   val facts = new ParquetTable(spark, s"$root/pipeline_fact",

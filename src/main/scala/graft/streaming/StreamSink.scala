@@ -139,14 +139,9 @@ object StreamSink {
     * a batch whose index append committed before a crash reproduces the
     * same survivor set (a survivor cannot near-dup another survivor by
     * construction — step 2/3 would have dropped it) and the per-table txn
-    * records skip whichever append already landed.
-    *
-    * Scale: give `index` a shard partition key (add
-    * [[graft.operators.Sampling.shardAssign]]'s column to the signature
-    * frame and construct the ParquetTable with it) so each append is a
-    * pure file-add into shard directories — a snapshot-layout index
-    * rewrites itself per batch, which is fine for tests and fatal for a
-    * 100 TB corpus. */
+    * records skip whichever append already landed. Each append only adds
+    * files, so the index never rewrites itself per batch; `compact` it as
+    * a maintenance job. */
   def nearDupFilterBatch(table: ParquetTable, index: ParquetTable,
                          textCol: String, idCol: String,
                          threshold: Double, bands: Int = 4, rowsPerBand: Int = 2,

@@ -7,6 +7,9 @@ import MergeInto._
 class ParquetTableSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The two table layouts: a snapshot table, and one partitioned by `p`. */
+  private val layouts = Seq(Nil, Seq("p"))
+
   test("create/read/overwrite snapshots with commit log") {
     val t = new ParquetTable(spark, tmpDir("pt"))
     assert(!t.exists)
@@ -39,28 +42,28 @@ class ParquetTableSpec extends SparkSpec {
       notMatched = Seq(WhenNotMatched(None, InsertAll)))
     val rows = t.read.collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(rows == Set((1, "a2"), (2, "b")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(t.root, "data", "p=p3")))
+    assert(partitionFiles(t, "p3").isEmpty, "the emptied partition still has live files")
   }
+
+  /** Live files of partition `p = value`. */
+  private def partitionFiles(t: ParquetTable, value: String): Set[String] =
+    t.liveFiles.filter(_.partitionValues.get("p").contains(value)).map(_.path).toSet
 
   test("delete: SQL WHERE semantics, untouched partitions keep their files") {
     val t = new ParquetTable(spark, tmpDir("pt_del"), partitionKeys = Seq("p"))
     t.create(Seq((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2"),
       (4, null.asInstanceOf[String], "p3")).toDF("k", "v", "p"))
-    val p2Before = java.nio.file.Files.list(
-      java.nio.file.Paths.get(t.root, "data", "p=p2")).toArray.toSet
+    val p2Before = partitionFiles(t, "p2")
     // NULL predicate rows (v = 'zzz' is NULL for k=4) must be KEPT
     t.delete("k = 1 OR v = 'zzz'", metrics = Map("why" -> "erasure"))
     val rows = t.read.collect().map(_.getInt(0)).toSet
     assert(rows == Set(2, 3, 4), "k=1 gone; NULL-predicate k=4 kept")
-    // p2/p3 had no matching rows: their files must be byte-identical
-    val p2After = java.nio.file.Files.list(
-      java.nio.file.Paths.get(t.root, "data", "p=p2")).toArray.toSet
-    assert(p2After == p2Before, "an untouched partition was rewritten")
+    // p2/p3 had no matching rows: their live files must be the same files
+    assert(partitionFiles(t, "p2") == p2Before, "an untouched partition was rewritten")
     assert(t.lastMetrics.get("why").contains("erasure"))
-    // deleting a partition's last row drops its directory
+    // deleting a partition's last row leaves it no live file
     t.delete("k = 3")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(t.root, "data", "p=p2")))
+    assert(partitionFiles(t, "p2").isEmpty)
     // txn replay is a no-op
     t.delete("k = 2", txn = Some(("gdpr", 1L)))
     t.delete("k = 4", txn = Some(("gdpr", 1L))) // replayed id: must not run
@@ -77,28 +80,29 @@ class ParquetTableSpec extends SparkSpec {
   }
 
   test("vacuum drops expired snapshot versions, keeps log and current read") {
-    val t = new ParquetTable(spark, tmpDir("pt_vac"))
-    t.create(Seq((1, "a")).toDF("k", "v"))
-    t.overwrite(Seq((2, "b")).toDF("k", "v"))
-    t.overwrite(Seq((3, "c")).toDF("k", "v"))
-    val snaps = java.nio.file.Paths.get(t.root, "snap")
-    def versions = {
-      import scala.jdk.CollectionConverters._
-      val l = java.nio.file.Files.list(snaps)
-      try l.iterator().asScala.map(_.getFileName.toString).toSet
-      finally l.close()
+    // on both layouts: the parquet files left under the root are exactly
+    // those the kept versions read, orphans of a crashed write included
+    def onDisk(t: ParquetTable) =
+      parquetFiles(new java.io.File(t.root)).map(f =>
+        java.nio.file.Paths.get(t.root).relativize(f.toPath).toString).toSet
+    for (keys <- layouts) {
+      val t = new ParquetTable(spark, tmpDir("pt_vac"), keys)
+      t.create(Seq((1, "a", "p1")).toDF("k", "v", "p"))
+      t.overwrite(Seq((2, "b", "p1")).toDF("k", "v", "p"))
+      val v1 = t.liveFiles.map(_.path).toSet
+      t.overwrite(Seq((3, "c", "p1")).toDF("k", "v", "p"))
+      t.onPreCommit = () => throw new RuntimeException("injected crash")
+      intercept[RuntimeException](t.append(Seq((4, "d", "p2")).toDF("k", "v", "p")))
+      t.onPreCommit = () => ()
+      val live = t.liveFiles.map(_.path).toSet
+      assert(onDisk(t).size > live.size)
+      t.vacuum(keepLast = 2)
+      assert(onDisk(t) == live ++ v1, s"keepLast = 2 keeps two versions' files (keys=$keys)")
+      t.vacuum(keepLast = 1)
+      assert(onDisk(t) == live, s"only the current version's bytes survive (keys=$keys)")
+      assert(t.read.collect().map(_.getInt(0)).toSeq == Seq(3))
+      assert(t.latestVersion == 2, "commit log history intact")
     }
-    assert(versions.size == 3)
-    t.vacuum(keepLast = 1)
-    assert(versions == Set(f"v${t.latestVersion}%05d"),
-      "only the current snapshot's bytes survive")
-    assert(t.read.collect().map(_.getInt(0)).toSeq == Seq(3))
-    assert(t.latestVersion == 2, "commit log history intact")
-    // partitioned layout: single live copy, vacuum is a safe no-op
-    val p = new ParquetTable(spark, tmpDir("pt_vac_part"), Seq("p"))
-    p.create(Seq((1, "a", "p1")).toDF("k", "v", "p"))
-    p.vacuum()
-    assert(p.read.count() == 1)
   }
 
   test("txn idempotency via seenTxn") {
@@ -145,12 +149,10 @@ class ParquetTableSpec extends SparkSpec {
       t.append(spark.range(i * 100, i * 100 + 10).toDF("id").repartition(8)))
     val before = t.read.collect().map(_.getLong(0)).sorted
     val vBefore = t.latestVersion
-    val dirBefore = new java.io.File(t.root, f"snap/v$vBefore%05d")
-    assert(parquetFiles(dirBefore).size > 8)
+    assert(t.liveFiles.size > 8)
     t.compact() // default 128 MB target: tiny table -> 1 file
     assert(t.latestVersion == vBefore + 1)
-    val dirAfter = new java.io.File(t.root, f"snap/v${t.latestVersion}%05d")
-    assert(parquetFiles(dirAfter).size == 1)
+    assert(t.liveFiles.size == 1)
     assert(t.read.collect().map(_.getLong(0)).sorted.toSeq == before.toSeq)
     assert(t.lastMetrics("filesBefore").toInt > 8)
     // re-compacting an already-packed table is a no-op (no empty commit)
@@ -168,11 +170,10 @@ class ParquetTableSpec extends SparkSpec {
       t.append(Seq((i * 10L, "a"), (i * 10L + 1, "b")).toDF("id", "p")
         .repartition(4)))
     val before = t.read.collect().map(r => (r.getLong(0), r.getString(1))).sorted
-    val dataDir = new java.io.File(t.root, "data")
-    assert(parquetFiles(dataDir).size > 2)
+    assert(t.liveFiles.size > 2)
     t.compact()
     // one file per partition value is the floor for a hive layout
-    assert(parquetFiles(dataDir).size == 2)
+    assert(t.liveFiles.size == 2)
     assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).sorted
       .toSeq == before.toSeq)
     // replay protection rides the same txn record as every write
@@ -183,9 +184,6 @@ class ParquetTableSpec extends SparkSpec {
     t.compact(txn = Some(("compactor", 1L))) // replayed -> skipped
     assert(t.latestVersion == v + 1)
   }
-
-  /** The two table layouts: a snapshot table, and one partitioned by `p`. */
-  private val layouts = Seq(Nil, Seq("p"))
 
   test("append: a crash before the commit record leaves nothing visible; redelivery lands once") {
     for (keys <- layouts; txn <- Seq(None, Some(("app", 1L)))) {
@@ -209,25 +207,51 @@ class ParquetTableSpec extends SparkSpec {
     }
   }
 
+  /** The rewriting operations, each committing one version. */
+  private val rewrites: Seq[(String, ParquetTable => Unit)] = Seq(
+    "compact" -> (_.compact()),
+    "merge" -> (_.merge(Seq((1, "a2", "p1"), (7, "g", "p1")).toDF("k", "v", "p"),
+      "target.k = updates.k", Seq(WhenMatched(None, UpdateAll)),
+      Seq(WhenNotMatched(None, InsertAll)))),
+    "delete" -> (_.delete("k = 2")),
+    "overwrite" -> (_.overwrite(Seq((9, "z", "p9")).toDF("k", "v", "p"))))
+
+  private def sixRows(root: String, keys: Seq[String]): ParquetTable = {
+    val t = new ParquetTable(spark, root, keys)
+    t.create(Seq((1, "a", "p1"), (2, "b", "p2"), (3, "c", "p1"), (4, "d", "p2"),
+      (5, "e", "p1"), (6, "f", "p2")).toDF("k", "v", "p").repartition(3))
+    t
+  }
+
   test("a DataFrame read before a commit keeps returning the version it was read at") {
-    val ops: Seq[(String, ParquetTable => Unit)] = Seq(
-      "compact" -> (_.compact()),
-      "merge" -> (_.merge(Seq((1, "a2", "p1"), (7, "g", "p1")).toDF("k", "v", "p"),
-        "target.k = updates.k", Seq(WhenMatched(None, UpdateAll)),
-        Seq(WhenNotMatched(None, InsertAll)))),
-      "delete" -> (_.delete("k = 2")),
-      "overwrite" -> (_.overwrite(Seq((9, "z", "p9")).toDF("k", "v", "p"))))
     for (keys <- layouts) {
-      val t = new ParquetTable(spark, tmpDir("pt_iso"), keys)
-      t.create(Seq((1, "a", "p1"), (2, "b", "p2"), (3, "c", "p1"), (4, "d", "p2"),
-        (5, "e", "p1"), (6, "f", "p2")).toDF("k", "v", "p").repartition(3))
-      ops.foreach { case (name, op) =>
+      val t = sixRows(tmpDir("pt_iso"), keys)
+      rewrites.foreach { case (name, op) =>
         val before = t.read
         val expected = rowsOf(before)
         val v = t.latestVersion
         op(t)
         assert(t.latestVersion == v + 1, s"$name did not commit (keys=$keys)")
         assert(rowsOf(before) == expected, s"$name changed an earlier read (keys=$keys)")
+      }
+    }
+  }
+
+  test("a crash in merge, delete, compact or overwrite leaves version and rows as they were") {
+    for (keys <- layouts) {
+      val root = tmpDir("pt_op_crash")
+      val t = sixRows(root, keys)
+      rewrites.foreach { case (name, op) =>
+        val v = t.latestVersion
+        val expected = rowsOf(t.read)
+        t.onPreCommit = () => throw new RuntimeException("injected crash")
+        intercept[RuntimeException](op(t))
+        t.onPreCommit = () => ()
+        val restarted = new ParquetTable(spark, root, keys)
+        assert(restarted.latestVersion == v, s"$name committed (keys=$keys)")
+        assert(rowsOf(restarted.read) == expected, s"$name crash visible (keys=$keys)")
+        op(t) // the retry commits the same version
+        assert(t.latestVersion == v + 1)
       }
     }
   }

@@ -38,15 +38,11 @@ class ScdRegressionSpec extends SparkSpec {
     assert(table.read.filter($"k" === 9).count() == 0)
   }
 
-  /** (partition-dir -> file-name -> bytes) snapshot of a partitioned table. */
-  private def partitionFiles(root: String): Map[String, Map[String, Seq[Byte]]] = {
-    val data = new java.io.File(s"$root/data")
-    data.listFiles().filter(_.isDirectory).map { d =>
-      d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-        f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq
-      }.toMap
-    }.toMap
-  }
+  /** (region -> live file paths) of a region-partitioned table. A live
+    * file is never rewritten, so the same paths mean the same bytes. */
+  private def partitionFiles(t: ParquetTable): Map[String, Set[String]] =
+    t.liveFiles.groupBy(_.partitionValues("region"))
+      .view.mapValues(_.map(_.path).toSet).toMap
 
   test("writeScd2 merges touched partitions only; untouched files byte-identical") {
     val table = new ParquetTable(spark, tmpDir("scd2prune"), partitionKeys = Seq("region"))
@@ -62,15 +58,15 @@ class ScdRegressionSpec extends SparkSpec {
 
     write(Seq((1, "a", "eu", "d1"), (2, "b", "us", "d1"), (3, "c", "ap", "d1"))
       .toDF("k", "v", "region", "eff"))
-    val before = partitionFiles(table.root)
-    assert(before.keySet == Set("region=eu", "region=us", "region=ap"))
+    val before = partitionFiles(table)
+    assert(before.keySet == Set("eu", "us", "ap"))
 
     // batch touches ONLY region=eu
     write(Seq((1, "a2", "eu", "d2")).toDF("k", "v", "region", "eff"))
-    val after = partitionFiles(table.root)
-    // untouched partitions: identical file names AND identical bytes
-    assert(after("region=us") == before("region=us"))
-    assert(after("region=ap") == before("region=ap"))
+    val after = partitionFiles(table)
+    // untouched partitions: the same files
+    assert(after("us") == before("us"))
+    assert(after("ap") == before("ap"))
     // touched partition was rewritten (old + expired + new version)
     val eu = table.read.filter($"region" === "eu")
       .select("k", "v", "current_flag").collect()
@@ -87,11 +83,11 @@ class ScdRegressionSpec extends SparkSpec {
       .map { case (k, v, r) => (k, v, r, false, true, ts0) }
       .toDF("k", "v", "region", "deleted_flag", "row_active", "updated_at")
     Scd.writeScd4(cur, hist, batch(Seq((1, "a", "eu"), (2, "b", "us"))), Seq("k"))
-    val before = partitionFiles(cur.root)
+    val before = partitionFiles(cur)
 
     Scd.writeScd4(cur, hist, batch(Seq((1, "a2", "eu"))), Seq("k"))
-    val after = partitionFiles(cur.root)
-    assert(after("region=us") == before("region=us")) // untouched, byte-identical
+    val after = partitionFiles(cur)
+    assert(after("us") == before("us")) // untouched: the same files
     assert(cur.read.filter($"k" === 1).select("v").as[String].collect().toSeq == Seq("a2"))
     assert(hist.read.count() == 1) // old eu row snapshotted
   }
@@ -104,9 +100,8 @@ class ScdRegressionSpec extends SparkSpec {
       matched = Seq(MergeInto.WhenMatched(None, MergeInto.Delete)),
       notMatched = Nil)
     assert(t.read.select("p").as[String].collect().toSeq == Seq("11:45"))
-    // the escaped directory of the emptied partition must be gone
-    val dirs = new java.io.File(s"${t.root}/data").list().filter(_.startsWith("p="))
-    assert(dirs.toSeq == Seq("p=11%3A45"))
+    // the emptied partition has no live file; the other keeps its value
+    assert(t.liveFiles.map(_.partitionValues("p")).toSet == Set("11:45"))
   }
 
   test("writeScd4 records the txn on BOTH tables: replay appends no duplicate history") {

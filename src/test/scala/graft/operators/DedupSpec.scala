@@ -590,44 +590,45 @@ class DedupSpec extends SparkSpec {
     assert(before.nonEmpty)
     val nBefore = Dedup.minHashIndexRows(spark, dir).count()
     assert(nBefore == 25L, s"replayed append must not double rows: $nBefore")
-    // a CRASHED segment append (data files written, no commit row) is
-    // invisible to readers and to compaction
-    Dedup.minHashIndexTable(docs.filter($"doc_id" > 25), "text", "doc_id",
-        bands = 4, rowsPerBand = 2)
-      .write.parquet(s"$dir/appends/spec-crashed")
+    // a CRASHED append (data files written, no commit record) is invisible
+    // to readers and to compaction
+    val index = new graft.merge.ParquetTable(spark, s"$dir/index")
+    index.onPreCommit = () => throw new RuntimeException("injected crash")
+    intercept[RuntimeException](index.append(Dedup.minHashIndexTable(
+      docs.filter($"doc_id" > 25), "text", "doc_id", bands = 4, rowsPerBand = 2)))
     assert(Dedup.minHashIndexRows(spark, dir).count() == 25L)
+    val appended = index.liveFiles.map(_.path).toSet
     Dedup.compactMinHashIndex(spark, dir)
     assert(pairs() == before, "compaction must not change results")
     assert(Dedup.minHashIndexRows(spark, dir).count() == 25L)
-    // folded segments + log are gone (the crashed dir was never committed
-    // and is swept with the rest of appends/ once nothing survives)
-    assert(!new java.io.File(s"$dir/appends").exists())
-    assert(!new java.io.File(s"$dir/append_log").exists())
-    // retry converges (id-dedup): second compact is a no-op, same results
+    // the compaction commit replaced every file the build and appends wrote
+    val packed = new graft.merge.ParquetTable(spark, s"$dir/index").liveFiles
+    assert(packed.size == 1 && !appended.contains(packed.head.path))
+    // a second compact finds the index packed: no commit, same results
+    val v = index.latestVersion
     Dedup.compactMinHashIndex(spark, dir)
+    assert(index.latestVersion == v)
     assert(pairs() == before)
   }
 
   test("IndexLog.retire keeps a segment committed after the fold list was captured") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mh_ret").toString
-    val docs = (1L to 10L).map(i =>
-      (i, (0 until 12).map(w => s"w${i % 3}_$w").mkString(" ")))
-      .toDF("doc_id", "text")
-    Dedup.writeMinHashIndex(docs.filter($"doc_id" <= 6), dir,
-      bands = 4, rowsPerBand = 2)
-    Dedup.appendToMinHashIndex(docs.filter($"doc_id" === 7), dir,
-      txn = Some(("spec", 1L)))
+    val dir = java.nio.file.Files.createTempDirectory("ix_ret").toString
+    // the two-step contract: write a segment's files, then its log row
+    def append(batchId: Long): Unit = {
+      Seq(batchId).toDF("id").write.parquet(IndexLog.segmentDir(dir, s"spec-$batchId"))
+      IndexLog.commit(spark, dir, "spec", batchId, s"spec-$batchId")
+    }
+    append(1L)
     // capture the fold list, then a concurrent append commits segment 2
-    val folded = graft.operators.IndexLog.committed(spark, dir)
-    Dedup.appendToMinHashIndex(docs.filter($"doc_id" === 8), dir,
-      txn = Some(("spec", 2L)))
-    graft.operators.IndexLog.retire(spark, dir, folded)
+    val folded = IndexLog.committed(spark, dir)
+    append(2L)
+    IndexLog.retire(spark, dir, folded)
     // the late segment survives with data + log row; the folded one is gone
-    val left = graft.operators.IndexLog.committed(spark, dir)
+    val left = IndexLog.committed(spark, dir)
     assert(left.map(_._3) == Seq("spec-2"), s"survivors: $left")
-    assert(new java.io.File(s"$dir/appends/spec-2").exists())
-    assert(!new java.io.File(s"$dir/appends/spec-1").exists())
+    assert(new java.io.File(IndexLog.segmentDir(dir, "spec-2")).exists())
+    assert(!new java.io.File(IndexLog.segmentDir(dir, "spec-1")).exists())
   }
 
   test("incrementalHamming128NearDups: banded batch×index equals brute-force cross pairs; budget refusal; no self-pairing of either side") {

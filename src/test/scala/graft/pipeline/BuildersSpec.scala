@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.merge.ParquetTable
 
 /** The fluent facade must be a pure re-skin: the same scenario built through
   * PipelineBuilder/ReaderBuilder/ProcessorBuilder produces byte-identical
@@ -81,7 +82,7 @@ class BuildersSpec extends SparkSpec {
     assert(dataFiles.nonEmpty)
     dataFiles.foreach(k => assert(f(k) == b(k), s"bytes differ for $k"))
 
-    val out = spark.read.parquet(s"$rootB/people/snap/v00001")
+    val out = new ParquetTable(spark, s"$rootB/people").read
     val m = out.collect().map(r =>
       r.getAs[Long]("id") -> (r.getAs[String]("name"), r.getAs[Boolean]("deleted_flag"))).toMap
     assert(m(1L) == (("alicia", false)))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.merge.ParquetTable
 import graft.operators.CdcProcessor
 
 /** Metadata row -> 3-node pipeline -> merged target: the reference's
@@ -43,7 +44,7 @@ class IngestionJobSpec extends SparkSpec {
     val r2 = IngestionJob.run(spark, Seq(cfg), _ => () => b2, root, journal = Some(journal))
     assert(r2.values.forall(identity))
 
-    val out = spark.read.parquet(s"$root/people/snap/v00001")
+    val out = new ParquetTable(spark, s"$root/people").read
     val m = out.collect().map(r =>
       r.getAs[Long]("id") -> (r.getAs[String]("name"), r.getAs[Boolean]("deleted_flag"))).toMap
     assert(m(1L) == (("alicia", false)))
@@ -83,7 +84,7 @@ class IngestionJobSpec extends SparkSpec {
         struct(lit("d").as("db"), lit(1L).as("server_id")).as("source")).as("value"))
     assert(IngestionJob.run(spark, Seq(cfg), _ => () => update, root).values.forall(identity))
 
-    val out = spark.read.parquet(s"$root/accounts/snap/v00001")
+    val out = new ParquetTable(spark, s"$root/accounts").read
       .select("id", "name", "current_flag")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).toSet
     assert(out.contains((1L, "alice", false)))  // expired version
@@ -122,7 +123,7 @@ class IngestionJobSpec extends SparkSpec {
     val r = IngestionJob.run(spark, Seq(cfg), _ => () => b1, root, piiRules = rules)
     assert(r.values.forall(identity))
 
-    val stored = spark.read.parquet(s"$root/people/snap/v00000")
+    val stored = new ParquetTable(spark, s"$root/people").read
       .select("name").as[String].collect().head
     assert(stored != "alice")                  // encrypted at rest
     assert(codec.decrypt(stored) == "alice")   // round-trips with the codec

@@ -92,12 +92,16 @@ class StreamingSpec extends SparkSpec {
     writeEnvelopes(inDir, "b1.json", Seq(env("u", 1, "alicia"), env("c", 2, "bob")))
     // kill the stream INSIDE the merge: after the new snapshot's data files
     // are written, before the commit-log record that would make them visible
-    table.onPreCommit = () => throw new RuntimeException("injected crash")
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    table.onPreCommit = () => {
+      fired.set(true)
+      throw new RuntimeException("injected crash")
+    }
     intercept[Exception] { runOnce() }
     table.onPreCommit = () => ()
-    // the crash hit the real window: the orphan snapshot is on disk...
-    assert(Files.exists(Paths.get(root, "snap", "v00001")),
-      "crash fired before the data write — the injected window is wrong")
+    // the crash hit the real window: the seam runs only once the new
+    // version's data files are written...
+    assert(fired.get, "the batch failed before its data write — the injected window is wrong")
     // ...but nothing became visible: version and contents are pre-batch
     assert(table.latestVersion == 0L)
     assert(table.read.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
