@@ -166,8 +166,8 @@ object OracleSql {
     * FULL embeddings table, nProbe=4 probe, ADC top-5. q139 builds from
     * the whole corpus (`pool` = embeddings); q323 pins both quantizers to
     * the 80% base build of the persisted artifact while searching
-    * everything the index serves (base + appended-then-compacted
-    * segments). */
+    * everything the index serves (base build plus appends, then
+    * compacted). */
   private def ivfPqOracle(pool: String): String = {
     val l2sub = "list_sum(list_transform(generate_series(1, 8), i -> " +
       "((e.embedding[s.sub * 8 + i]::DOUBLE) - (c.cw[s.sub * 8 + i]::DOUBLE)) * " +
@@ -878,18 +878,18 @@ object OracleSql {
     "q40_ivf_topk" -> ivfOracle(nCentroids = 32, maxQueryId = 4, nProbe = 8, k = 3),
 
     // same IVF semantics through the PERSISTED index (write bucketed
-    // corpus + centroid table, probe via directory-pruned reads)
+    // corpus + centroid table, probe via partition-pruned reads)
     "q56_ivf_index" -> ivfOracle(nCentroids = 32, maxQueryId = 6, nProbe = 8, k = 3),
 
     // append path: centroids come from the 80% BASE build (the appended 20%
     // is quantized against them, never retrained) — the oracle restricts
     // the centroid pool but assigns/probes over the full corpus, exactly
-    // what base + committed append segments serve
+    // what the base build plus the committed append serve
     "q132_ivf_append" -> ivfOracle(nCentroids = 32, maxQueryId = 6, nProbe = 8,
       k = 3, centroidWhere = "vec_id % 5 <> 0"),
 
-    // compaction path: EXACTLY q132's semantics — folding segments into
-    // the base changes layout, never results, so the oracle is the same
+    // compaction path: EXACTLY q132's semantics — packing the appended
+    // files changes layout, never results, so the oracle is the same
     // full-corpus probe over the base-build centroid pool
     "q317_ivf_compact" -> ivfOracle(nCentroids = 32, maxQueryId = 6,
       nProbe = 8, k = 3, centroidWhere = "vec_id % 5 <> 0"),
@@ -2440,8 +2440,8 @@ object OracleSql {
 
     // q323: the PERSISTED IVFADC artifact — q139's exact search semantics
     // with both quantizers restricted to the BASE build (80% of the
-    // corpus), searching the FULL corpus: precisely what base + two
-    // appended-then-compacted segments serve (the q132/q317 pattern)
+    // corpus), searching the FULL corpus: precisely what the base build
+    // plus two appends, then compacted, serve (the q132/q317 pattern)
     "q323_ivfpq_index" ->
       ivfPqOracle("(SELECT * FROM embeddings WHERE vec_id % 5 != 0)"),
 

@@ -553,9 +553,10 @@ object SparkEntry {
         round(col("cosine"), 3).as("cosine"), col("rank").cast("long").as("rank"))
   }
 
-  /** Persisted IVF index: corpus written hive-partitioned by centroid_id,
-    * probes read ONLY the probed bucket directories off disk (manual DPP),
-    * then brute-force inside them — the durable-index variant of q40. */
+  /** Persisted IVF index: corpus committed as a ParquetTable partitioned
+    * by centroid_id, probes read ONLY the probed buckets' live files off
+    * disk (a partition filter pruned from the commit log), then
+    * brute-force inside them — the durable-index variant of q40. */
   private def q56(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
     val e = T(s, dir, "embeddings")
@@ -1567,17 +1568,17 @@ object SparkEntry {
     graft.operators.Corpus.sourceKlReport(T(s, dir, "documents"), "source", "text")
 
   /** Persisted-IVF APPEND path, end-to-end: build the index from 80% of the
-    * corpus, append the other 20% as a committed segment (quantized against
-    * the BASE centroids — no retrain, no rewrite), probe the union. The
-    * oracle restricts the centroid pool to the base build but searches the
-    * full corpus — exactly what base + committed segments serve. */
+    * corpus, append the other 20% as one committed append to the corpus
+    * table (quantized against the BASE centroids — no retrain, no rewrite),
+    * probe the union. The oracle restricts the centroid pool to the base
+    * build but searches the full corpus — exactly what the build plus the
+    * committed append serve. */
   private def q132(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
     val e = T(s, dir, "embeddings")
     val idxDir = scratchDir("graft_q132")
-    // append segments carry only (id, vec): write the base with the same
-    // two columns so the probe-time unionByName sees one schema.
-    // Checkpointed ONCE: the base write and each append otherwise re-run
+    // the index keeps only (id, vec), so only those two columns are
+    // checkpointed — ONCE: the base write and each append otherwise re-run
     // the scan + widen exchange per lifecycle step (guide §2.4)
     val ev = Tables.widen(e).select(col("vec_id"), col("embedding"))
       .localCheckpoint()
@@ -1592,13 +1593,13 @@ object SparkEntry {
         round(col("cosine"), 3).as("cosine"), col("rank").cast("long").as("rank"))
   }
 
-  /** IVF segment compaction (q132's maintenance close-out): two append
-    * segments folded back into the bucketed base via
+  /** IVF compaction (q132's maintenance close-out): two appends packed
+    * into one file per bucket via
     * [[graft.operators.Similarity.compactIvfIndex]], then probed. The
     * oracle is q132's EXACT probe semantics over the full corpus —
     * compaction changes layout, never results — and the gate refuses to
-    * answer unless the segment dirs and append log are really gone, so a
-    * green row proves both the fold and the truncation. */
+    * answer unless the last commit is a compaction that replaced every
+    * file live before it, so a green row proves the compaction ran. */
   private def q317(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
     val e = T(s, dir, "embeddings")
@@ -1614,10 +1615,12 @@ object SparkEntry {
     Similarity.appendToIvfIndex(
       ev.filter(col("vec_id") % 5 === 0 && col("vec_id") % 2 =!= 0),
       idxDir, appId = "q317", batchId = 2L)
+    val corpus = new graft.merge.ParquetTable(s, s"$idxDir/corpus", Seq("centroid_id"))
+    val appended = corpus.liveFiles.map(_.path).toSet
     Similarity.compactIvfIndex(s, idxDir)
-    require(!new java.io.File(s"$idxDir/appends").exists() &&
-        !new java.io.File(s"$idxDir/append_log").exists(),
-      "compactIvfIndex left segment dirs or the append log behind")
+    require(corpus.lastMetrics.contains("filesBefore") &&
+        corpus.liveFiles.forall(f => !appended(f.path)),
+      "compactIvfIndex did not replace the appended files")
     val queries = e.filter(col("vec_id") < 6)
       .select(col("vec_id").as("query_id"), col("embedding"))
     Similarity.ivfTopKFromIndex(s, idxDir, queries, k = 3, nProbe = 8)
@@ -1628,10 +1631,11 @@ object SparkEntry {
 
   /** Persisted IVFADC index gate (r17 — q139's per-call quantizer rebuild
     * replaced by an on-disk artifact): both quantizers built ONCE from the
-    * 80% base and pinned in the artifact, the 20% appended as two
-    * committed segments (assigned + PQ-encoded against the pinned
-    * quantizers), segments folded by compactIvfPqIndex, and the gate
-    * refuses to answer unless segments + log are really gone. The oracle
+    * 80% base and pinned in the artifact, the 20% appended in two
+    * committed appends to the codes table (assigned + PQ-encoded against
+    * the pinned quantizers), the codes packed by compactIvfPqIndex, and
+    * the gate refuses to answer unless the last commit is a compaction
+    * that replaced every file live before it. The oracle
     * is q139's exact IVFADC search with the quantizer pool restricted to
     * the base build — so a green row proves the persisted artifact, the
     * append encoding, AND the compaction all preserve q139's in-memory
@@ -1651,10 +1655,12 @@ object SparkEntry {
     Similarity.appendToIvfPqIndex(
       ev.filter(col("vec_id") % 5 === 0 && col("vec_id") % 2 =!= 0),
       idxDir, appId = "q323", batchId = 2L)
+    val codes = new graft.merge.ParquetTable(s, s"$idxDir/codes", Seq("centroid_id"))
+    val appended = codes.liveFiles.map(_.path).toSet
     Similarity.compactIvfPqIndex(s, idxDir)
-    require(!new java.io.File(s"$idxDir/appends").exists() &&
-        !new java.io.File(s"$idxDir/append_log").exists(),
-      "compactIvfPqIndex left segment dirs or the append log behind")
+    require(codes.lastMetrics.contains("filesBefore") &&
+        codes.liveFiles.forall(f => !appended(f.path)),
+      "compactIvfPqIndex did not replace the appended files")
     val queries = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding"))
     Similarity.ivfPqTopKFromIndex(s, idxDir, queries, k = 5, nProbe = 4)

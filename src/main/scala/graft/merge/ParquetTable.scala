@@ -336,8 +336,10 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     *
     * Rows are repartitioned BY THE PARTITION KEYS, so each partition value
     * collapses to one task -> one file per partition (the common small-file
-    * case: many appends x few partitions). Skipped (no new version) when the
-    * current layout is already within the target file count. */
+    * case: many appends x few partitions). One file per partition value is
+    * therefore the floor of the target file count, and the compaction is
+    * skipped (no new version) when the current layout is already within
+    * that target. */
   def compact(targetBytes: Long = 128L << 20,
               txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
@@ -345,7 +347,8 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     require(v >= 0, s"compact target $root does not exist")
     require(targetBytes > 0, "targetBytes > 0")
     val bytes = files.map(_.size).sum
-    val wantFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+    val wantFiles = math.max(files.map(_.values(partitionKeys)).distinct.size.toLong,
+      math.max(1L, (bytes + targetBytes - 1) / targetBytes))
     if (files.size <= wantFiles) return // already packed; no empty commit
     val metrics = Map(
       "filesBefore" -> files.size.toString, "bytesBefore" -> bytes.toString,

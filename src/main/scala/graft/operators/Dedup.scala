@@ -267,7 +267,7 @@ object Dedup {
     val spark = df.sparkSession
     // delete ONLY this artifact's own known paths — never the whole
     // caller-supplied directory (a typo'd or shared root must not lose
-    // unrelated data; same scoped-delete contract as writeIvfIndex)
+    // unrelated data)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
     Seq(s"$path/index", indexParamsPath(path)).foreach { p =>

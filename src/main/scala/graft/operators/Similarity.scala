@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TopKAgg, VectorFunctions}
+import graft.merge.ParquetTable
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -22,6 +23,12 @@ import graft.functions.{TopKAgg, VectorFunctions}
   * single argmin PROJECTION — a codegen'd [[graft.functions.NearestCentroid]]
   * scan over a BROADCAST centroid matrix — zero joins, zero shuffles, zero
   * plan literals over the corpus x centroid product.
+  *
+  * Persisted indexes (IVF: [[writeIvfIndex]]; IVFADC: [[writeIvfPqIndex]])
+  * keep their assigned rows in a [[graft.merge.ParquetTable]] partitioned
+  * by centroid_id, so builds, appends and compactions are commits of its
+  * log, and a probe reads only the probed buckets' files. The quantizers
+  * (`centroids/`, `codebook/`) are plain Parquet sidecars.
   */
 object Similarity {
 
@@ -33,16 +40,20 @@ object Similarity {
     * expressions), so the plan carries no nCentroids x dim literals; only the
     * small id array (index -> centroid id) is a plan literal. */
   private final case class CentroidSet(
-      ids: Column, bc: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]])
+      idValues: Array[Any], bc: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]) {
+    def ids: Column = array(idValues.map(lit): _*)
+  }
+
+  /** (centroid id, vector) rows ordered by id, as a [[CentroidSet]]. */
+  private def centroidSetOf(spark: org.apache.spark.sql.SparkSession,
+                            rows: Array[org.apache.spark.sql.Row]): CentroidSet =
+    CentroidSet(rows.map(_.get(0)),
+      spark.sparkContext.broadcast(rows.map(_.getSeq[Float](1).toArray)))
 
   private def centroidSet(corpus: DataFrame, nCentroids: Int,
-                          idCol: String, vecCol: String): CentroidSet = {
-    val rows = corpus.orderBy(col(idCol)).limit(nCentroids)
-      .select(col(idCol), col(vecCol)).collect()
-    val matrix = rows.map(_.getSeq[Float](1).toArray)
-    val bc = corpus.sparkSession.sparkContext.broadcast(matrix)
-    CentroidSet(array(rows.map(r => lit(r.get(0))): _*), bc)
-  }
+                          idCol: String, vecCol: String): CentroidSet =
+    centroidSetOf(corpus.sparkSession, corpus.orderBy(col(idCol)).limit(nCentroids)
+      .select(col(idCol), col(vecCol)).collect())
 
   /** Centroid-id column for the nearest centroid of `vec` — a zero-shuffle,
     * whole-stage-codegen projection (centroids ordered by id, so the
@@ -52,12 +63,15 @@ object Similarity {
     element_at(cs.ids, VectorFunctions.nearestCentroid(spark, vec, cs.bc) + 1)
 
   /** (query_id, struct(-cosine, neighbor_id)) rows -> the final
-    * (query_id, neighbor_id, cosine, rank) top-k via the bounded aggregate. */
-  private def topKMerge(scored: DataFrame, k: Int): DataFrame =
+    * (query_id, neighbor_id, cosine, rank) top-k via the bounded aggregate.
+    * `score` names the output score column: the ADC paths pass
+    * (query_id, struct(d, neighbor_id)) rows and `col.d` as adc_dist. */
+  private def topKMerge(scored: DataFrame, k: Int,
+                        score: Column = negate(col("col.negcos")).as("cosine")): DataFrame =
     scored.groupBy("query_id").agg(TopKAgg.topK(col("s"), k).as("arr"))
       .select(col("query_id"), posexplode(col("arr")))
       .select(col("query_id"), col("col.nid").as("neighbor_id"),
-        negate(col("col.negcos")).as("cosine"), (col("pos") + 1).as("rank"))
+        score, (col("pos") + 1).as("rank"))
 
   /** Brute-force top-k: for each query vector, the k nearest corpus vectors
     * by cosine similarity. Ties broken by corpus id for determinism. */
@@ -273,7 +287,7 @@ object Similarity {
     * candidates — with L labels the scored set shrinks ~L× before any
     * cosine is computed, and at corpus scale a label-partitioned layout
     * turns the probe into a partition-pruned scan (the same contract as
-    * the IVF bucket directories). Top-k state stays the bounded map-side
+    * the persisted IVF bucket table). Top-k state stays the bounded map-side
     * [[graft.functions.TopKAgg]]. */
   def filteredTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                    labelCol: String = "label",
@@ -407,11 +421,85 @@ object Similarity {
       nearestCentroidId(cs, col(vecCol), corpus.sparkSession))
   }
 
-  /** Materialize the IVF index: the corpus written to `path/corpus`
-    * HIVE-PARTITIONED BY centroid_id (each bucket is its own directory) and
-    * the centroid table to `path/centroids`. At query time the probe filter
-    * becomes a PartitionFilter on the scan — a probe reads nProbe/nCentroids
-    * of the data OFF DISK, not just of the in-memory scan.
+  /** The bucket table of a persisted index — `path/corpus` of an IVF index,
+    * `path/codes` of an IVFADC index: a [[graft.merge.ParquetTable]]
+    * partitioned by centroid_id, so every rebuild, append and compaction is
+    * one atomic commit of its log. */
+  private def bucketTable(spark: org.apache.spark.sql.SparkSession, path: String,
+                          dataDir: String): ParquetTable =
+    new ParquetTable(spark, s"$path/$dataDir", Seq("centroid_id"))
+
+  /** Build a persisted index on a fresh coarse quantizer: `commitData`
+    * commits the bucket table assigned by it, then the quantizer is written
+    * to `path/centroids`. `trainIters = 0` keeps the deterministic first-k
+    * quantizer ([[centroidSet]]); `trainIters > 0` runs that many Lloyd
+    * rounds ([[trainCentroids]]) and names the trained centroids 0..k-1. */
+  private def buildIndex(corpus: DataFrame, nCentroids: Int, path: String,
+                         idCol: String, vecCol: String, trainIters: Int)(
+                         commitData: CentroidSet => Unit): Unit = {
+    val spark = corpus.sparkSession
+    VectorFunctions.register(spark)
+    val cs =
+      if (trainIters > 0) {
+        val cents = trainCentroids(corpus, nCentroids, trainIters, idCol, vecCol)
+        CentroidSet(cents.indices.map(_.toLong: Any).toArray,
+          spark.sparkContext.broadcast(cents))
+      } else centroidSet(corpus, nCentroids, idCol, vecCol)
+    commitData(cs)
+    val centRows = cs.idValues.zip(cs.bc.value).map { case (id, v) =>
+      org.apache.spark.sql.Row(id, v.toSeq)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(centRows: _*),
+        corpus.select(idCol, vecCol).schema)
+      .withColumnRenamed(idCol, "centroid_id").withColumnRenamed(vecCol, "cv")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    // both writes are done; the assignment broadcast has no further user
+    VectorFunctions.releaseCentroidBroadcast(spark, cs.bc)
+  }
+
+  /** The persisted coarse quantizer of the index at `path`. */
+  private def readCentroidSet(spark: org.apache.spark.sql.SparkSession,
+                              path: String): CentroidSet =
+    centroidSetOf(spark, spark.read.parquet(s"$path/centroids")
+      .orderBy(col("centroid_id")).collect())
+
+  /** Each query's `nProbe` nearest centroids as (query_id, qv, centroid_id)
+    * rows: a bounded-insertion scan over the broadcast centroid matrix, no
+    * query x centroid join. */
+  private def probeSet(cs: CentroidSet, queries: DataFrame, nProbe: Int,
+                       queryId: String, queryVec: String): DataFrame =
+    queries
+      .select(col(queryId).as("query_id"), col(queryVec).as("qv"))
+      .withColumn("cidx", explode(VectorFunctions.topCentroids(
+        queries.sparkSession, col("qv"), cs.bc, nProbe)))
+      .withColumn("centroid_id", element_at(cs.ids, col("cidx") + 1))
+      .drop("cidx")
+
+  /** The probed buckets of a persisted index: the bucket table's `read`
+    * filtered by `centroid_id IN (probed)`. The filter is a partition
+    * filter, which the log-backed scan applies to the logged partition
+    * values, so only the probed buckets' live files are opened. The probe
+    * set is bounded (queries × nProbe) and collected; the refusal below is
+    * decided from the live files' partition values and starts no job. */
+  private def probedBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
+                            dataDir: String, probes: DataFrame): DataFrame = {
+    val probed = probes.select("centroid_id").distinct().collect().map(_.get(0))
+    val names = probed.map(String.valueOf).toSet
+    val table = bucketTable(spark, path, dataDir)
+    require(table.liveFiles.exists(_.partitionValues.get("centroid_id").exists(names)),
+      s"no probed IVF buckets exist under $path")
+    table.read.filter(col("centroid_id").isin(probed: _*))
+  }
+
+  /** Materialize the IVF index: the corpus with its `centroid_id` bucket
+    * column at `path/corpus` ([[bucketTable]]) and the centroid table at
+    * `path/centroids`. At query time the probe filter prunes the table's
+    * logged partitions — a probe reads nProbe/nCentroids of the data OFF
+    * DISK, not just of the in-memory scan. A rebuild is one `overwrite`
+    * commit: it supersedes every append atomically and keeps the table's
+    * txn record, so a replayed append stays a no-op. The corpus commits
+    * before the centroid table is rewritten; a crash between the two pairs
+    * the new corpus with the old quantizer until the rebuild is rerun.
     *
     * Quantizer choice: `trainIters = 0` (default) keeps the deterministic
     * first-`nCentroids`-by-id quantizer — bit-reproducible, which is what
@@ -427,68 +515,29 @@ object Similarity {
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     trainIters: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    VectorFunctions.register(spark)
-    // full rebuild: drop any append segments + their commit log FIRST —
-    // the new corpus supersedes them, and leaving the log would make
-    // readers union stale segments on top of the rewritten base
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
-    Seq(s"$path/append_log", s"$path/append_log.tmp", s"$path/appends")
-      .foreach { d => fs.delete(new org.apache.hadoop.fs.Path(d), true) }
-    val (centIds, centVecs): (Array[Any], Array[Array[Float]]) =
-      if (trainIters > 0) {
-        val cents = trainCentroids(corpus, nCentroids, trainIters, idCol, vecCol)
-        (cents.indices.map(_.toLong.asInstanceOf[Any]).toArray, cents)
-      } else {
-        val rows = corpus.orderBy(col(idCol)).limit(nCentroids)
-          .select(col(idCol), col(vecCol)).collect()
-        (rows.map(_.get(0)), rows.map(_.getSeq[Float](1).toArray))
-      }
-    val cs = CentroidSet(array(centIds.map(lit): _*),
-      spark.sparkContext.broadcast(centVecs))
-    // repartition ON the bucket key before the partitioned write: without
-    // it every task writes a sliver of every bucket (tasks x buckets small
-    // files — the classic partitionBy fan-out); with it each bucket's rows
-    // are contiguous and the file count is bounded by the shuffle width
-    corpus.withColumn("centroid_id", nearestCentroidId(cs, col(vecCol), spark))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/corpus")
-    val centRows = centIds.zip(centVecs).map { case (id, v) =>
-      org.apache.spark.sql.Row(id, v.toSeq)
+    buildIndex(corpus, nCentroids, path, idCol, vecCol, trainIters) { cs =>
+      // repartition ON the bucket key before the partitioned write: without
+      // it every task writes a sliver of every bucket (tasks x buckets small
+      // files — the classic partitionBy fan-out); with it each bucket's rows
+      // are contiguous and the file count is bounded by the shuffle width
+      bucketTable(spark, path, "corpus").overwrite(
+        corpus.withColumn("centroid_id", nearestCentroidId(cs, col(vecCol), spark))
+          .repartition(col("centroid_id")))
     }
-    spark.createDataFrame(java.util.Arrays.asList(centRows: _*),
-        corpus.select(idCol, vecCol).schema)
-      .withColumnRenamed(idCol, "centroid_id").withColumnRenamed(vecCol, "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // both writes are done; the assignment broadcast has no further user
-    VectorFunctions.releaseCentroidBroadcast(spark, cs.bc)
   }
-
-  /** Committed append segments of an IVF index, from its commit log
-    * ([[IndexLog]]). A segment is
-    * visible ONLY once its log row exists, so a crashed append (data files
-    * written, no log row) is invisible to every reader. */
-  private[operators] def committedSegments(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[(String, Long, String)] =
-    IndexLog.committed(spark, path)
 
   /** Append a NEW batch into a persisted IVF index WITHOUT retraining or
     * rewriting: the batch is assigned against the index's OWN centroid
-    * table (so existing bucket semantics are unchanged) and written as a
-    * fresh append SEGMENT — only then is the segment committed into the
-    * index's append log, and [[ivfTopKFromIndex]] reads exactly the base
-    * corpus plus COMMITTED segments. That makes the append crash-safe and
-    * replay-safe, the same two-step contract as the repo's other persisted
-    * writes (ParquetTable txn, nearDupFilterBatch):
-    *  - a crash mid-write leaves data files but no log row → invisible;
-    *    the retry overwrites the same segment directory cleanly;
-    *  - a replayed `(appId, batchId)` already in the log is a no-op, so
-    *    a foreachBatch caller gets exactly-once index content.
-    * `batchId < 0` opts out of replay-dedup (each call appends a uniquely
-    * named segment — still crash-safe, not idempotent). The caller contract
-    * is to retrain + rewrite ([[writeIvfIndex]]) when quantizer drift
-    * degrades recall (the standard IVF maintenance cycle); the rewrite
-    * folds committed segments in and truncates the log.
+    * table (so existing bucket semantics are unchanged) and appended to the
+    * bucket table — one commit that only adds files, so it is crash-safe
+    * (a crashed append is invisible to every reader) and, with
+    * `batchId >= 0`, replay-safe: `(appId, batchId)` is the commit's txn,
+    * and a batch at or below the app's highest committed `batchId` is a
+    * no-op, so a foreachBatch caller gets exactly-once index content.
+    * `batchId < 0` opts out of replay-dedup (still crash-safe, not
+    * idempotent). The caller contract is to retrain + rewrite
+    * ([[writeIvfIndex]]) when quantizer drift degrades recall (the
+    * standard IVF maintenance cycle).
     * Cost: one codegen'd argmin projection over the batch + one shuffle on
     * the bucket key to keep per-bucket file counts bounded. */
   def appendToIvfIndex(batch: DataFrame, path: String,
@@ -497,130 +546,43 @@ object Similarity {
                        appId: String = "graft",
                        batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
-    if (batchId >= 0 &&
-        committedSegments(spark, path).exists(s => s._1 == appId && s._2 == batchId))
-      return // replayed batch: already committed, exactly-once no-op
     VectorFunctions.register(spark)
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("centroid_id")).collect()
-    val cs = CentroidSet(array(centRows.map(r => lit(r.get(0))): _*),
-      spark.sparkContext.broadcast(centRows.map(_.getSeq[Float](1).toArray)))
-    val segment =
-      if (batchId >= 0) s"$appId-$batchId"
-      else s"$appId-u${java.util.UUID.randomUUID().toString.take(8)}"
-    batch.select(col(idCol), col(vecCol))
-      .withColumn("centroid_id", nearestCentroidId(cs, col(vecCol), spark))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/appends/$segment")
+    val cs = readCentroidSet(spark, path)
+    bucketTable(spark, path, "corpus").append(
+      batch.select(col(idCol), col(vecCol))
+        .withColumn("centroid_id", nearestCentroidId(cs, col(vecCol), spark))
+        .repartition(col("centroid_id")),
+      txn = Option.when(batchId >= 0)(appId -> batchId))
     VectorFunctions.releaseCentroidBroadcast(spark, cs.bc)
-    // data files are fully written; the single-file log append is the commit
-    IndexLog.commit(spark, path, appId, batchId, segment)
   }
 
-  /** Fold committed append segments back into the base corpus — the IVF
-    * index's OPTIMIZE, closing the [[appendToIvfIndex]] maintenance loop:
-    * per-append segments otherwise grow without bound and every
-    * [[ivfTopKFromIndex]] probe pays one directory read PER SEGMENT per
-    * probed bucket (the small-file tax [[graft.merge.ParquetTable.compact]]
-    * exists to kill). Centroids are untouched — compaction changes LAYOUT,
-    * never results (SimilaritySpec pins before == after) — so it composes
-    * with the retrain-rewrite cycle ([[writeIvfIndex]]) rather than
-    * replacing it.
-    *
-    * Protocol: materialize base ∪ committed segments (localCheckpoint — we overwrite the
-    * directory being read), dedup on `idCol` (makes a RETRY after any
-    * crash converge instead of double-folding), dynamic-partition
-    * overwrite of `corpus/`, then truncate the log and drop the segment
-    * dirs. A crash after the corpus rewrite but before the log truncation
-    * leaves segment rows visible TWICE until the compact is retried — a
-    * bounded in-place-rewrite window; readers needing stricter isolation
-    * compact in their maintenance window like every other in-place table
-    * service.
-    * Only the segments captured at entry are retired ([[IndexLog.retire]]):
-    * a segment committed by a concurrent append while the fold ran keeps
-    * both its data and its log row (r16 ADVICE — the previous
-    * whole-directory delete silently dropped it).
-    *
-    * Caller contract (standard for an ANN index): `idCol` is unique across
-    * base + appends, except for byte-identical replays (crash retries),
-    * which the dedup absorbs — same id + same vector lands in the same
-    * bucket, so the dynamic overwrite always rewrites the bucket it
-    * deduped. Appending an EXISTING id with a different vector is an
-    * upsert, which this index does not implement. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      idCol: String = "vec_id"): Unit =
-    compactBucketedIndex(spark, path, "corpus", idCol)
-
-  /** The fold shared by [[compactIvfIndex]] (`corpus/` of a plain IVF
-    * index) and [[compactIvfPqIndex]] (`codes/` of an IVFADC index). */
-  private def compactBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, dataDir: String,
-                                   idCol: String): Unit = {
-    val segs = committedSegments(spark, path)
-    if (segs.isEmpty) return // nothing to fold; no empty rewrite
-    val base = spark.read.parquet(s"$path/$dataDir")
-    val merged = segs.map(s => spark.read.parquet(s"$path/appends/${s._3}"))
-      .foldLeft(base)(_ unionByName _)
-      .dropDuplicates(idCol)
-      .repartition(col("centroid_id"))
-      .localCheckpoint()
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("centroid_id").parquet(s"$path/$dataDir")
-    IndexLog.retire(spark, path, segs)
-    merged.unpersist(blocking = true)
-  }
-
-  /** The probed-bucket scan shared by [[ivfTopKFromIndex]] and
-    * [[ivfPqTopKFromIndex]]: the probe set is bounded (queries × nProbe) —
-    * collect it and list the probed bucket DIRECTORIES explicitly (manual
-    * DPP, same contract as ParquetTable's touched-partition pruning:
-    * immune to partition-column type-inference defeating an isin
-    * pushdown). Visible index = base + COMMITTED append segments (crashed
-    * appends have no log row and are never read); each root is pruned to
-    * its probed bucket directories independently. */
-  private def prunedBucketScan(spark: org.apache.spark.sql.SparkSession,
-                               path: String, dataDir: String,
-                               probes: DataFrame): DataFrame = {
-    val probedIds = probes.select("centroid_id").distinct().collect().map(_.get(0))
-    val base = s"$path/$dataDir"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(base), spark.sparkContext.hadoopConfiguration)
-    val roots = base +: committedSegments(spark, path)
-      .map(s => s"$path/appends/${s._3}")
-    val perRoot = roots.flatMap { root =>
-      val dirs = probedIds.map(v => s"$root/centroid_id=$v")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("basePath", root).parquet(dirs: _*))
-    }
-    require(perRoot.nonEmpty, s"no probed IVF buckets exist under $path")
-    perRoot.reduce(_ unionByName _)
-  }
+  /** Pack the IVF corpus — the index's OPTIMIZE, closing the
+    * [[appendToIvfIndex]] maintenance loop: per-append files otherwise grow
+    * without bound and every [[ivfTopKFromIndex]] probe opens each of them
+    * in every probed bucket. This is the bucket table's
+    * [[graft.merge.ParquetTable.compact]]: one atomic commit that rewrites
+    * each bucket into one file, or no commit when the buckets are already
+    * packed. Centroids are untouched — compaction changes LAYOUT, never
+    * results (SimilaritySpec pins before == after) — so it composes with
+    * the retrain-rewrite cycle ([[writeIvfIndex]]) rather than replacing
+    * it. Rows are not deduplicated: ids are unique per the caller contract
+    * of an ANN index (appending an EXISTING id is an upsert, which this
+    * index does not implement), and a replayed append never commits. */
+  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    bucketTable(spark, path, "corpus").compact()
 
   /** Top-k over a persisted IVF index: probe selection runs on the (tiny)
-    * centroid table, then the corpus scan carries `centroid_id IN (probed)`
-    * — Spark turns it into PartitionFilters, so only the probed bucket
-    * DIRECTORIES are read. The scored scan ends in the bounded TopKAgg. */
+    * centroid table, then only the probed buckets are read
+    * ([[probedBuckets]]). The scored scan ends in the bounded TopKAgg. */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        queries: DataFrame, k: Int, nProbe: Int,
                        corpusId: String = "vec_id", corpusVec: String = "embedding",
                        queryId: String = "query_id", queryVec: String = "embedding"): DataFrame = {
     VectorFunctions.register(spark)
     TopKAgg.register(spark)
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("centroid_id")).collect()
-    val cs = CentroidSet(array(centRows.map(r => lit(r.get(0))): _*),
-      spark.sparkContext.broadcast(centRows.map(_.getSeq[Float](1).toArray)))
-    val probes = queries
-      .select(col(queryId).as("query_id"), col(queryVec).as("qv"))
-      .withColumn("cidx",
-        explode(VectorFunctions.topCentroids(spark, col("qv"), cs.bc, nProbe)))
-      .withColumn("centroid_id", element_at(cs.ids, col("cidx") + 1))
-      .drop("cidx")
-    val bucket = prunedBucketScan(spark, path, "corpus", probes)
-    val scored = broadcast(probes).join(bucket, "centroid_id")
+    val probes = probeSet(readCentroidSet(spark, path), queries, nProbe, queryId, queryVec)
+    val scored = broadcast(probes).join(probedBuckets(spark, path, "corpus", probes),
+        "centroid_id")
       .select(col("query_id"), struct(
         negate(VectorFunctions.cosine(col(corpusVec), col("qv"))).as("negcos"),
         col(corpusId).as("nid")).as("s"))
@@ -642,14 +604,7 @@ object Similarity {
     val cs = centroidSet(corpus, nCentroids, corpusId, corpusVec)
     val assigned = corpus.withColumn("centroid_id",
       nearestCentroidId(cs, col(corpusVec), spark))
-
-    val probes = queries
-      .select(col(queryId).as("query_id"), col(queryVec).as("qv"))
-      .withColumn("cidx",
-        explode(VectorFunctions.topCentroids(spark, col("qv"), cs.bc, nProbe)))
-      .withColumn("centroid_id", element_at(cs.ids, col("cidx") + 1))
-      .drop("cidx")
-
+    val probes = probeSet(cs, queries, nProbe, queryId, queryVec)
     val scored = broadcast(probes).join(assigned, "centroid_id")
       .select(col("query_id"), struct(
         negate(VectorFunctions.cosine(col(corpusVec), col("qv"))).as("negcos"),
@@ -801,10 +756,7 @@ object Similarity {
       .select(col("query_id"), struct(
         VectorFunctions.pqAdcDistance(spark, col("cs"), col("qv"), book.bc).as("d"),
         col("neighbor_id").as("nid")).as("s"))
-    scored.groupBy("query_id").agg(TopKAgg.topK(col("s"), k).as("arr"))
-      .select(col("query_id"), posexplode(col("arr")))
-      .select(col("query_id"), col("col.nid").as("neighbor_id"),
-        col("col.d").as("adc_dist"), (col("pos") + 1).as("rank"))
+    topKMerge(scored, k, col("col.d").as("adc_dist"))
   }
 
   /** Deterministic ±1 Johnson–Lindenstrauss sign matrix (outDim × inDim):
@@ -893,9 +845,9 @@ object Similarity {
     * PQ cuts the bytes-per-scanned-row from dim x 4 to m — at 100 TB the
     * scan this plan does is nProbe/nCentroids x m bytes per vector, the
     * memory-bandwidth operating point every disk-resident IVFADC system
-    * targets. Probe side broadcasts (queries x nProbe rows); the equi-join
-    * on centroid_id reaches the codes table partition-pruned when the codes
-    * are written IVF-partitioned ([[writeIvfIndex]] layout). Ranks order by
+    * targets. Probe side broadcasts (queries x nProbe rows); the persisted
+    * form ([[writeIvfPqIndex]], [[ivfPqTopKFromIndex]]) reads only the
+    * probed buckets' codes off disk. Ranks order by
     * (adc_dist ASC, neighbor_id ASC). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nCentroids: Int, nProbe: Int, m: Int, ksub: Int,
@@ -913,20 +865,12 @@ object Similarity {
       col(corpusId).as("neighbor_id"),
       nearestCentroidId(cs, col(corpusVec), spark).as("centroid_id"),
       VectorFunctions.pqEncode(spark, col(corpusVec), book.bc).as("cs"))
-    val probes = queries
-      .select(col(queryId).as("query_id"), col(queryVec).as("qv"))
-      .withColumn("cidx",
-        explode(VectorFunctions.topCentroids(spark, col("qv"), cs.bc, nProbe)))
-      .withColumn("centroid_id", element_at(cs.ids, col("cidx") + 1))
-      .drop("cidx")
+    val probes = probeSet(cs, queries, nProbe, queryId, queryVec)
     val scored = broadcast(probes).join(codes, "centroid_id")
       .select(col("query_id"), struct(
         VectorFunctions.pqAdcDistance(spark, col("cs"), col("qv"), book.bc).as("d"),
         col("neighbor_id").as("nid")).as("s"))
-    scored.groupBy("query_id").agg(TopKAgg.topK(col("s"), k).as("arr"))
-      .select(col("query_id"), posexplode(col("arr")))
-      .select(col("query_id"), col("col.nid").as("neighbor_id"),
-        col("col.d").as("adc_dist"), (col("pos") + 1).as("rank"))
+    topKMerge(scored, k, col("col.d").as("adc_dist"))
   }
 
   // -------------------------------------------------------------------------
@@ -936,7 +880,7 @@ object Similarity {
   /** Materialize the IVFADC artifact [[ivfPqTopK]] otherwise rebuilds per
     * call: `path/centroids` (the coarse quantizer, [[writeIvfIndex]]'s
     * format), `path/codebook` (m×ksub PQ codewords — the fine quantizer),
-    * and `path/codes` — (id, codes) HIVE-PARTITIONED BY centroid_id, so a
+    * and `path/codes` — (id, codes, centroid_id) as a [[bucketTable]], so a
     * probe reads nProbe/nCentroids of the CODES off disk: the scan is
     * nProbe/nCentroids × m bytes per vector, the disk-resident IVFADC
     * operating point, with the raw vector column never stored at all.
@@ -945,46 +889,23 @@ object Similarity {
     * batch against different codewords than the index was built with would
     * silently corrupt every ADC distance. Deterministic first-k quantizers
     * by default (`trainIters > 0` switches the coarse quantizer to Lloyd
-    * rounds, same trade as [[writeIvfIndex]]). */
+    * rounds, same trade as [[writeIvfIndex]]). A rebuild commits the codes
+    * like [[writeIvfIndex]] commits the corpus, then rewrites both
+    * quantizer tables. */
   def writeIvfPqIndex(corpus: DataFrame, nCentroids: Int, m: Int, ksub: Int,
                       path: String, idCol: String = "vec_id",
                       vecCol: String = "embedding",
                       trainIters: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    VectorFunctions.register(spark)
-    // full rebuild supersedes append segments — stale log rows would union
-    // old codes over the rewritten base
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
-    Seq(s"$path/append_log", s"$path/append_log.tmp", s"$path/appends")
-      .foreach { d => fs.delete(new org.apache.hadoop.fs.Path(d), true) }
-    val (centIds, centVecs): (Array[Any], Array[Array[Float]]) =
-      if (trainIters > 0) {
-        val cents = trainCentroids(corpus, nCentroids, trainIters, idCol, vecCol)
-        (cents.indices.map(_.toLong.asInstanceOf[Any]).toArray, cents)
-      } else {
-        val rows = corpus.orderBy(col(idCol)).limit(nCentroids)
-          .select(col(idCol), col(vecCol)).collect()
-        (rows.map(_.get(0)), rows.map(_.getSeq[Float](1).toArray))
-      }
-    val cs = CentroidSet(array(centIds.map(lit): _*),
-      spark.sparkContext.broadcast(centVecs))
     val book = pqCodebook(corpus, m, ksub, idCol, vecCol)
-    // one zero-shuffle projection carries both quantizers; the only data
-    // movement is the bucket-key repartition that bounds per-bucket files
-    corpus.select(col(idCol),
-        nearestCentroidId(cs, col(vecCol), spark).as("centroid_id"),
-        VectorFunctions.pqEncode(spark, col(vecCol), book.bc).as("codes"))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    val centRows = centIds.zip(centVecs).map { case (id, v) =>
-      org.apache.spark.sql.Row(id, v.toSeq)
+    buildIndex(corpus, nCentroids, path, idCol, vecCol, trainIters) { cs =>
+      // one zero-shuffle projection carries both quantizers; the only data
+      // movement is the bucket-key repartition that bounds per-bucket files
+      bucketTable(spark, path, "codes").overwrite(corpus.select(col(idCol),
+          nearestCentroidId(cs, col(vecCol), spark).as("centroid_id"),
+          VectorFunctions.pqEncode(spark, col(vecCol), book.bc).as("codes"))
+        .repartition(col("centroid_id")))
     }
-    spark.createDataFrame(java.util.Arrays.asList(centRows: _*),
-        corpus.select(idCol, vecCol).schema)
-      .withColumnRenamed(idCol, "centroid_id").withColumnRenamed(vecCol, "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     val books = book.bc.value
     val cbRows = for (s <- 0 until m; c <- 0 until ksub)
       yield org.apache.spark.sql.Row(s, c, books(s)(c).toSeq)
@@ -998,7 +919,6 @@ object Similarity {
             org.apache.spark.sql.types.ArrayType(
               org.apache.spark.sql.types.FloatType)))))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    VectorFunctions.releaseCentroidBroadcast(spark, cs.bc)
     VectorFunctions.releasePqBroadcast(spark, book.bc)
   }
 
@@ -1019,61 +939,42 @@ object Similarity {
       spark.sparkContext.broadcast(books))
   }
 
-  private def readCentroidSet(spark: org.apache.spark.sql.SparkSession,
-                              path: String): CentroidSet = {
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("centroid_id")).collect()
-    CentroidSet(array(centRows.map(r => lit(r.get(0))): _*),
-      spark.sparkContext.broadcast(centRows.map(_.getSeq[Float](1).toArray)))
-  }
-
   /** Append a batch into a persisted IVFADC index: assigned AND encoded
-    * against the index's own pinned quantizers, written as a fresh
-    * segment, committed via the [[IndexLog]] two-step — crash-safe,
-    * exactly-once under foreachBatch replay, O(batch) cost
-    * ([[Similarity.appendToIvfIndex]]'s contract with the PQ encode in the
-    * same zero-shuffle projection). */
+    * against the index's own pinned quantizers and appended to the codes
+    * table — crash-safe, exactly-once under foreachBatch replay, O(batch)
+    * cost ([[Similarity.appendToIvfIndex]]'s contract with the PQ encode in
+    * the same zero-shuffle projection). */
   def appendToIvfPqIndex(batch: DataFrame, path: String,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding",
                          appId: String = "graft",
                          batchId: Long = -1L): Unit = {
     val spark = batch.sparkSession
-    if (batchId >= 0 &&
-        committedSegments(spark, path).exists(s => s._1 == appId && s._2 == batchId))
-      return // replayed batch: already committed, exactly-once no-op
     VectorFunctions.register(spark)
     val cs = readCentroidSet(spark, path)
     val book = readPqBook(spark, path)
-    val segment =
-      if (batchId >= 0) s"$appId-$batchId"
-      else s"$appId-u${java.util.UUID.randomUUID().toString.take(8)}"
-    batch.select(col(idCol),
+    bucketTable(spark, path, "codes").append(batch.select(col(idCol),
         nearestCentroidId(cs, col(vecCol), spark).as("centroid_id"),
         VectorFunctions.pqEncode(spark, col(vecCol), book.bc).as("codes"))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(IndexLog.segmentDir(path, segment))
+      .repartition(col("centroid_id")),
+      txn = Option.when(batchId >= 0)(appId -> batchId))
     VectorFunctions.releaseCentroidBroadcast(spark, cs.bc)
     VectorFunctions.releasePqBroadcast(spark, book.bc)
-    IndexLog.commit(spark, path, appId, batchId, segment)
   }
 
-  /** Fold committed IVFADC append segments into the bucketed codes base —
-    * [[compactIvfIndex]]'s protocol on the `codes/` artifact (id-dedup
-    * crash-retry convergence, only captured segments retired, results
-    * provably unchanged: the q323 gate and SimilaritySpec pin it). */
+  /** Pack the IVFADC codes — [[compactIvfIndex]] on the `codes/` table:
+    * one atomic commit, results unchanged (the q323 gate and
+    * SimilaritySpec pin it). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String, idCol: String = "vec_id"): Unit =
-    compactBucketedIndex(spark, path, "codes", idCol)
+                        path: String): Unit =
+    bucketTable(spark, path, "codes").compact()
 
   /** Top-k over the persisted IVFADC index: probe selection on the tiny
-    * centroid table, a directory-pruned scan of ONLY the probed codes
-    * buckets (base + committed segments), ADC scoring against the pinned
-    * codebook, bounded TopKAgg. Matches [[ivfPqTopK]] bit-for-bit when
-    * built from the same corpus — the persisted artifact changes where
-    * the quantizers live, never the math. Ranks order by
-    * (adc_dist ASC, neighbor_id ASC). */
+    * centroid table, a scan of ONLY the probed codes buckets
+    * ([[probedBuckets]]), ADC scoring against the pinned codebook, bounded
+    * TopKAgg. Matches [[ivfPqTopK]] bit-for-bit when built from the same
+    * corpus — the persisted artifact changes where the quantizers live,
+    * never the math. Ranks order by (adc_dist ASC, neighbor_id ASC). */
   def ivfPqTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: DataFrame, k: Int, nProbe: Int,
                          corpusId: String = "vec_id",
@@ -1081,24 +982,15 @@ object Similarity {
                          queryVec: String = "embedding"): DataFrame = {
     VectorFunctions.register(spark)
     TopKAgg.register(spark)
-    val cs = readCentroidSet(spark, path)
     val book = readPqBook(spark, path)
-    val probes = queries
-      .select(col(queryId).as("query_id"), col(queryVec).as("qv"))
-      .withColumn("cidx",
-        explode(VectorFunctions.topCentroids(spark, col("qv"), cs.bc, nProbe)))
-      .withColumn("centroid_id", element_at(cs.ids, col("cidx") + 1))
-      .drop("cidx")
-    val codes = prunedBucketScan(spark, path, "codes", probes)
-    val scored = broadcast(probes).join(codes, "centroid_id")
+    val probes = probeSet(readCentroidSet(spark, path), queries, nProbe, queryId, queryVec)
+    val scored = broadcast(probes).join(probedBuckets(spark, path, "codes", probes),
+        "centroid_id")
       .select(col("query_id"), struct(
         VectorFunctions.pqAdcDistance(spark, col("codes"), col("qv"), book.bc)
           .as("d"),
         col(corpusId).as("nid")).as("s"))
-    scored.groupBy("query_id").agg(TopKAgg.topK(col("s"), k).as("arr"))
-      .select(col("query_id"), posexplode(col("arr")))
-      .select(col("query_id"), col("col.nid").as("neighbor_id"),
-        col("col.d").as("adc_dist"), (col("pos") + 1).as("rank"))
+    topKMerge(scored, k, col("col.d").as("adc_dist"))
   }
 
   /** Sign-bit binary signature of an embedding: bit i of word w is set iff

@@ -176,6 +176,10 @@ class ParquetTableSpec extends SparkSpec {
     assert(t.liveFiles.size == 2)
     assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).sorted
       .toSeq == before.toSeq)
+    // at that floor the table is packed: a re-compact commits nothing
+    val packed = t.latestVersion
+    t.compact()
+    assert(t.latestVersion == packed, "re-compact of a packed partitioned table committed")
     // replay protection rides the same txn record as every write
     t.append(Seq((99L, "a")).toDF("id", "p").repartition(3))
     val v = t.latestVersion

@@ -611,26 +611,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs() == before)
   }
 
-  test("IndexLog.retire keeps a segment committed after the fold list was captured") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ix_ret").toString
-    // the two-step contract: write a segment's files, then its log row
-    def append(batchId: Long): Unit = {
-      Seq(batchId).toDF("id").write.parquet(IndexLog.segmentDir(dir, s"spec-$batchId"))
-      IndexLog.commit(spark, dir, "spec", batchId, s"spec-$batchId")
-    }
-    append(1L)
-    // capture the fold list, then a concurrent append commits segment 2
-    val folded = IndexLog.committed(spark, dir)
-    append(2L)
-    IndexLog.retire(spark, dir, folded)
-    // the late segment survives with data + log row; the folded one is gone
-    val left = IndexLog.committed(spark, dir)
-    assert(left.map(_._3) == Seq("spec-2"), s"survivors: $left")
-    assert(new java.io.File(IndexLog.segmentDir(dir, "spec-2")).exists())
-    assert(!new java.io.File(IndexLog.segmentDir(dir, "spec-1")).exists())
-  }
-
   test("incrementalHamming128NearDups: banded batch×index equals brute-force cross pairs; budget refusal; no self-pairing of either side") {
     import spark.implicits._
     // signatures engineered around the 5-band boundaries (26/26/26/25/25):

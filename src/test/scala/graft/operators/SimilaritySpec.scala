@@ -61,13 +61,17 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** The bucket table (`corpus` or `codes`) of the persisted index at `dir`. */
+  private def buckets(dir: String, table: String) =
+    new graft.merge.ParquetTable(spark, s"$dir/$table", Seq("centroid_id"))
+
   test("persisted IVF index: full-probe matches brute force; probes read only their buckets") {
     val dir = tmpDir("ivf_index")
     Similarity.writeIvfIndex(corpus, nCentroids = 3, dir)
-    // bucket directories exist on disk (hive partition layout)
-    val buckets = new java.io.File(s"$dir/corpus").listFiles()
-      .filter(_.getName.startsWith("centroid_id=")).map(_.getName).toSet
-    assert(buckets.nonEmpty && buckets.forall(_.matches("centroid_id=\\d+")))
+    // the corpus table is partitioned by bucket id
+    val corpusTable = buckets(dir, "corpus")
+    val ids = corpusTable.liveFiles.map(_.partitionValues("centroid_id")).toSet
+    assert(ids.nonEmpty && ids.forall(_.matches("\\d+")))
 
     val queries = corpus.filter($"vec_id" < 2L)
       .select($"vec_id".as("query_id"), $"embedding")
@@ -78,16 +82,22 @@ class SimilaritySpec extends SparkSpec {
     assert(rowsOf(bf) == rowsOf(idx))
 
     // nProbe=1 for query 0 -> only bucket c0 = {0, 4, 5} is even READ
-    val one = Similarity.ivfTopKFromIndex(spark,
-        dir, queries.filter($"query_id" === 0L), 5, nProbe = 1)
-      .select("neighbor_id").as[Long].collect().toSet
-    assert(one == Set(0L, 4L, 5L), s"probed bucket mismatch: $one")
-    // and the scan's file listing is bounded to the probed directory
-    val plan = Similarity.ivfTopKFromIndex(spark,
+    val probe = Similarity.ivfTopKFromIndex(spark,
       dir, queries.filter($"query_id" === 0L), 5, nProbe = 1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("centroid_id=1") && !plan.contains("centroid_id=2"),
-      s"unprobed buckets in scan:\n$plan")
+    val one = probe.select("neighbor_id").as[Long].collect().toSet
+    assert(one == Set(0L, 4L, 5L), s"probed bucket mismatch: $one")
+    // and the executed scan selected exactly bucket 0's live files
+    probe.collect()
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(probe.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+    assert(scans.size == 1, probe.queryExecution.executedPlan.toString)
+    val read = scans.head.selectedPartitions.filePartitionIterator
+      .flatMap(_.files.map(_.getPath.toUri.getPath)).toSet
+    val c0 = corpusTable.liveFiles.filter(_.partitionValues("centroid_id") == "0")
+      .map(f => java.nio.file.Paths.get(dir, "corpus", f.path).toString).toSet
+    assert(c0.nonEmpty && read == c0, s"scan read $read, bucket 0 holds $c0")
   }
 
   test("trained IVF index (Lloyd quantizer): search agrees with the index it wrote") {
@@ -99,7 +109,7 @@ class SimilaritySpec extends SparkSpec {
     assert(cents.select("centroid_id").as[Long].collect().sorted.sameElements(
       Array(0L, 1L, 2L)))
     // every corpus vector landed in exactly one bucket (no loss, no dup)
-    val indexed = spark.read.parquet(s"$dir/corpus")
+    val indexed = buckets(dir, "corpus").read
     assert(indexed.count() == 6)
     assert(indexed.select("vec_id").distinct().count() == 6)
     // full-probe search over the trained index == brute force: the reader
@@ -128,6 +138,7 @@ class SimilaritySpec extends SparkSpec {
     val rest = corpus.filter($"vec_id" >= 3L)
     val incDir = tmpDir("ivf_inc")
     Similarity.writeIvfIndex(first, nCentroids = 3, incDir)
+    val built = buckets(incDir, "corpus").liveFiles.map(_.path).toSet
     Similarity.appendToIvfIndex(rest, incDir)
     val oneDir = tmpDir("ivf_oneshot")
     Similarity.writeIvfIndex(corpus, nCentroids = 3, oneDir)
@@ -139,41 +150,44 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id", "rank")
     assert(rowsOf(inc) == rowsOf(one))
     // the append only ADDED files — the initial buckets were not rewritten
-    val files = new java.io.File(s"$incDir/corpus").listFiles()
-      .filter(_.getName.startsWith("centroid_id="))
-    assert(files.nonEmpty)
+    val live = buckets(incDir, "corpus").liveFiles.map(_.path).toSet
+    assert(built.subsetOf(live) && live.size > built.size)
   }
 
   test("appendToIvfIndex: replayed (appId,batchId) is a no-op; crashed segment invisible") {
     val dir = tmpDir("ivf_txn")
     Similarity.writeIvfIndex(corpus.filter($"vec_id" < 3L), nCentroids = 3, dir)
     val rest = corpus.filter($"vec_id" >= 3L)
-    Similarity.appendToIvfIndex(rest, dir, appId = "app", batchId = 7L)
     val queries = corpus.filter($"vec_id" === 0L)
       .select($"vec_id".as("query_id"), $"embedding")
     def visible() = Similarity
       .ivfTopKFromIndex(spark, dir, queries, k = 10, nProbe = 3)
       .select("neighbor_id").as[Long].collect().toSeq.sorted
+    // the append of (app, 7) crashes between its data write and its commit
+    val t = buckets(dir, "corpus")
+    val v = t.latestVersion
+    t.onPreCommit = () => throw new RuntimeException("injected crash")
+    intercept[RuntimeException](t.append(rest.withColumn("centroid_id", lit(0L)),
+      txn = Some("app" -> 7L)))
+    assert(buckets(dir, "corpus").latestVersion == v, "crashed append committed")
+    assert(visible() == Seq(0L, 1L, 2L), "crashed append visible")
+    // the redelivery lands once
+    Similarity.appendToIvfIndex(rest, dir, appId = "app", batchId = 7L)
     val once = visible()
-    assert(once == once.distinct, s"duplicate neighbors after append: $once")
-    assert(once.toSet == Set(0L, 1L, 2L, 3L, 4L, 5L))
+    assert(once == Seq(0L, 1L, 2L, 3L, 4L, 5L))
     // replay the SAME (appId,batchId): exactly-once, nothing duplicated
     Similarity.appendToIvfIndex(rest, dir, appId = "app", batchId = 7L)
     assert(visible() == once)
-    // a crashed append = segment data on disk WITHOUT a commit-log row —
-    // readers must not see it
-    rest.withColumn("centroid_id", lit(0L))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$dir/appends/app-crashed")
-    assert(visible() == once)
-    // a full rebuild folds everything in and truncates the log: no
-    // stale-segment double counting on top of the rewritten base
+    // a full rebuild replaces every earlier file in one commit, and keeps
+    // the txn record: a late replay of batch 7 is still a no-op
+    val before = buckets(dir, "corpus").liveFiles.map(_.path).toSet
     Similarity.writeIvfIndex(corpus, nCentroids = 3, dir)
+    assert(buckets(dir, "corpus").liveFiles.forall(f => !before(f.path)))
+    Similarity.appendToIvfIndex(rest, dir, appId = "app", batchId = 7L)
     assert(visible() == once)
-    assert(!new java.io.File(s"$dir/append_log").exists())
   }
 
-  test("compactIvfIndex: results identical before/after, segments folded, idempotent") {
+  test("compactIvfIndex: results identical before/after, one file per bucket, crash-safe, idempotent") {
     val dir = tmpDir("ivf_compact")
     Similarity.writeIvfIndex(corpus.filter($"vec_id" < 3L), nCentroids = 3, dir)
     Similarity.appendToIvfIndex(corpus.filter($"vec_id" >= 3L && $"vec_id" < 5L),
@@ -185,25 +199,26 @@ class SimilaritySpec extends SparkSpec {
       .ivfTopKFromIndex(spark, dir, queries, k = 4, nProbe = 3)
       .select("query_id", "neighbor_id", "rank"))
     val before = topk()
+    val t = buckets(dir, "corpus")
+    val appended = t.liveFiles
+    val v = t.latestVersion
+    // a compaction that crashes before its commit changes nothing
+    t.onPreCommit = () => throw new RuntimeException("injected crash")
+    intercept[RuntimeException](t.compact())
+    assert(buckets(dir, "corpus").latestVersion == v, "crashed compact committed")
+    assert(topk() == before)
     Similarity.compactIvfIndex(spark, dir)
-    // layout: segments and log gone, everything lives in the base buckets
-    assert(!new java.io.File(s"$dir/appends").exists())
-    assert(!new java.io.File(s"$dir/append_log").exists())
+    // layout: one compaction commit replaced every file; one file per bucket
+    val packed = buckets(dir, "corpus")
+    assert(packed.lastMetrics.contains("filesBefore"))
+    assert(packed.liveFiles.forall(f => !appended.map(_.path).contains(f.path)))
+    assert(packed.liveFiles.size == appended.map(_.partitionValues).distinct.size)
     // results: compaction changes layout, never answers
     assert(topk() == before)
-    // idempotent: a second compact is a no-op (no segments to fold)
+    // idempotent: a second compact finds the buckets packed and commits nothing
     Similarity.compactIvfIndex(spark, dir)
+    assert(packed.latestVersion == v + 1)
     assert(topk() == before)
-    // a crash BETWEEN corpus rewrite and log truncation = segments visible
-    // twice; the retry's dropDuplicates converges back to one copy
-    val seg = corpus.filter($"vec_id" >= 5L)
-    Similarity.appendToIvfIndex(seg, dir, appId = "c", batchId = 3L)
-    Similarity.appendToIvfIndex(seg, dir, appId = "c", batchId = 4L) // same rows twice
-    Similarity.compactIvfIndex(spark, dir)
-    assert(topk() == before)
-    val ids = spark.read.parquet(s"$dir/corpus").select("vec_id")
-      .as[Long].collect().toSeq
-    assert(ids.sorted == ids.distinct.sorted, "duplicate rows survived compact")
   }
 
   test("persisted IVFADC index: full-build search equals in-memory ivfPqTopK") {
@@ -229,36 +244,46 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding")
     def topk() = rowsOf(Similarity.ivfPqTopKFromIndex(spark, dir, queries,
       k = 4, nProbe = 4).select("query_id", "neighbor_id", "rank"))
+    def codeIds() = buckets(dir, "codes").read.select("vec_id").as[Long]
+      .collect().toSeq.sorted
     val baseOnly = topk()
-    // a CRASHED append: segment data without a log row is invisible
+    // the append of (s, 1) crashes between its data write and its commit
     graft.functions.VectorFunctions.register(spark)
-    val cs = Similarity.readPqBook(spark, dir)
-    e.filter($"vec_id" >= 7).select($"vec_id",
-        lit(0L).as("centroid_id"),
-        graft.functions.VectorFunctions.pqEncode(spark, $"embedding", cs.bc)
-          .as("codes"))
-      .write.partitionBy("centroid_id").parquet(s"$dir/appends/crashed-seg")
-    assert(topk() == baseOnly, "uncommitted segment must stay invisible")
-    // committed appends serve; the oracle shape is ivfPqTopK over the full
+    val book = Similarity.readPqBook(spark, dir)
+    val t = buckets(dir, "codes")
+    val v0 = t.latestVersion
+    t.onPreCommit = () => throw new RuntimeException("injected crash")
+    intercept[RuntimeException](t.append(e.filter($"vec_id" >= 7).select($"vec_id",
+        graft.functions.VectorFunctions.pqEncode(spark, $"embedding", book.bc)
+          .as("codes"), lit(0L).as("centroid_id")),
+      txn = Some("s" -> 1L)))
+    assert(buckets(dir, "codes").latestVersion == v0, "crashed append committed")
+    assert(topk() == baseOnly, "uncommitted append must stay invisible")
+    // the redelivery serves; the oracle shape is ivfPqTopK over the full
     // set with quantizers pinned to the base (q132's restricted-pool form)
     Similarity.appendToIvfPqIndex(e.filter($"vec_id" >= 7), dir,
       appId = "s", batchId = 1L)
     val withAppend = topk()
     assert(withAppend != baseOnly, "append must change the served set")
+    assert(codeIds() == (0L to 9L))
     // replayed (appId, batchId): exactly-once no-op
     Similarity.appendToIvfPqIndex(e.filter($"vec_id" >= 7), dir,
       appId = "s", batchId = 1L)
     assert(topk() == withAppend)
-    Similarity.compactIvfPqIndex(spark, dir)
-    assert(!new java.io.File(s"$dir/appends").exists())
-    assert(!new java.io.File(s"$dir/append_log").exists())
-    assert(topk() == withAppend, "compaction must not change results")
-    // idempotent retry + duplicate-segment convergence via id-dedup
-    Similarity.compactIvfPqIndex(spark, dir)
+    assert(codeIds() == (0L to 9L))
+    // a compaction that crashes before its commit changes nothing
+    val v = t.latestVersion
+    intercept[RuntimeException](t.compact())
+    assert(buckets(dir, "codes").latestVersion == v, "crashed compact committed")
     assert(topk() == withAppend)
-    val ids = spark.read.parquet(s"$dir/codes").select("vec_id")
-      .as[Long].collect().toSeq
-    assert(ids.sorted == ids.distinct.sorted, "duplicate codes rows")
+    Similarity.compactIvfPqIndex(spark, dir)
+    val packed = buckets(dir, "codes")
+    assert(packed.latestVersion == v + 1 && packed.lastMetrics.contains("filesBefore"))
+    assert(topk() == withAppend, "compaction must not change results")
+    // idempotent: a second compact commits nothing
+    Similarity.compactIvfPqIndex(spark, dir)
+    assert(packed.latestVersion == v + 1)
+    assert(topk() == withAppend)
   }
 
   test("hardNegatives never returns a same-label neighbor and stays bounded") {
