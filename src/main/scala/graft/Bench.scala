@@ -1,130 +1,81 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+
+import graft.tools.Harness
+
+/** Steady-state timing of SparkEntry.queries into the noop sink. Optional
+  * args bench only the named queries, and scope the warmup to them.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_BENCH_PASSES (default 3),
+  * plus the harness's SPARK_GRAFT_CPUS and warmup dirs. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC like graft.Verify: Tables.widen's TIMESTAMP_NTZ cast and the
-      // date-bucketing ops must group identically in bench and gate runs
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup at the smallest SF: pays JIT/codegen compilation once so
-    // the timed numbers below reflect steady-state executor throughput.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    // Drop leftover localCheckpoint blocks between queries — accumulated
-    // blocks from 40+ queries create memory pressure that bleeds one query's
-    // cost into the next. BLOCKING unpersist: the async variant defers the
-    // actual block removal onto the next query's TIMED window, which is
-    // exactly the co-scheduling noise that made r11's all-at-once numbers
-    // show phantom 2-3.5x regressions the one-at-a-time quiet anchor
-    // disproved. Cleanup cost must land here, between timings.
-    def dropPersistedBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
-    // Between QUERIES (not runs): ContextCleaner only reclaims dead
-    // broadcasts/accumulators when a JVM GC notices them — on a 48g heap
-    // GC can be hundreds of queries away, so broadcast blocks ratchet up
-    // in the block manager and LATE queries pay the storage-eviction tax
-    // inside their timed windows (the r11/r12 late-alphabet cluster:
-    // q47/q270-q277 at 4-13x their isolated cost, reproduced fast when
-    // run alone). Nudge a full GC when the heap passes 60% AND every
-    // 16th query regardless (~19 GCs per sweep, ~1s each — bounded,
-    // untimed; the 48-query cadence still left 1.5-2x residual
-    // inflation on the heaviest late-sweep queries).
-    var sinceGc = 0
-    def quiesce(): Unit = {
-      dropPersistedBlocks()
-      val rt = Runtime.getRuntime
-      sinceGc += 1
-      if (sinceGc >= 16 ||
-          rt.totalMemory - rt.freeMemory > rt.maxMemory / 10 * 6) {
-        System.gc()
-        sinceGc = 0
-      }
-    }
-    // Optional args = bench only the named queries (iteration aid). A typo
-    // must fail loudly — silently benching a partial set reports a
-    // misleading total.
-    val unknown = args.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.mkString(", ")} — known: " +
-        SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    // Warm only what will be timed: for the full sweep that is everything,
-    // but a targeted re-bench must not pay the full-surface warmup (~10 min
-    // of fixed cost that dominated the storm-dodging passes this round).
-    selected.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    dropPersistedBlocks()
-    // Second, targeted warmup: the interpreted higher-order-function paths
-    // (shingling/minhash/simhash) only reach C2-compiled steady state after
-    // ~10^5 inner-loop iterations — the tiny first-pass corpus isn't enough.
-    // Always runs (cheap, 5 queries at sf0.01): the HOF expression paths are
-    // shared by many timed queries beyond the five named here.
-    val hofHeavy = Seq("q19_minhash_sig", "q20_minhash_lsh_pairs", "q21_simhash",
-      "q22_ngram_jaccard", "q38_simhash_neardups")
-    val warm2 = sys.env.getOrElse("SPARK_GRAFT_WARMUP2_DIR", "/root/testdata/sf0.01")
-    hofHeavy.foreach { n =>
-      try SparkEntry.queries(n)(spark, warm2).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      dropPersistedBlocks()
-    }
-    // Min of N timed runs per query: the minimum is robust against external
-    // load spikes on a shared box (observed 3-5x swings run-to-run).
-    // SEMANTIC NOTE (r13+): RUNS multiplies with PASSES below — total
-    // samples per query = RUNS x PASSES. The default moved from 3 runs x
-    // 1 pass to 1 run x 3 passes (same total work, better tails under
-    // episodic load); a script still pinning SPARK_GRAFT_BENCH_RUNS=3
-    // without touching PASSES now takes 9 samples per query (~3x bench
-    // time) — set SPARK_GRAFT_BENCH_PASSES=1 to reproduce the old shape.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt
-    require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    // Pass interleaving (SPARK_GRAFT_BENCH_PASSES): with all samples of a
-    // query CONSECUTIVE, a multi-minute external load storm poisons every
-    // one of them — min-of-N defends against per-run spikes, not episodes
-    // (r13 observed 10-minute load-15 storms that put 0.3 s queries at
-    // 25 s across all three consecutive runs). P passes over the whole set
-    // re-sample each query in windows a full sweep apart; the reported
-    // number is the min across passes of the per-pass min-of-N. Defaults
-    // are 3 passes x 1 run — the same total work as the old 1 pass x 3
-    // runs, with a far better tail under episodic load.
+    // Pass interleaving: with all samples of a query CONSECUTIVE, a
+    // multi-minute external load storm poisons every one of them (r13
+    // observed 10-minute load-15 storms that put 0.3 s queries at 25 s).
+    // P passes over the whole set re-sample each query in windows a full
+    // sweep apart; the reported number is the min across passes.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // passes=0 would make the reduce below throw a bare
     // UnsupportedOperationException("empty.reduceLeft") — fail with a
     // message that names the knob instead.
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
+    val selected = Harness.select(SparkEntry.queries, args.toSeq).sortBy(_._1)
+    val h = Harness()
+    h.warmup(selected)
+    // Between queries: ContextCleaner only reclaims dead broadcasts and
+    // accumulators when a JVM GC notices them — on a 48g heap GC can be
+    // hundreds of queries away, so broadcast blocks ratchet up in the block
+    // manager and LATE queries pay the storage-eviction tax inside their
+    // timed windows (the r11/r12 late-alphabet cluster: q47/q270-q277 at
+    // 4-13x their isolated cost, reproduced fast when run alone). Nudge a
+    // full GC when the heap passes 60% AND every 16th query regardless
+    // (~19 GCs per sweep, ~1s each — bounded, untimed; a 48-query cadence
+    // still left 1.5-2x residual inflation on the heaviest late queries).
+    var sinceGc = 0
+    def quiesce(): Unit = {
+      h.quiesce()
+      val rt = Runtime.getRuntime
+      sinceGc += 1
+      if (sinceGc >= 16 || rt.totalMemory - rt.freeMemory > rt.maxMemory / 10 * 6) {
+        System.gc()
+        sinceGc = 0
+      }
+    }
     def onePass(): Map[String, Double] =
-      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          // noop sink: forces full evaluation of EVERY output column
-          // (count() would let Catalyst prune expensive projections away)
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      selected.map { case (name, fn) =>
+        val dt = h.measure(name) {
+          try Harness.noop(fn(h.spark, sfDir))
           catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-          val dt = (System.nanoTime() - t0) / 1e9
-          dropPersistedBlocks()
-          dt
-        }
+        }.seconds
         quiesce()
-        name -> times.min
+        name -> dt
       }.toMap
     val results = (1 to passes).map(_ => onePass())
       .reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
+    val (line, record) = report(results, sfDir)
+    // Full-precision, full-name record → file (committed as the round's
+    // quiet-box anchor; survives any log truncation).
+    Files.writeString(Paths.get("bench_last.json"), record)
+    println(line)
+    h.spark.stop()
+  }
+
+  /** The stdout line and the `bench_last.json` record for per-query seconds.
+    *
+    * The line is parsed from a bounded log tail (last ~2000 chars) by bench
+    * consumers, so it must stay short: query keys are the qNNN
+    * prefix, timings rounded to at most 3 decimals. 144 full-name
+    * full-precision entries are ~5 KB and get truncated mid-line — that is
+    * exactly the r1-r7 "parsed": null failure. */
+  def report(results: Map[String, Double], sfDir: String): (String, String) = {
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // Machinery split (r15): the streaming replay gates spend ~3 s each
-    // on FIXED harness cost (chunk write, cold stream start) at any SF;
-    // reporting their subtotal keeps round-over-round totals comparable
-    // as operator measurements.
+    // Machinery split (r15): the streaming replay gates spend ~3 s each on
+    // FIXED harness cost (chunk write, cold stream start) at any SF;
+    // reporting their subtotal keeps round-over-round totals comparable as
+    // operator measurements.
     val machNames = results.keySet.intersect(SparkEntry.machineryQueries)
     val machTotal = machNames.toSeq.map(results).sum
     // FULL names here: this list lands in the full-name file record and
@@ -132,63 +83,47 @@ object Bench {
     // stdout line abbreviates)
     val machJson = machNames.toSeq.sorted
       .map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    // Full-precision, full-name record → file (committed as the round's
-    // quiet-box anchor; survives any log truncation).
     val qsFull = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last.json"),
+    val record =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
         s""""machinery_total":$machTotal,"machinery_queries":$machJson,""" +
-        s""""sf":"$sfDir"}""" + "\n")
-    // Stdout line is what the per-round harness parses from a bounded log
-    // tail (last ~2000 chars), so it must stay short: query keys are the
-    // qNNN prefix, timings rounded to 1 ms. 144 full-name full-precision
-    // entries are ~5 KB and get truncated mid-line — that is exactly the
-    // r1-r7 "parsed": null failure.
-    def render(decimals: Int): String = {
-      // trailing-zero trim ("0.50"->"0.5", "1.00"->"1"): worth ~1 char on
-      // ~half the entries, which is what keeps 161 queries at 2-decimal
-      // resolution inside the tail budget
-      def fmt(v: Double): String = {
-        // Locale.ROOT: a comma-decimal default locale (de_DE) would emit
-        // "1,234" and break the JSON this line exists to keep parseable
-        val s = String.format(java.util.Locale.ROOT, s"%.${decimals}f",
-          Double.box(v))
-        if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
-        else s
-      }
-      val qs = results.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
-        s""""mach":${fmt(machTotal)},"sf":"$sfDir"}"""
+        s""""sf":"$sfDir"}""" + "\n"
+    // Trailing-zero trim ("0.50"->"0.5", "1.00"->"1"): worth ~1 char on
+    // ~half the entries, which is what keeps 161 queries at 2-decimal
+    // resolution inside the tail budget. Locale.ROOT: a comma-decimal
+    // default locale (de_DE) would emit "1,234" and break the JSON this
+    // line exists to keep parseable.
+    def fmt(v: Double, decimals: Int): String = {
+      val s = String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+      if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
+      else s
     }
+    def qs(entries: Seq[(String, Double)], decimals: Int): String =
+      entries.sortBy(_._1)
+        .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v, decimals) }
+        .mkString("{", ",", "}")
+    def render(decimals: Int): String =
+      s"""{"metric":"total","value":${fmt(total, decimals)},"unit":"sec",""" +
+        s""""queries":${qs(results.toSeq, decimals)},""" +
+        s""""mach":${fmt(machTotal, decimals)},"sf":"$sfDir"}"""
     // The constraint: this line plus sbt's trailing "[success] Total time:
-    // ..." line (~75 chars) must fit the harness's 2000-char log tail.
-    // 1900 leaves that margin while degrading precision as late as possible.
+    // ..." line (~75 chars) must fit a 2000-char log tail. 1900
+    // leaves that margin while degrading precision as late as possible.
     // Past ~180 queries even 1-decimal full coverage overflows; rather than
-    // the old empty-map fallback (which silently discarded every per-query
-    // number), keep the SLOWEST prefix that fits at 2-decimal resolution
-    // and say how many fast queries were dropped — the heavy tail is the
-    // signal a bench consumer reads, and the omission is explicit.
-    def renderTop(keep: Int): String = {
-      def fmt(v: Double): String = {
-        val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-        if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
-        else s
-      }
-      val top = results.toSeq.sortBy(-_._2).take(keep).sortBy(_._1)
-        .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$top,""" +
+    // an empty map (which would silently discard every per-query number),
+    // keep the SLOWEST prefix that fits at 2-decimal resolution and say how
+    // many fast queries were dropped — the heavy tail is the signal a bench
+    // consumer reads, and the omission is explicit.
+    def renderTop(keep: Int): String =
+      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec",""" +
+        s""""queries":${qs(results.toSeq.sortBy(-_._2).take(keep), 2)},""" +
         s""""queries_omitted":${results.size - math.min(keep, results.size)},""" +
-        s""""mach":${fmt(machTotal)},"sf":"$sfDir"}"""
-    }
+        s""""mach":${fmt(machTotal, 2)},"sf":"$sfDir"}"""
     val line = Seq(3, 2, 1).map(render).find(_.length <= 1900)
       .getOrElse((results.size to 1 by -10).view.map(renderTop)
         .find(_.length <= 1900)
         .getOrElse(s"""{"metric":"total","value":$total,"unit":"sec","queries":{},"sf":"$sfDir"}"""))
-    println(line)
-    spark.stop()
+    (line, record)
   }
 }

@@ -2,13 +2,20 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps `explain(formatted)` for the headline queries into PLANS.md — the
-  * reviewable record that filters/projections reach the scans, dims
-  * broadcast, and merges stay equi-joins. Regenerate with:
-  * `sbt "runMain graft.Plans [sfDir] [outFile]"`. */
+import graft.tools.Harness
+
+/** Dumps `explain("formatted")` for named SparkEntry queries, or for the
+  * [[headline]] queries when none is named, into `<outDir>/<query>.txt` —
+  * the reviewable record that filters/projections reach the scans, dims
+  * broadcast and merges stay equi-joins, and the before/after plan evidence
+  * of the optimization rounds (`plans/r18/`). Building a query's DataFrame
+  * runs its pre-flight actions (budget estimates, localCheckpoints), so this
+  * executes the decision passes but never the final query.
+  *
+  * Usage: Plans <sfDir> <outDir> [query ...]
+  */
 object Plans {
   val headline = Seq(
     "q01_pricing_summary", "q02_filter_pushdown", "q03_join_revenue",
@@ -20,101 +27,21 @@ object Plans {
     "q74_resample_fill", "q75_curriculum_bins", "q77_chunking",
     "q87_bm25", "q88_grouping_sets", "q90_skew_profile")
 
-  /** Standing measurement notes, emitted into PLANS.md so they survive
-    * regeneration. */
-  val notes: String =
-    """## Measurement notes
-      |
-      |- **q46_corpus_minhash r3 "regression" was host noise, not code.**
-      |  BENCH_r03 recorded 4.51 s (min-of-3) on code with no diff since r2
-      |  (0.60 s). Re-measured 2026-08-12 on a quiet box, same code, same
-      |  harness (min-of-3, sf0.1, local[32]): **0.697 s** — inside the
-      |  r1-r2 band (0.6-1.1 s). The box has documented 3-5x load swings;
-      |  r3's three timed q46 slots ran back-to-back inside one spike window,
-      |  which min-of-N cannot damp. Mitigation: bench default raised to
-      |  SPARK_GRAFT_BENCH_RUNS=3 and `graft.Bench <query...>` now supports
-      |  re-benching individual queries for spot re-measurement.
-      |- **q40_ivf_topk r3 regression (0.60 -> 3.87 s) was real** — the
-      |  interpreted `transform`-HOF centroid argmin. Fixed in r4 by the
-      |  codegen'd `NearestCentroid`/`TopCentroids` expressions over a
-      |  broadcast centroid matrix: re-measured **0.471 s** (1.45x q24's
-      |  0.324 s brute force; target was <= 2x), with the same zero-shuffle
-      |  plan shape (PlanSpec: no Join/Window, partial_topk_agg present) and
-      |  no nCentroids x dim literals in the plan.
-      |- **BENCH_r04's 111.7 s total was host noise, not regression.**
-      |  The r4 driver bench (n=4) recorded 9-11 s for queries whose code had
-      |  not changed (q23 9.2 s, q29 10.8 s, q22 9.9 s, q47 9.3 s, q48 9.7 s,
-      |  q49 8.3 s) — the same all-query sweep re-run 2026-08-12 on a quiet
-      |  box (load avg 0.24, min-of-3) totals **21.3 s for 59 queries** with
-      |  every one of those suspects back at 0.14-0.67 s, consistent with
-      |  the r4-development local runs (25.2 s). Same documented pattern as
-      |  the r3 q46 spike: outside-container load swings this box 3-5x, and
-      |  when a spike window covers ALL of a query's timed slots min-of-N
-      |  can't damp it.
-      |- **Round 5 grew the bench total by construction, not regression:**
-      |  59 -> 82 gate queries. The pre-existing 59 hold their quiet-box
-      |  band (21.3 s re-measured 2026-08-12); the ~16 s delta is the 23 new
-      |  gates, dominated by the ones that do real work inside the timed
-      |  query: q71 writes two bucketed tables (~2.3 s), q74 materializes a
-      |  ~1M-row resampled grid (~1.5 s), q60 computes exact countDistinct
-      |  alongside the HLL for the error column (~1.0 s), q62/q75 shingle or
-      |  score the corpus (~0.7-1.0 s). Per-query steady state is the
-      |  signal; the total tracks surface area. The late-round-5 additions
-      |  (q85-q106, 106 gates total) add ~12 s more: q96_curation_pipeline
-      |  (~5.8 s) is BY CONSTRUCTION the q53 component fixpoint (~4 s,
-      |  scheduling-bound per round on tiny frames) plus the q92 funnel
-      |  (~1.2 s); q85/q87/q92 each pay one corpus text pass (~1-1.4 s).
-      |  The q53-family per-round cost is fixed scheduling overhead on
-      |  few-KB label frames - at real scale it is dwarfed by the data,
-      |  and rounds grow only as log2(cluster diameter). Full 103-query
-      |  sweeps on 2026-08-13 measured 60.6 s twice under load-avg 2-3
-      |  (~50 s quiet-box by the 84-query baseline's observed load
-      |  factor); a double-pointer-jump variant of the fixpoint was
-      |  measured and REVERTED - round counts are already diameter-bound
-      |  tiny, so it moved nothing outside noise.
-      |- **q98_column_profile: 4.4 s -> 1.6 s by refusing the
-      |  multi-countDistinct Expand.** Spark's exact plan for N distinct
-      |  aggregates Expands every row N+1 times and shuffles the expansion
-      |  with ALL profiled columns as grouping keys; the rewrite dedups a
-      |  narrow exploded (col_name, value) pair stream whose map-side
-      |  partial collapses each partition to its local distincts, then
-      |  counts per column - same exact answer, a fraction of the shuffle.
-      |- **The r4 bench's three most expensive queries are expensive by
-      |  construction, not by plan defect.** q53_dedup_clusters (~3.4 s)
-      |  regenerates the SimHash pair list (~0.7 s, q38's whole cost) and
-      |  then runs an inherently iterative fixpoint — min-label propagation
-      |  with pointer jumping, O(log diameter) rounds, each round a bounded
-      |  join+groupBy+checkpoint. q56_ivf_index (~1.7 s) and
-      |  q52_scd2_table_write (~1.3 s) WRITE real tables (bucketed index /
-      |  partitioned COW merge) inside the timed query; q56's write was
-      |  8.5 s until the corpus was repartitioned on the bucket key before
-      |  the partitionBy write (classic small-files fan-out).
-      |""".stripMargin
-
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // UTC like graft.Verify — Tables.widen's NTZ cast assumes it
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.Plans` over `$sfDir`. Things to check:\n")
-    sb.append("`PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin` for dims,\n")
-    sb.append("no `CartesianProduct`, partial aggregates before exchanges.\n\n")
-    sb.append(notes)
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      sb.append("```\n")
+    require(args.length >= 2, "usage: Plans <sfDir> <outDir> [query...]")
+    val sfDir = args(0)
+    val outDir = args(1)
+    val named = args.drop(2).toSeq
+    val selected = Harness.select(SparkEntry.queries, if (named.isEmpty) headline else named)
+    val h = Harness()
+    Files.createDirectories(Paths.get(outDir))
+    selected.foreach { case (n, fn) =>
+      val plan = fn(h.spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted"))
+      Files.writeString(Paths.get(outDir, s"$n.txt"), plan)
+      h.quiesce()
+      println(s"dumped $n (${plan.length} chars)")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    spark.stop()
+    h.spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.Dedup
+import graft.tools.Harness
 
 /** Scale-growth diagnostic for the banded/bucketed dedup operators: counts
   * CANDIDATE pairs (the quantity that must stay sub-quadratic), verified
@@ -19,15 +20,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <sfDir> [probe...]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC like graft.Verify — Tables.widen's NTZ cast assumes it
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val h = Harness()
+    val spark = h.spark
 
     def docs = Tables.widen(Tables.load(spark, sfDir, "documents"))
     def emb = Tables.widen(Tables.load(spark, sfDir, "embeddings"))
@@ -779,19 +773,19 @@ object ScaleProbe {
       // evaluation (text_clean forced via length-sum), so the drop is
       // measured, not argued.
       "q299_shufbytes_textkey_r13" -> (() =>
-        shuffleBytesOf(spark) {
+        h.measure("q299_shufbytes_textkey_r13 work") {
           import org.apache.spark.sql.functions._
           val out = paragraphDedupTextKeyedR13(paraReflow(docs))
           out.agg(coalesce(sum(length(col("text_clean"))), lit(0L)) +
               coalesce(sum(col("n_kept")), lit(0L))).head().getLong(0)
-        }),
+        }.usage.shuffleWrite),
       "q299_shufbytes_fingerprint" -> (() =>
-        shuffleBytesOf(spark) {
+        h.measure("q299_shufbytes_fingerprint work") {
           import org.apache.spark.sql.functions._
           val out = Dedup.paragraphDedup(paraReflow(docs), "doc_id", "p_text")
           out.agg(coalesce(sum(length(col("text_clean"))), lit(0L)) +
               coalesce(sum(col("n_kept")), lit(0L))).head().getLong(0)
-        }),
+        }.usage.shuffleWrite),
 
       // SCD WRITE-PATH decade probes (q52/q59 production path): a
       // 64-partition COW table seeded at the probed scale, then merged
@@ -811,22 +805,12 @@ object ScaleProbe {
       "q59_scd4_bytes_rewritten" -> (() => scdWrite("scd4_bytes_rewritten"))
     )
 
-    val unknown = args.drop(1).filterNot(n => probes.exists(_._1 == n))
-    require(unknown.isEmpty, s"unknown probe(s): ${unknown.mkString(", ")}")
-    val selected =
-      if (args.length == 1) probes
-      else probes.filter { case (n, _) => args.drop(1).contains(n) }
-
-    selected.foreach { case (name, thunk) =>
-      val t0 = System.nanoTime()
-      val n = thunk()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop leftover localCheckpoint blocks so probes don't bleed memory
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      println(f"""{"probe":"$name","count":$n,"sec":$dt%.2f,"sf":"$sfDir"}""")
+    Harness.select(probes, args.drop(1).toSeq).foreach { case (name, thunk) =>
+      val r = h.measure(name)(thunk())
+      h.quiesce()
+      println(f"""{"probe":"$name","count":${r.value},"sec":${r.seconds}%.2f,"sf":"$sfDir"}""")
     }
-    spark.stop()
+    h.spark.stop()
   }
 
   /** Multi-occupancy band-bucket mass (Σ s over buckets with s ≥ 2) of a
@@ -1022,31 +1006,5 @@ object ScaleProbe {
     val after4 = partFiles(cur)
 
     stats("scd2", before2, after2) ++ stats("scd4", before4, after4)
-  }
-
-  /** Total shuffle WRITE bytes across every task run by `work`: a
-    * SparkListener sums per-task shuffleWriteMetrics, then the listener
-    * bus is drained (reflective waitUntilEmpty — `private[spark]` is
-    * public at the bytecode level; falls back to a bounded sleep) so the
-    * asynchronous TaskEnd events are all counted before reading. */
-  private def shuffleBytesOf(spark: SparkSession)(work: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) acc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      work
-      try {
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(3000) }
-    } finally sc.removeSparkListener(listener)
-    acc.get()
   }
 }

@@ -134,36 +134,37 @@ object MergeInto {
     * `"a OP b"` specs with OP in {<, <=, =, >=, >, !=} (default =), AND-folded,
     * plus an optional extra predicate — equi parts drive the shuffle keys,
     * theta parts remain join filters. */
-  def buildJoinCondition(keys: Seq[String], extra: Option[String] = None): String = {
-    val ops = Seq("<=", ">=", "!=", "<", ">", "=")
-    val parts = keys.map { k =>
-      ops.find(op => k.contains(op)) match {
-        case Some(op) =>
-          val Array(l, r) = k.split(java.util.regex.Pattern.quote(op)).map(_.trim)
-          s"target.$l $op updates.$r"
-        case None => s"target.${k.trim} = updates.${k.trim}"
-      }
-    }
-    (parts ++ extra.toSeq).mkString(" AND ")
-  }
+  def buildJoinCondition(keys: Seq[String], extra: Option[String] = None): String =
+    (keys.map(parseSpec).map { case (l, op, r) => s"target.$l $op updates.$r" } ++
+      extra.toSeq).mkString(" AND ")
 
   private val SpecOps = Seq("<=", ">=", "!=", "<", ">", "=")
 
-  private def splitSpec(k: String): (String, String) =
-    SpecOps.find(op => k.contains(op)) match {
+  /** A `"a"` or `"a OP b"` join-key spec as (target column, OP, update
+    * column). Specs come from the control table's `join_key` column, so a
+    * malformed one — an empty side, a second operator (`"a == b"`), a
+    * column name with whitespace — is refused with the spec named. */
+  private def parseSpec(k: String): (String, String, String) = {
+    def refuse = throw new IllegalArgumentException(
+      s"malformed join key spec '$k': expected \"col\" or \"col OP col\" " +
+        s"with OP one of ${SpecOps.mkString(" ")}")
+    def column(c: String) =
+      if (c.isEmpty || c.exists(_.isWhitespace) || SpecOps.exists(c.contains)) refuse else c
+    SpecOps.find(k.contains) match {
       case Some(op) =>
-        val parts = k.split(java.util.regex.Pattern.quote(op))
-        (parts.head.trim, parts.last.trim)
-      case None => (k.trim, k.trim)
+        val i = k.indexOf(op)
+        (column(k.take(i).trim), op, column(k.drop(i + op.length).trim))
+      case None => val c = column(k.trim); (c, "=", c)
     }
+  }
 
   /** `extractJoinKeys` (ref M/utility/Utility.scala:325-337): `"a"` or
     * `"a OP b"` specs -> update-side column names (operator-aware: naive
     * splitting on '=' mis-parsed `!=`/`<`/`>` specs). */
   def extractJoinKeys(keys: Seq[String]): Seq[String] =
-    keys.map(k => splitSpec(k)._2)
+    keys.map(parseSpec(_)._3)
 
   /** Target-side key names from the same specs. */
   def extractTargetKeys(keys: Seq[String]): Seq[String] =
-    keys.map(k => splitSpec(k)._1)
+    keys.map(parseSpec(_)._1)
 }

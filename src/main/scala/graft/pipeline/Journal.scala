@@ -32,13 +32,14 @@ final class Journal(spark: SparkSession, root: String) {
 
   private def now = new Timestamp(System.currentTimeMillis())
 
-  def logStatus(pipelineDefId: String, taskName: String, state: String,
-                detail: String = ""): Unit = {
-    val row = Seq((pipelineDefId, taskName, state, detail, now))
-      .toDF("pipelineDefId", "taskName", "status", "detail", "lastUpdate")
+  /** Status rows in the status table's one schema. */
+  private def statusRows(rows: Seq[(String, String, String, String, Timestamp)]): DataFrame =
+    rows.toDF("pipelineDefId", "taskName", "status", "detail", "lastUpdate")
       .withColumn("lastUpdateDate", to_date(col("lastUpdate")))
-    status.append(row)
-  }
+
+  def logStatus(pipelineDefId: String, taskName: String, state: String,
+                detail: String = ""): Unit =
+    status.append(statusRows(Seq((pipelineDefId, taskName, state, detail, now))))
 
   def logFact(pipelineDefId: String, runId: String, inputRows: Long,
               outputRows: Long, metrics: Map[String, String] = Map.empty): Unit = {
@@ -66,16 +67,7 @@ final class Journal(spark: SparkSession, root: String) {
     * journal (no status rows yet) yields an empty frame, not an error. */
   def latestStatus: DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    if (!status.exists)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pipelineDefId", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("taskName", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("status", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("detail", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("lastUpdate", org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("lastUpdateDate", org.apache.spark.sql.types.DateType))))
+    if (!status.exists) return statusRows(Nil)
     val w = Window.partitionBy(col("pipelineDefId"), col("taskName"))
       .orderBy(col("lastUpdate").desc)
     status.read.withColumn("rn", row_number().over(w))

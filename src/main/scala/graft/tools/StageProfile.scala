@@ -1,18 +1,13 @@
 package graft.tools
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Measurement aid (optimization guide §1): runs named SparkEntry queries
-  * through the same noop-sink methodology as graft.Bench, but with a
-  * SparkListener recording per-stage wall time, executor task time, and
-  * shuffle/input volumes — the local-mode substitute for the Spark UI's
-  * Stages tab (UI is disabled in bench runs). Prints, per query, the
-  * stages sorted by executor task time with their callsite, so the
-  * expensive operator inside a multi-stage query is identified by
-  * measurement rather than guessed.
+  * through the same warmup and noop-sink methodology as graft.Bench, and
+  * prints per query its stages sorted by executor task time — wall time,
+  * task/CPU/GC time, shuffle and input volumes, callsite — the local-mode
+  * substitute for the Spark UI's Stages tab (UI is disabled in bench runs).
+  * The expensive operator inside a multi-stage query is thus identified by
+  * measurement rather than guessed. Jobs no query submitted are printed as
+  * unattributed.
   *
   * Usage: StageProfile <sfDir> <query> [query ...]   (env as graft.Bench)
   */
@@ -20,79 +15,25 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: StageProfile <sfDir> <query> [query...]")
     val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    final case class St(var name: String = "", var wallMs: Long = 0,
-                        var taskMs: Long = 0, var cpuMs: Long = 0,
-                        var gcMs: Long = 0,
-                        var shRead: Long = 0, var shWrite: Long = 0,
-                        var input: Long = 0, var records: Long = 0,
-                        var tasks: Int = 0)
-    val stages = mutable.LinkedHashMap[Int, St]()
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val info = sc.stageInfo
-        val st = stages.getOrElseUpdate(info.stageId, St())
-        st.name = info.name
-        st.wallMs = (for {c <- info.completionTime; s <- info.submissionTime}
-          yield c - s).getOrElse(0L)
-        val m = info.taskMetrics
-        st.taskMs = m.executorRunTime
-        st.cpuMs = m.executorCpuTime / 1000000L
-        st.gcMs = m.jvmGCTime
-        st.shRead = m.shuffleReadMetrics.totalBytesRead
-        st.shWrite = m.shuffleWriteMetrics.bytesWritten
-        st.input = m.inputMetrics.bytesRead
-        st.records = m.inputMetrics.recordsRead
-        st.tasks = info.numTasks
-      }
-    }
-
-    // JIT/codegen warmup at the smallest SF, like graft.Bench
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
-
-    names.foreach { n =>
-      stages.clear(); jobs = 0
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      // drain listener events before reading the map (the bus is
-      // private[spark]; a short sleep suffices for a local-mode profile)
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-      val totTask = stages.values.map(_.taskMs).sum
-      println(f"%n=== $n  wall=${wall}%.2fs  jobs=$jobs  stages=${stages.size}  taskTime=${totTask / 1000.0}%.1fs ===")
+    val selected = Harness.select(graft.SparkEntry.queries, args.drop(1).toSeq)
+    val h = Harness()
+    h.warmup(selected)
+    selected.foreach { case (n, fn) =>
+      val r = h.measure(n)(Harness.noop(fn(h.spark, sfDir)))
+      h.quiesce()
+      val u = r.usage
+      println(f"%n=== $n  wall=${r.seconds}%.2fs  jobs=${u.jobs}  stages=${u.stages.size}  taskTime=${u.taskMs / 1000.0}%.1fs ===")
       println(f"${"stage"}%7s ${"wall_s"}%7s ${"task_s"}%7s ${"cpu_s"}%6s ${"gc_s"}%5s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"in_MB"}%6s ${"tasks"}%5s  name")
-      stages.toSeq.sortBy(-_._2.taskMs).take(25).foreach { case (id, s) =>
-        println(f"$id%7d ${s.wallMs / 1000.0}%7.2f ${s.taskMs / 1000.0}%7.2f " +
+      u.stages.sortBy(-_.taskMs).take(25).foreach { s =>
+        println(f"${s.id}%7d ${s.wallMs / 1000.0}%7.2f ${s.taskMs / 1000.0}%7.2f " +
           f"${s.cpuMs / 1000.0}%6.2f ${s.gcMs / 1000.0}%5.2f " +
-          f"${s.shRead / 1e6}%7.1f ${s.shWrite / 1e6}%7.1f ${s.input / 1e6}%6.1f " +
+          f"${s.shuffleRead / 1e6}%7.1f ${s.shuffleWrite / 1e6}%7.1f ${s.input / 1e6}%6.1f " +
           f"${s.tasks}%5d  ${s.name.linesIterator.next().take(90)}")
       }
+      val other = h.unattributed()
+      if (other.jobs > 0 || other.stages.nonEmpty)
+        println(s"unattributed: jobs=${other.jobs}  stages=${other.stages.size}")
     }
-    spark.stop()
+    h.spark.stop()
   }
 }

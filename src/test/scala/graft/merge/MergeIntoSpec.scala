@@ -80,4 +80,14 @@ class MergeIntoSpec extends SparkSpec {
     assert(extractJoinKeys(Seq("a", "x = y")) == Seq("a", "y"))
     assert(extractTargetKeys(Seq("a", "x = y")) == Seq("a", "x"))
   }
+
+  test("malformed join key specs are refused with the spec named") {
+    for (spec <- Seq("a =", "a == b", "= b", "a = b = c", "a => b", "", " ", "a b", "a = b c")) {
+      for (parse <- Seq[Seq[String] => Any](buildJoinCondition(_), extractJoinKeys,
+          extractTargetKeys)) {
+        val e = intercept[IllegalArgumentException](parse(Seq("k", spec)))
+        assert(e.getMessage.contains(s"'$spec'"), spec)
+      }
+    }
+  }
 }

@@ -103,6 +103,14 @@ class PipelineSpec extends SparkSpec {
     assert(j.latestStatus.count() == 0)
   }
 
+  test("fresh journal's latestStatus has the schema the status table gets") {
+    val j = new Journal(spark, tmpDir("journal_schema"))
+    val empty = j.latestStatus.schema
+    j.logStatus("pd1", "reader", "Finished")
+    assert(empty == j.status.read.schema)
+    assert(empty == j.latestStatus.schema)
+  }
+
   test("Journal records status/facts/errors and finds failed pipelines") {
     val j = new Journal(spark, tmpDir("journal"))
     j.logStatus("pd1", "reader", "Finished")
