@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.tools.Harness
 
-/** Steady-state timing of SparkEntry.queries into the noop sink. Optional
-  * args bench only the named queries, and scope the warmup to them.
+/** Steady-state timing of SparkEntry.queries into the noop sink. Prints the
+  * short stdout line; `bench_last.json` also gets each query's counters.
+  * Optional args bench only the named queries, and scope the warmup to them.
   *
   * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_BENCH_PASSES (default 3),
   * plus the harness's SPARK_GRAFT_CPUS and warmup dirs. */
@@ -44,18 +45,19 @@ object Bench {
         sinceGc = 0
       }
     }
-    def onePass(): Map[String, Double] =
+    def onePass(): Map[String, Harness.Run[Unit]] =
       selected.map { case (name, fn) =>
-        val dt = h.measure(name) {
+        val r = h.measure(name) {
           try Harness.noop(fn(h.spark, sfDir))
           catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        }.seconds
+        }
         quiesce()
-        name -> dt
+        name -> r
       }.toMap
-    val results = (1 to passes).map(_ => onePass())
-      .reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
-    val (line, record) = report(results, sfDir)
+    val fastest = (1 to passes).map(_ => onePass())
+      .reduce((a, b) => a.map { case (k, v) => k -> (if (b(k).seconds < v.seconds) b(k) else v) })
+    val (line, record) = report(fastest.map { case (k, r) => k -> r.seconds }, sfDir,
+      fastest.map { case (k, r) => k -> r.usage })
     // Full-precision, full-name record → file (committed as the round's
     // quiet-box anchor; survives any log truncation).
     Files.writeString(Paths.get("bench_last.json"), record)
@@ -63,14 +65,26 @@ object Bench {
     h.spark.stop()
   }
 
+  /** The counters the record carries for one query next to its seconds:
+    * the usage of the pass whose seconds are reported. */
+  def counters(seconds: Double, u: Harness.Usage): Seq[(String, Any)] = Seq(
+    "outside_stages_s" -> u.outsideStagesSeconds(seconds),
+    "jobs" -> u.jobs, "stages" -> u.stages.size,
+    "task_s" -> u.taskMs / 1000.0, "cpu_s" -> u.cpuMs / 1000.0, "gc_s" -> u.gcMs / 1000.0,
+    "shuffle_read_bytes" -> u.shuffleRead, "shuffle_write_bytes" -> u.shuffleWrite,
+    "spill_bytes" -> u.spill, "input_bytes" -> u.input)
+
   /** The stdout line and the `bench_last.json` record for per-query seconds.
+    * With `usages`, the record also carries each query's [[counters]]; the
+    * line never does.
     *
     * The line is parsed from a bounded log tail (last ~2000 chars) by bench
     * consumers, so it must stay short: query keys are the qNNN
     * prefix, timings rounded to at most 3 decimals. 144 full-name
     * full-precision entries are ~5 KB and get truncated mid-line — that is
     * exactly the r1-r7 "parsed": null failure. */
-  def report(results: Map[String, Double], sfDir: String): (String, String) = {
+  def report(results: Map[String, Double], sfDir: String,
+             usages: Map[String, Harness.Usage] = Map.empty): (String, String) = {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Machinery split (r15): the streaming replay gates spend ~3 s each on
     // FIXED harness cost (chunk write, cold stream start) at any SF;
@@ -85,10 +99,16 @@ object Bench {
       .map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val qsFull = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val countersJson =
+      if (usages.isEmpty) ""
+      else usages.toSeq.sortBy(_._1).map { case (k, u) =>
+        "\"" + k + "\":" + counters(results(k), u)
+          .map { case (c, v) => "\"" + c + "\":" + v }.mkString("{", ",", "}")
+      }.mkString(""","counters":{""", ",", "}")
     val record =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
         s""""machinery_total":$machTotal,"machinery_queries":$machJson,""" +
-        s""""sf":"$sfDir"}""" + "\n"
+        s""""sf":"$sfDir"$countersJson}""" + "\n"
     // Trailing-zero trim ("0.50"->"0.5", "1.00"->"1"): worth ~1 char on
     // ~half the entries, which is what keeps 161 queries at 2-decimal
     // resolution inside the tail budget. Locale.ROOT: a comma-decimal

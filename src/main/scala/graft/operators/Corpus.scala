@@ -586,7 +586,7 @@ object Corpus {
     * running the learned merges to completion IS the encoding, so the
     * encode report falls straight out of the trainer's final state — and
     * the number of Spark rounds the loop actually ran (the quantity the
-    * batched mode exists to shrink; ScaleProbe records it). */
+    * batched mode exists to shrink; CorpusSpec asserts it drops). */
   private[graft] def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
                               batch: Int = 8)
       : (Seq[(String, String, Long)], DataFrame, Int) = {

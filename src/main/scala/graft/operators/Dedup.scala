@@ -808,8 +808,8 @@ object Dedup {
   }
 
   /** The 5-band explosion of a 128-bit [w0, w1] signature — [[banded64]]'s
-    * wide twin, shared by [[hamming128NearDups]] and the scale probe. */
-  private[graft] def banded128(sigs: DataFrame): DataFrame =
+    * wide twin, shared by the 128-bit profile, pairing and clustering. */
+  private def banded128(sigs: DataFrame): DataFrame =
     sigs.select(col("id"), col("sig"), posexplode(
       array(Bands128.map { case (lo, w) =>
         bandVal128(col("sig"), lo, w) }: _*)).as(Seq("band", "bucket")))
@@ -1248,9 +1248,9 @@ object Dedup {
   }
 
   /** DIAGNOSTIC — rounds the last [[connectedComponents]] call on this
-    * driver took to reach fixpoint. Read by `graft.ScaleProbe` to confirm
-    * the O(log diameter) round-count claim across scale factors; not part
-    * of the operator contract. */
+    * driver took to reach fixpoint. ScaleBoundsSpec bounds it at two corpus
+    * sizes (the O(log diameter) round-count claim); not part of the
+    * operator contract. */
   @volatile private[graft] var lastCcRounds: Int = -1
 
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
@@ -1790,9 +1790,9 @@ object Dedup {
   }
 
   /** The AllPairs candidate stage over prepared token sets: rarest-first
-    * prefix postings self-joined. Exposed so [[graft.ScaleProbe]] measures
-    * EXACTLY the operator's candidate generator (a re-implementation would
-    * drift). The prefix length `n − ceil(t·n) + 1` uses DECIMAL ceiling —
+    * prefix postings self-joined. Exposed so [[prefixCandidateCount]]
+    * counts EXACTLY the operator's candidate generator (a re-implementation
+    * would drift). The prefix length `n − ceil(t·n) + 1` uses DECIMAL ceiling —
     * an fp `ceil(n * t)` overshoots the true ceiling whenever n·t rounds
     * up across an integer (e.g. 25·0.56 → 14.000000000000002 → 15),
     * silently shortening the prefix below the proven exact-recall minimum
@@ -2083,8 +2083,8 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Probe entry: candidate count at an operating point, measured through
-    * the operator's own stages. */
+  /** Candidate count at an operating point, measured through the
+    * operator's own stages (ScaleBoundsSpec bounds it at q193's). */
   private[graft] def prefixCandidateCount(df: DataFrame, textCol: String,
                                           idCol: String, threshold: Double,
                                           shingleK: Int): Long =
@@ -2117,10 +2117,6 @@ object Dedup {
     * pre-flight refuses a configuration whose measured prefix×postings
     * join work exceeds the budget. DECIMAL ceiling for the prefix length
     * (the fp-overshoot bug noted on [[prefixCandidates]]). */
-  /** The containment candidate stage over prepared token sets: A-prefix
-    * postings joined against FULL postings. Exposed so [[graft.ScaleProbe]]
-    * measures exactly the operator's generator (the
-    * [[prefixCandidates]] probe contract). */
   /** `prefix` and `posts` views plus the two PERSISTED datasets backing
     * them — callers must `release()` once candidates have materialized
     * (the [[prefixPostings]] lifecycle contract: CacheManager entries
@@ -2158,13 +2154,6 @@ object Dedup {
       .join(posts.select(col("t"), col("id").as("id_b")), "t")
       .filter(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b").distinct()
-
-  private[graft] def containmentCandidates(toks: DataFrame,
-                                           threshold: Double): DataFrame = {
-    val st = containmentStages(toks, threshold)
-    try containmentCandidatesFrom(st.prefix, st.posts).localCheckpoint()
-    finally st.release()
-  }
 
   /** Cross-corpus [[containmentPairs]] — the DECONTAMINATION shape: which
     * `needles` (benchmark items, eval prompts) are `threshold`-contained

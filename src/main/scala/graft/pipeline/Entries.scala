@@ -73,7 +73,8 @@ object ShardedJdbcLoad {
   * M/configbuilder/Start.scala:50-69): `RERUN_BATCH` re-runs the control
   * rows whose LATEST journaled status is Error (selection via the journal's
   * rank window, ref Start.scala:198-218), `PIPELINE p1,p2` runs exactly the
-  * named pipelines, anything else runs the full control set.
+  * named pipelines (an unknown or missing id is refused), anything else
+  * runs the full control set.
   */
 object Dispatch {
 
@@ -94,6 +95,12 @@ object Dispatch {
       case "PIPELINE" =>
         val wanted = parts.lift(1).getOrElse("")
           .split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val known = controlRows.map(_.pipelineDefId).distinct.sorted
+        val unknown = wanted.toSeq.sorted.filterNot(known.contains)
+        require(wanted.nonEmpty && unknown.isEmpty,
+          (if (wanted.isEmpty) "PIPELINE names no pipeline id"
+           else s"PIPELINE names unknown pipeline id(s): ${unknown.mkString(", ")}") +
+            s" — known: ${known.mkString(", ")}")
         controlRows.filter(c => wanted.contains(c.pipelineDefId))
       case _ => controlRows
     }

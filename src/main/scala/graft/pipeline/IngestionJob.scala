@@ -58,32 +58,41 @@ object IngestionJob {
     val batch = processed.localCheckpoint()
     val table = new ParquetTable(s, s"$targetRoot/${cfg.tableName}", cfg.partitionKeys)
     val n = batch.count()
-    cfg.scdType match {
-      case "scd2" =>
-        val (mc, um, im) = cfg.scd2Spec.getOrElse(
-          throw new IllegalArgumentException(s"scd2 row ${cfg.pipelineDefId} lacks merge spec"))
-        Scd.writeScd2(table, batch, cfg.joinKeys, mc, um, im,
-          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
-      case "scd4" =>
-        val hist = new ParquetTable(s, s"$targetRoot/${cfg.tableName}_history")
-        Scd.writeScd4(table, hist, batch, cfg.joinKeys, cfg.updatedAtCol,
-          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
-      case _ =>
-        Scd.writeScd1(table, batch, cfg.joinKeys, cfg.matched, cfg.notMatched,
-          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+    // Read this commit's metrics before releasing the table's monitor:
+    // pipelines sharing a target (one per JDBC shard) commit concurrently,
+    // and a later read could return another pipeline's commit.
+    val metrics = table.withLock {
+      cfg.scdType match {
+        case "scd2" =>
+          val (mc, um, im) = cfg.scd2Spec.getOrElse(
+            throw new IllegalArgumentException(s"scd2 row ${cfg.pipelineDefId} lacks merge spec"))
+          Scd.writeScd2(table, batch, cfg.joinKeys, mc, um, im,
+            dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+        case "scd4" =>
+          val hist = new ParquetTable(s, s"$targetRoot/${cfg.tableName}_history")
+          Scd.writeScd4(table, hist, batch, cfg.joinKeys, cfg.updatedAtCol,
+            dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+        case _ =>
+          Scd.writeScd1(table, batch, cfg.joinKeys, cfg.matched, cfg.notMatched,
+            dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+      }
+      table.lastMetrics
     }
     journal.foreach { j =>
       // outputRows comes from the commit metrics, NOT a full target scan
       // (at scale that scan would dwarf the merge itself)
-      val written = table.lastMetrics.get("numSourceRows").map(_.toLong).getOrElse(n)
+      val written = metrics.get("numSourceRows").map(_.toLong).getOrElse(n)
       j.logFact(cfg.pipelineDefId, java.util.UUID.randomUUID().toString, n,
-        written, table.lastMetrics)
+        written, metrics)
     }
     table.read
   }
 
   /** Run pipelines for all control rows concurrently; journal statuses.
-    * Returns per-pipeline success. */
+    * Returns per-pipeline success, keyed by pipeline name
+    * (`pipelineDefId_tableName`). Rows whose names collide are refused
+    * before any pipeline starts: their results would share one key, and
+    * the journal would log one outcome for all of them. */
   def run(spark: SparkSession, controlRows: Seq[TableConfig],
           source: TableConfig => () => DataFrame,
           targetRoot: String,
@@ -94,6 +103,12 @@ object IngestionJob {
     val pipelines = controlRows.map(cfg =>
       cfg -> buildPipeline(spark, cfg, source(cfg), targetRoot, shardMappings, journal,
         piiRules))
+    val collisions = pipelines.groupBy(_._2.name).filter(_._2.size > 1)
+    require(collisions.isEmpty, "pipeline names collide: " + collisions.toSeq.sortBy(_._1)
+      .map { case (name, ps) =>
+        s"$name <- rows " + ps.map { case (c, _) => s"(${c.pipelineDefId}, ${c.tableName})" }
+          .mkString(", ")
+      }.mkString("; "))
     val results = PipelineRunner.runAll(pipelines.map(_._2), parallelism)
     journal.foreach { j =>
       pipelines.foreach { case (cfg, p) =>

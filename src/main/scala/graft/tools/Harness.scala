@@ -90,13 +90,15 @@ final class Harness(val spark: SparkSession) {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
       val i = e.stageInfo
       val m = i.taskMetrics
+      val (submitMs, completeMs) =
+        (for (c <- i.completionTime; s <- i.submissionTime) yield (s, c)).getOrElse((0L, 0L))
       byGroup.getOrElseUpdate(groupOf.getOrElse(i.stageId, ""), new Acc).stages(i.stageId) =
-        Stage(i.stageId, i.name,
-          wallMs = (for (c <- i.completionTime; s <- i.submissionTime) yield c - s).getOrElse(0L),
+        Stage(i.stageId, i.name, submitMs, completeMs,
           taskMs = m.executorRunTime, cpuMs = m.executorCpuTime / 1000000L,
           gcMs = m.jvmGCTime, shuffleRead = m.shuffleReadMetrics.totalBytesRead,
           shuffleWrite = m.shuffleWriteMetrics.bytesWritten,
-          input = m.inputMetrics.bytesRead, tasks = i.numTasks)
+          input = m.inputMetrics.bytesRead,
+          spill = m.memoryBytesSpilled + m.diskBytesSpilled, tasks = i.numTasks)
     }
 
     private def usage(a: Acc) = Usage(a.jobs, a.stages.values.toSeq)
@@ -161,15 +163,34 @@ object Harness {
     * prune expensive projections away) and keeps nothing. */
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** One completed stage: its wall time, summed task counters and tasks. */
-  final case class Stage(id: Int, name: String, wallMs: Long, taskMs: Long,
-                         cpuMs: Long, gcMs: Long, shuffleRead: Long,
-                         shuffleWrite: Long, input: Long, tasks: Int)
+  /** One completed stage: its submit and complete times (epoch ms), summed
+    * task counters and tasks. `spill` is memory plus disk bytes spilled. */
+  final case class Stage(id: Int, name: String, submitMs: Long, completeMs: Long,
+                         taskMs: Long, cpuMs: Long, gcMs: Long, shuffleRead: Long,
+                         shuffleWrite: Long, input: Long, spill: Long, tasks: Int) {
+    def wallMs: Long = completeMs - submitMs
+  }
 
   /** The jobs a measured unit started and the stages they completed. */
   final case class Usage(jobs: Int, stages: Seq[Stage]) {
     def taskMs: Long = stages.map(_.taskMs).sum
+    def cpuMs: Long = stages.map(_.cpuMs).sum
+    def gcMs: Long = stages.map(_.gcMs).sum
+    def shuffleRead: Long = stages.map(_.shuffleRead).sum
     def shuffleWrite: Long = stages.map(_.shuffleWrite).sum
+    def input: Long = stages.map(_.input).sum
+    def spill: Long = stages.map(_.spill).sum
+
+    /** The part of `wallSeconds` during which none of these stages ran:
+      * driver planning, file listing, commit I/O and scheduling gaps. It is
+      * the wall time minus the union of the stage intervals, never below 0. */
+    def outsideStagesSeconds(wallSeconds: Double): Double = {
+      val (busyMs, _) = stages.map(s => (s.submitMs, s.completeMs)).sortBy(_._1)
+        .foldLeft((0L, Long.MinValue)) { case ((busy, end), (s, c)) =>
+          if (c <= end) (busy, end) else (busy + c - math.max(s, end), c)
+        }
+      math.max(0.0, wallSeconds - busyMs / 1000.0)
+    }
   }
 
   final case class Run[T](value: T, seconds: Double, usage: Usage)

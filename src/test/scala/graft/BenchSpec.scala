@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Harness
+
 /** Pins graft.Bench's output contract: the stdout line a bench consumer
   * parses from a bounded log tail, and the bench_last.json record. */
 class BenchSpec extends AnyFunSuite {
@@ -58,5 +60,33 @@ class BenchSpec extends AnyFunSuite {
     assert(r.get("machinery_queries").elements().asScala.map(_.asText()).toSeq ==
       Seq("q301_stream_debounce"))
     assert(r.get("sf").asText() == "/data/sf0.1")
+
+    // with usages, each query entry carries every counter at full precision;
+    // the two stages overlap, so 50 ms of the wall time ran inside a stage
+    val stage = Harness.Stage(1, "s", submitMs = 1000L, completeMs = 1020L, taskMs = 1234L,
+      cpuMs = 987L, gcMs = 13L, shuffleRead = 111L, shuffleWrite = 222L, input = 333L,
+      spill = 444L, tasks = 4)
+    val usages = three.keys.zipWithIndex.map { case (q, i) =>
+      q -> Harness.Usage(3 + i, Seq(stage, stage.copy(id = 2, submitMs = 1010L, completeMs = 1050L,
+        shuffleWrite = 1L << 40)))
+    }.toMap
+    val full = json.readTree(Bench.report(three, "/data/sf0.1", usages)._2)
+    assert(full.fieldNames().asScala.toSeq == r.fieldNames().asScala.toSeq :+ "counters")
+    assert(full.get("queries") == r.get("queries"))
+    val counters = full.get("counters")
+    assert(counters.fieldNames().asScala.toSeq == three.keys.toSeq.sorted)
+    three.foreach { case (q, secs) =>
+      val c = counters.get(q)
+      assert(c.fieldNames().asScala.toSeq == Seq("outside_stages_s", "jobs", "stages",
+        "task_s", "cpu_s", "gc_s", "shuffle_read_bytes", "shuffle_write_bytes",
+        "spill_bytes", "input_bytes"))
+      assert(c.get("outside_stages_s").asDouble() == math.max(0.0, secs - 0.05))
+      assert(c.get("jobs").asInt() == usages(q).jobs && c.get("stages").asInt() == 2)
+      assert(c.get("task_s").asDouble() == 2.468 && c.get("cpu_s").asDouble() == 1.974)
+      assert(c.get("gc_s").asDouble() == 0.026)
+      assert(c.get("shuffle_read_bytes").asLong() == 222L)
+      assert(c.get("shuffle_write_bytes").asLong() == 222L + (1L << 40))
+      assert(c.get("spill_bytes").asLong() == 888L && c.get("input_bytes").asLong() == 666L)
+    }
   }
 }

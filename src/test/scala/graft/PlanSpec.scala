@@ -9,6 +9,20 @@ import org.apache.spark.sql.functions._
 class PlanSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+  /** Write-path and iterative queries execute real work at construction
+    * time, so the whole-surface guards skip them; their operator internals
+    * are plan-asserted by their own suites. */
+  private val sideEffecting = Set("q52_scd2_table_write", "q56_ivf_index",
+    "q59_scd4_table_write", "q53_dedup_clusters", "q83_cluster_survivors",
+    "q96_curation_pipeline", "q102_pagerank", "q71_bucketed_join",
+    "q15_scd1_merge", "q16_scd2_merge", "q17_scd4_merge",
+    "q114_leakage_safe_split", "q132_ivf_append", "q172_cluster_stats",
+    "q181_dedup_savings", "q182_split_leakage", "q183_planted_recall",
+    "q187_index_neardups", "q189_auto_threshold_neardups",
+    "q244_bpe_learn", "q249_bpe_encode", "q253_bfs_hops",
+    "q262_erasure_audit", "q264_ivm_agg", "q268_fps_coreset",
+    "q283_ivm_join")
+
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
@@ -185,19 +199,7 @@ class PlanSpec extends SparkSpec {
       "q295_range_bounds", // <=nParts-row broadcast bounds frame
       "q296_brier_decomp", // 1-row totals control frame
       "q298_funnel_ab") // two 1-row arm frames cross-joined
-    // write-path/iterative queries execute real work at construction time;
-    // their operator internals are plan-asserted by their own suites
-    val skip = Set("q52_scd2_table_write", "q56_ivf_index",
-      "q59_scd4_table_write", "q53_dedup_clusters", "q83_cluster_survivors",
-      "q96_curation_pipeline", "q102_pagerank", "q71_bucketed_join",
-      "q15_scd1_merge", "q16_scd2_merge", "q17_scd4_merge",
-      "q114_leakage_safe_split", "q132_ivf_append", "q172_cluster_stats",
-      "q181_dedup_savings", "q182_split_leakage", "q183_planted_recall",
-      "q187_index_neardups", "q189_auto_threshold_neardups",
-      "q244_bpe_learn", "q249_bpe_encode", "q253_bfs_hops",
-      "q262_erasure_audit", "q264_ivm_agg", "q268_fps_coreset",
-      "q283_ivm_join")
-    for ((name, fn) <- SparkEntry.queries if !skip(name)) {
+    for ((name, fn) <- SparkEntry.queries if !sideEffecting(name)) {
       val p = plan(fn(spark, sf))
       assert(!p.contains("CartesianProduct"), s"$name plans a cartesian:\n$p")
       if (!bnljAllowed(name))
@@ -256,18 +258,8 @@ class PlanSpec extends SparkSpec {
       // bounds IS a global-ordering problem (Spark's own RangePartitioner
       // collects its sample to the driver; this sorts it distributed)
       "q295_range_bounds")
-    val skip = Set("q52_scd2_table_write", "q56_ivf_index",
-      "q59_scd4_table_write", "q53_dedup_clusters", "q83_cluster_survivors",
-      "q96_curation_pipeline", "q102_pagerank", "q71_bucketed_join",
-      "q15_scd1_merge", "q16_scd2_merge", "q17_scd4_merge",
-      "q114_leakage_safe_split", "q132_ivf_append", "q172_cluster_stats",
-      "q181_dedup_savings", "q182_split_leakage", "q183_planted_recall",
-      "q187_index_neardups", "q189_auto_threshold_neardups",
-      "q244_bpe_learn", "q249_bpe_encode", "q253_bfs_hops",
-      "q262_erasure_audit", "q264_ivm_agg", "q268_fps_coreset",
-      "q283_ivm_join")
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    for ((name, fn) <- SparkEntry.queries if !skip(name)) {
+    for ((name, fn) <- SparkEntry.queries if !sideEffecting(name)) {
       val globals = fn(spark, sf).queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }
@@ -287,17 +279,7 @@ class PlanSpec extends SparkSpec {
     // a moving lower bound and an unbounded upper bound fails here.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
-    val skip = Set("q52_scd2_table_write", "q56_ivf_index",
-      "q59_scd4_table_write", "q53_dedup_clusters", "q83_cluster_survivors",
-      "q96_curation_pipeline", "q102_pagerank", "q71_bucketed_join",
-      "q15_scd1_merge", "q16_scd2_merge", "q17_scd4_merge",
-      "q114_leakage_safe_split", "q132_ivf_append", "q172_cluster_stats",
-      "q181_dedup_savings", "q182_split_leakage", "q183_planted_recall",
-      "q187_index_neardups", "q189_auto_threshold_neardups",
-      "q244_bpe_learn", "q249_bpe_encode", "q253_bfs_hops",
-      "q262_erasure_audit", "q264_ivm_agg", "q268_fps_coreset",
-      "q283_ivm_join")
-    for ((name, fn) <- SparkEntry.queries if !skip(name)) {
+    for ((name, fn) <- SparkEntry.queries if !sideEffecting(name)) {
       val frames = fn(spark, sf).queryExecution.optimizedPlan.collect {
         case w: LWindow => w.windowExpressions.flatMap(_.collect {
           case WindowExpression(_, WindowSpecDefinition(_, _,

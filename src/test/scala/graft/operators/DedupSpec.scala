@@ -1003,16 +1003,14 @@ class DedupSpec extends SparkSpec {
       Dedup.crossContainmentPairs(needles, corpus, "text", "doc_id", 0.7,
         shingleK = 2).count()
     }
-    // probe/internal paths too: candidates-only entry points
+    // the candidates-only entry point too
     (1 to 4).foreach { _ =>
       Dedup.prefixCandidateCount(corpus, "text", "doc_id", 0.5, 2)
-      Dedup.containmentCandidates(
-        Dedup.prefixTokenSets(corpus, "text", "doc_id", 2), 0.7).count()
     }
     val after = probe.numCachedPlans(spark)
     assert(after == before,
       s"posting persists leaked: $before cached plans before, $after after " +
-        "110 operator calls — a long-lived session would accumulate " +
+        "106 operator calls — a long-lived session would accumulate " +
         "MEMORY_AND_DISK blocks until an explicit clearCache()")
     // a guard REFUSAL must not leak either: the throw happens after the
     // posting stages persist, so the refusing path unpersists on its way out

@@ -67,6 +67,18 @@ class EntriesSpec extends SparkSpec {
     // idempotent re-run (same rows merge in place, no duplicates)
     ShardedJdbcLoad.run(spark, shards, Seq(cfg), root, journal = Some(journal))
     assert(new graft.merge.ParquetTable(spark, s"$root/people").read.count() == 3)
+
+    // both shards write one target concurrently; each fact carries its own
+    // shard's commit metrics (every commit but the creating one is a merge,
+    // which records numSourceRows)
+    val facts = journal.facts.read
+      .select(col("pipelineDefId"), col("outputRows"), col("operationMetrics")("numSourceRows"))
+      .collect().map(r => (r.getString(0), r.getLong(1), Option(r.getString(2))))
+    assert(facts.length == 4 && facts.count(_._3.isDefined) == 3)
+    facts.foreach { case (id, out, src) =>
+      val rows = Map("pdj@s1" -> 2L, "pdj@s2" -> 1L)(id)
+      assert(out == rows && src.forall(_ == rows.toString), (id, out, src))
+    }
   }
 
   test("RERUN_BATCH re-runs only the failed pipeline; Finished on attempt 2") {
@@ -98,6 +110,15 @@ class EntriesSpec extends SparkSpec {
     // PIPELINE arg runs exactly the named set
     val r3 = Dispatch.run(spark, Seq("PIPELINE", "pd_a"), Seq(cfgA, cfgB), source, root, journal)
     assert(r3.keySet == Set("pd_a_ta"))
+    // an unknown or missing id is refused before anything runs
+    val bVersion = new graft.merge.ParquetTable(spark, s"$root/tb").latestVersion
+    for (args <- Seq(Seq("PIPELINE pd_x,pd_a"), Seq("PIPELINE"), Seq("PIPELINE", " , "))) {
+      val e = intercept[IllegalArgumentException](
+        Dispatch.run(spark, args, Seq(cfgA, cfgB), source, root, journal))
+      assert(e.getMessage.contains("known: pd_a, pd_b"), args)
+      if (args.head.contains("pd_x")) assert(e.getMessage.contains("unknown pipeline id(s): pd_x"))
+    }
+    assert(new graft.merge.ParquetTable(spark, s"$root/tb").latestVersion == bVersion)
   }
 
   test("history load drains a throttled table stream across multiple triggers") {

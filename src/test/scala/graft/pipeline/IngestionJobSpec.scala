@@ -139,6 +139,20 @@ class IngestionJobSpec extends SparkSpec {
       CdcProcessor.PiiRule("b", false, CdcProcessor.Encrypt(codec))))
   }
 
+  test("colliding pipeline names are refused before any pipeline starts") {
+    val root = tmpDir("ingest_collide")
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val b = envelope(Seq(("c", 1L, "alice", 1L)))
+    def run(rows: Seq[(String, String)]) = intercept[IllegalArgumentException](
+      IngestionJob.run(spark, rows.map { case (d, t) => TableConfig.fromRow(cfgRow(d, t)) },
+        _ => () => { started.incrementAndGet(); b }, root)).getMessage
+    val split = run(Seq(("a_b", "c"), ("a", "b_c"), ("ok", "t")))
+    assert(split.contains("a_b_c <- rows (a_b, c), (a, b_c)") && !split.contains("ok_t"), split)
+    assert(run(Seq(("pd1", "people"), ("pd1", "people")))
+      .contains("pd1_people <- rows (pd1, people), (pd1, people)"))
+    assert(started.get == 0)
+  }
+
   test("keysFirst reorders merge keys to the front") {
     val df = Seq((1, "x", 2)).toDF("a", "b", "k")
     assert(CdcProcessor.keysFirst(df, Seq("k")).columns.toSeq == Seq("k", "a", "b"))

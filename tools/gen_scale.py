@@ -1,5 +1,8 @@
 #!/usr/bin/env python3
-"""Generate an sf1-scale diagnostic corpus (10x sf0.1) for graft.ScaleProbe.
+"""Generate an sf1-scale diagnostic corpus (10x sf0.1) of documents and embeddings.
+
+Point graft.Bench at it (SPARK_GRAFT_SF_DIR) with the document and embedding
+queries named, and compare the records with tools/growth.py.
 
 The driver ships sf{0.001,0.01,0.1} only; the scale-proof sweep needs one
 more decade. Row REPLICATION would corrupt the near-dup structure (every doc
