@@ -215,15 +215,19 @@ final class ParquetTable(val spark: SparkSession, val root: String,
       files.filter(f => hit(f.values(partitionKeys)))
     }
 
-  /** The table restricted to the partitions `batch` touches — the same
-    * manual DPP `merge` applies, exposed so callers that stage multi-step
-    * merge sources (SCD2's rows-to-insert probe, SCD4's history snapshot
-    * join) can bound their target READS as well as the rewrite. The whole
-    * table when it is unpartitioned. */
-  def readPruned(batch: DataFrame): DataFrame = {
-    val (v, s, files) = snapshot
+  /** The live files of the partitions `batch` touches — the same manual
+    * DPP `merge` applies, for writers that stage multi-step merge sources
+    * (SCD2's rows-to-insert probe, SCD4's history snapshot join): they
+    * collect the files once, under this table's lock, read only those with
+    * [[readFiles]] and replace them with [[mergeReplacing]]. Every live
+    * file when the table is unpartitioned. */
+  private[merge] def touchedFiles(batch: DataFrame): Seq[DataFile] =
+    touched(liveFiles, batch)
+
+  private[merge] def readFiles(files: Seq[DataFile]): DataFrame = {
+    val (v, s, _) = snapshot
     require(v >= 0, s"table $root does not exist")
-    scan(s, touched(files, batch))
+    scan(s, files)
   }
 
   /** Create with initial contents (ref create-if-absent probe `checkTable`,
@@ -256,11 +260,24 @@ final class ParquetTable(val spark: SparkSession, val root: String,
             matched: Seq[MergeInto.WhenMatched],
             notMatched: Seq[MergeInto.WhenNotMatched],
             txn: Option[(String, Long)] = None,
-            metrics: Map[String, String] = Map.empty): Unit = monitor.synchronized {
+            metrics: Map[String, String] = Map.empty): Unit =
+    mergeReplacing(updates, condition, matched, notMatched, txn, metrics, None)
+
+  /** [[merge]], replacing `given` files when the caller has already
+    * collected the partitions `updates` touches ([[touchedFiles]] under this
+    * table's lock): they must all still be live. */
+  private[merge] def mergeReplacing(updates: DataFrame, condition: String,
+                                    matched: Seq[MergeInto.WhenMatched],
+                                    notMatched: Seq[MergeInto.WhenNotMatched],
+                                    txn: Option[(String, Long)],
+                                    metrics: Map[String, String],
+                                    given: Option[Seq[DataFile]]): Unit = monitor.synchronized {
     if (txn.exists { case (a, v) => seenTxn(a, v) }) return
     val (v, s, files) = snapshot
     require(v >= 0, s"merge target $root does not exist")
-    val replaced = touched(files, updates)
+    val replaced = given.getOrElse(touched(files, updates))
+    require(replaced.map(_.path).toSet.subsetOf(files.map(_.path).toSet),
+      s"merge into $root names files that are no longer live")
     val merged = MergeInto(scan(s, replaced), updates, condition, matched, notMatched)
     commit(v + 1, "MERGE", Some(merged), s, replaced, metrics, txn)
   }

@@ -1,6 +1,9 @@
 package graft.merge
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,6 +18,14 @@ import MergeInto._
   *     oracle can check and the form used by `SparkEntry.queries`.
   *   - `writeScdN`: table-backed variant over [[ParquetTable]] with dedup,
   *     partition-pruned COW rewrite and commit metrics.
+  *
+  * A table-backed writer materializes its batch once: the deduped rows are
+  * checkpointed by one job, outside the table's lock, and that job also
+  * counts the rows before and after the dedup (two Observations). Every
+  * commit it makes, the creating one included, records both counts as
+  * `numInputRows` and `numSourceRows`, and the writer returns them. Later
+  * plans read the checkpointed rows, so no count, dedup or source read
+  * runs twice.
   *
   * Scale: each SCD application is one shuffled equi-join on the merge keys
   * (broadcast when the batch is small) + codegen'd CASE projection; the
@@ -35,6 +46,43 @@ object Scd {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** How long a writer waits for a batch's row counts after the job that
+    * counted them has returned (they arrive through the listener bus). */
+  private val observationWait = 2.minutes
+
+  /** The row count `obs` observed, failing with a named cause when it does
+    * not arrive within `within`. Spark delivers an empty row when its
+    * optimizer removed the observed plan, as it does for an input it has
+    * proved empty (an empty batch under the dedup's window). */
+  private[merge] def observedRows(obs: Observation, what: String,
+                                  within: FiniteDuration = observationWait): Long = {
+    val row =
+      try Await.result(obs.future, within)
+      catch { case e: TimeoutException =>
+        throw new IllegalStateException(
+          s"$what: the batch's row count was not delivered within $within", e) }
+    if (row.length == 0) 0L else row.getLong(0)
+  }
+
+  /** `updates` deduped by key and checkpointed by one job, with the commit
+    * metrics that job observed: `numInputRows` before the dedup and
+    * `numSourceRows` after it. */
+  private def materialize(updates: DataFrame, keySpecs: Seq[String],
+                          dedupOrderCols: Seq[String]): (DataFrame, Map[String, String]) = {
+    val (in, src) = (Observation(), Observation())
+    val observed = updates.observe(in, count(lit(1)).as("rows"))
+    val deduped =
+      if (dedupOrderCols.isEmpty) observed
+      else dedupByKey(observed, extractJoinKeys(keySpecs), dedupOrderCols)
+    val batch = deduped.observe(src, count(lit(1)).as("rows")).localCheckpoint()
+    (batch, Map(
+      "numInputRows" -> observedRows(in, "numInputRows").toString,
+      "numSourceRows" -> observedRows(src, "numSourceRows").toString))
+  }
+
+  private def seen(table: ParquetTable, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (a, v) => table.seenTxn(a, v) }
+
   // -------------------------------------------------------------------------
   // SCD TYPE 1 — upsert in place (ref M/utility/Utility.scala:394-479)
   // -------------------------------------------------------------------------
@@ -54,24 +102,23 @@ object Scd {
                 notMatched: Seq[WhenNotMatched] = Seq(WhenNotMatched(None, InsertAll)),
                 dedupOrderCols: Seq[String] = Nil,
                 extraCondition: Option[String] = None,
-                txn: Option[(String, Long)] = None): Unit = table.withLock {
-    val keys = extractJoinKeys(keySpecs)
-    val deduped = if (dedupOrderCols.nonEmpty) dedupByKey(updates, keys, dedupOrderCols)
-                  else updates
-    if (!table.exists) {
-      // Bootstrap applies the INSERT clause logic, not the raw batch: a
-      // first batch containing delete tombstones (e.g. row_active=false
-      // rows excluded by a conditional insert) must not become live rows.
-      // Joining on `false` makes every update row take the not-matched path.
-      val seeded = MergeInto(deduped.filter(lit(false)), deduped, "false",
-        Nil, notMatched)
-      table.create(seeded, txn = txn) // txn recorded so a replayed batch 0 is skipped
-    } else {
-      if (txn.exists { case (a, v) => table.seenTxn(a, v) }) return // before paying count()
-      table.merge(deduped, buildJoinCondition(keySpecs, extraCondition),
-        matched, notMatched, txn,
-        metrics = Map("numSourceRows" -> deduped.count().toString))
+                txn: Option[(String, Long)] = None): Map[String, String] = {
+    if (seen(table, txn)) return Map.empty // before materializing the batch
+    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
+    table.withLock {
+      if (!table.exists) {
+        // Bootstrap applies the INSERT clause logic, not the raw batch: a
+        // first batch containing delete tombstones (e.g. row_active=false
+        // rows excluded by a conditional insert) must not become live rows.
+        // Joining on `false` makes every update row take the not-matched path.
+        val seeded = MergeInto(batch.filter(lit(false)), batch, "false",
+          Nil, notMatched)
+        table.create(seeded, metrics, txn) // txn recorded so a replayed batch 0 is skipped
+      } else
+        table.merge(batch, buildJoinCondition(keySpecs, extraCondition),
+          matched, notMatched, txn, metrics)
     }
+    metrics
   }
 
   // -------------------------------------------------------------------------
@@ -170,33 +217,35 @@ object Scd {
                 insertMap: Map[String, String],
                 dedupOrderCols: Seq[String] = Nil,
                 extraCondition: Option[String] = None,
-                txn: Option[(String, Long)] = None): Unit = table.withLock {
-    val keys = extractJoinKeys(keySpecs)
-    val deduped = if (dedupOrderCols.nonEmpty) dedupByKey(updates, keys, dedupOrderCols)
-                  else updates
-    if (!table.exists) {
-      // Bootstrap must already be SCD2-SHAPED (current_flag/expiry columns
-      // the later matchCondition references): evaluate the insertMap over the
-      // batch — exactly the rows the not-matched clause would have produced.
-      val seeded = deduped.alias("updates").select(insertMap.toSeq.map {
-        case (k, v) => expr(v).as(k.split('.').last)
-      }: _*)
-      table.create(seeded, txn = txn)
-      return
+                txn: Option[(String, Long)] = None): Map[String, String] = {
+    if (seen(table, txn)) return Map.empty
+    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
+    table.withLock {
+      if (!table.exists) {
+        // Bootstrap must already be SCD2-SHAPED (current_flag/expiry columns
+        // the later matchCondition references): evaluate the insertMap over the
+        // batch — exactly the rows the not-matched clause would have produced.
+        val seeded = batch.alias("updates").select(insertMap.toSeq.map {
+          case (k, v) => expr(v).as(k.split('.').last)
+        }: _*)
+        table.create(seeded, metrics, txn)
+      } else {
+        // Partition-bounded SCD2 (ref splices manual DPP into its SCD2 merge,
+        // M/utility/Utility.scala:524-527,548-551): the rows-to-insert probe
+        // joins against only the partitions the batch touches, and the staged
+        // source — whose insert rows carry real partition values, so it
+        // touches exactly the batch's partitions — rides through the same
+        // files' COW. A CDC micro-batch neither reads nor rewrites untouched
+        // partitions, and collects the touched ones once.
+        val replaced = table.touchedFiles(batch)
+        val (staged, mergeCond) = scd2Source(table.readFiles(replaced), batch,
+          keySpecs, matchCondition, extraCondition)
+        table.mergeReplacing(staged, mergeCond,
+          Seq(WhenMatched(Some(matchCondition), UpdateExpr(updateMap))),
+          Seq(WhenNotMatched(None, InsertExpr(insertMap))), txn, metrics, Some(replaced))
+      }
     }
-    if (txn.exists { case (a, v) => table.seenTxn(a, v) }) return
-    // Partition-bounded SCD2 (ref splices manual DPP into its SCD2 merge,
-    // M/utility/Utility.scala:524-527,548-551): the rows-to-insert probe joins
-    // against only the partitions the batch touches, and the staged source —
-    // whose insert rows carry real partition values — rides through
-    // ParquetTable.merge's touched-partition COW. A CDC micro-batch neither
-    // reads nor rewrites untouched partitions.
-    val (staged, mergeCond) = scd2Source(table.readPruned(deduped), deduped,
-      keySpecs, matchCondition, extraCondition)
-    table.merge(staged, mergeCond,
-      matched = Seq(WhenMatched(Some(matchCondition), UpdateExpr(updateMap))),
-      notMatched = Seq(WhenNotMatched(None, InsertExpr(insertMap))),
-      txn = txn, metrics = Map("numSourceRows" -> deduped.count().toString))
+    metrics
   }
 
   // -------------------------------------------------------------------------
@@ -247,31 +296,32 @@ object Scd {
                 keySpecs: Seq[String], updatedAtCol: String = "updated_at",
                 dedupOrderCols: Seq[String] = Nil,
                 extraCondition: Option[String] = None,
-                txn: Option[(String, Long)] = None): Unit = current.withLock {
-    val keys = extractJoinKeys(keySpecs)
-    val deduped = if (dedupOrderCols.nonEmpty) dedupByKey(updates, keys, dedupOrderCols)
-                  else updates
-    if (!current.exists) {
-      // Only ACTIVE rows seed the table (a delete tombstone in the first
-      // batch must not appear as a live current row).
-      val seeded = MergeInto(deduped.filter(lit(false)), deduped, "false",
-        Nil, Seq(WhenNotMatched(Some("updates.row_active = true"), InsertAll)))
-      current.create(seeded, txn = txn)
-      return
+                txn: Option[(String, Long)] = None): Map[String, String] = {
+    if (seen(current, txn)) return Map.empty
+    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
+    current.withLock {
+      if (!current.exists) {
+        // Only ACTIVE rows seed the table (a delete tombstone in the first
+        // batch must not appear as a live current row).
+        val seeded = MergeInto(batch.filter(lit(false)), batch, "false",
+          Nil, Seq(WhenNotMatched(Some("updates.row_active = true"), InsertAll)))
+        current.create(seeded, metrics, txn)
+      } else {
+        // Partition-bounded SCD4: the history snapshot join reads only the
+        // partitions the batch touches, and the current table takes the same
+        // clause matrix through the same files' COW instead of a full-table
+        // overwrite. History is appended FIRST — it materializes while
+        // current's data files are still the ones its plan reads; the txn
+        // record rides on BOTH tables so a replayed batch neither re-appends
+        // history nor re-merges current.
+        val replaced = current.touchedFiles(batch)
+        val histRows = scd4HistoryRows(current.readFiles(replaced), batch,
+          keySpecs, updatedAtCol, extraCondition)
+        history.append(histRows, txn = txn)
+        current.mergeReplacing(batch, buildJoinCondition(keySpecs, extraCondition),
+          scd4Matched, scd4NotMatched, txn, metrics, Some(replaced))
+      }
     }
-    if (txn.exists { case (a, v) => current.seenTxn(a, v) }) return
-    // Partition-bounded SCD4: the history snapshot join reads only the
-    // partitions the batch touches, and the current table takes the same
-    // clause matrix through ParquetTable.merge's touched-partition COW
-    // instead of a full-table overwrite. History is appended FIRST — it
-    // materializes while current's data files are still the ones its plan
-    // reads; the txn record rides on BOTH tables so a replayed batch neither
-    // re-appends history nor re-merges current.
-    val histRows = scd4HistoryRows(current.readPruned(deduped), deduped,
-      keySpecs, updatedAtCol, extraCondition)
-    history.append(histRows, txn = txn)
-    current.merge(deduped, buildJoinCondition(keySpecs, extraCondition),
-      matched = scd4Matched, notMatched = scd4NotMatched,
-      txn = txn, metrics = Map("numSourceRows" -> deduped.count().toString))
+    metrics
   }
 }

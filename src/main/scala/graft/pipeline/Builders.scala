@@ -117,8 +117,6 @@ final class PipelineBuilder private (spark: SparkSession) {
   private var pName: String = ""
   private var runId: String = ""
   private var batchId: String = ""
-  private var productName: String = ""
-  private var topicName: String = ""
   private var pipelineDefId: String = ""
   private var tableName: String = ""
   private var scd1: Option[MergeScd1Options] = None
@@ -132,8 +130,6 @@ final class PipelineBuilder private (spark: SparkSession) {
   def setPipelineName(n: String): PipelineBuilder = { pName = n; this }
   def setRunId(id: String): PipelineBuilder = { runId = id; this }
   def setBatchId(id: String): PipelineBuilder = { batchId = id; this }
-  def setProductName(n: String): PipelineBuilder = { productName = n; this }
-  def setTopicName(n: String): PipelineBuilder = { topicName = n; this }
   def setPipelineDefId(id: String): PipelineBuilder = { pipelineDefId = id; this }
   def setTableName(n: String): PipelineBuilder = { tableName = n; this }
   def setJournal(j: Journal): PipelineBuilder = { journal = Some(j); this }
@@ -163,11 +159,16 @@ final class PipelineBuilder private (spark: SparkSession) {
 
   /** Writer node merging `processedDf` into `targetRoot/<tableName>` by
     * whichever mergeSCD*Options was set — the exact
-    * [[IngestionJob.writeBatch]] path the functional API uses. */
+    * [[IngestionJob.writeBatch]] path the functional API uses. With a
+    * journal set, the writer journals its fact as soon as it has committed,
+    * under the runId set by setRunId (a fresh UUID when none was). */
   def addWriter(afterNodeKey: String, key: String, targetRoot: String): PipelineBuilder =
     addAfter(afterNodeKey, key) { (s, in) =>
-      Map("written" -> IngestionJob.writeBatch(s, toConfig, targetRoot,
-        in("processedDf"), journal))
+      val (written, fact) = IngestionJob.writeBatch(s, toConfig, targetRoot,
+        in("processedDf"))
+      journal.foreach(j => j.logFacts(Seq(
+        if (runId.isEmpty) fact else fact.copy(runId = runId))))
+      Map("written" -> written)
     }
 
   /** The merge options re-expressed as the metadata row the functional core

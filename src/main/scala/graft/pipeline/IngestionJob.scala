@@ -14,12 +14,13 @@ object IngestionJob {
 
   /** Build a batch CDC pipeline for one control row: `source` supplies the
     * envelope frame (already read), the processor applies the config-driven
-    * transforms, the writer merges into the target ParquetTable by SCD type. */
+    * transforms, the writer merges into the target ParquetTable by SCD type
+    * and hands its journal fact to `onFact`. */
   def buildPipeline(spark: SparkSession, cfg: TableConfig,
                     source: () => DataFrame,
                     targetRoot: String,
                     shardMappings: Option[DataFrame] = None,
-                    journal: Option[Journal] = None,
+                    onFact: Journal.Fact => Unit = _ => (),
                     piiRules: Seq[CdcProcessor.PiiRule] = Nil): Pipeline = {
     val p = new Pipeline(s"${cfg.pipelineDefId}_${cfg.tableName}", spark)
 
@@ -42,57 +43,58 @@ object IngestionJob {
 
     p.addAfter(s"${cfg.tableName}_processor", new Task {
       val name = s"${cfg.tableName}_writer"
-      def run(s: SparkSession, in: Map[String, DataFrame]): Map[String, DataFrame] =
-        Map("written" -> writeBatch(s, cfg, targetRoot, in("processedDf"), journal))
+      def run(s: SparkSession, in: Map[String, DataFrame]): Map[String, DataFrame] = {
+        val (written, fact) = writeBatch(s, cfg, targetRoot, in("processedDf"))
+        onFact(fact)
+        Map("written" -> written)
+      }
     })
     p
   }
 
   /** Writer body shared by [[buildPipeline]] and the fluent
-    * [[PipelineBuilder]] facade: materialize the processed batch ONCE
-    * (counting and merging would otherwise each re-run the full
-    * source->processor plan), merge by SCD type, journal the fact. */
+    * [[PipelineBuilder]] facade: merge the processed batch by SCD type and
+    * return the target with the batch's journal fact.
+    *
+    * The SCD writer materializes the batch once and returns its commit's
+    * metrics, counted by that same job: `numInputRows` (the processed rows)
+    * becomes the fact's inputRows and `numSourceRows` (the rows left after
+    * the dedup) its outputRows. The fact's runId is a fresh UUID; the
+    * caller journals it. */
   private[pipeline] def writeBatch(s: SparkSession, cfg: TableConfig,
-                                   targetRoot: String, processed: DataFrame,
-                                   journal: Option[Journal]): DataFrame = {
-    val batch = processed.localCheckpoint()
+                                   targetRoot: String,
+                                   processed: DataFrame): (DataFrame, Journal.Fact) = {
     val table = new ParquetTable(s, s"$targetRoot/${cfg.tableName}", cfg.partitionKeys)
-    val n = batch.count()
-    // Read this commit's metrics before releasing the table's monitor:
-    // pipelines sharing a target (one per JDBC shard) commit concurrently,
-    // and a later read could return another pipeline's commit.
-    val metrics = table.withLock {
-      cfg.scdType match {
-        case "scd2" =>
-          val (mc, um, im) = cfg.scd2Spec.getOrElse(
-            throw new IllegalArgumentException(s"scd2 row ${cfg.pipelineDefId} lacks merge spec"))
-          Scd.writeScd2(table, batch, cfg.joinKeys, mc, um, im,
-            dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
-        case "scd4" =>
-          val hist = new ParquetTable(s, s"$targetRoot/${cfg.tableName}_history")
-          Scd.writeScd4(table, hist, batch, cfg.joinKeys, cfg.updatedAtCol,
-            dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
-        case _ =>
-          Scd.writeScd1(table, batch, cfg.joinKeys, cfg.matched, cfg.notMatched,
-            dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
-      }
-      table.lastMetrics
+    val metrics = cfg.scdType match {
+      case "scd2" =>
+        val (mc, um, im) = cfg.scd2Spec.getOrElse(
+          throw new IllegalArgumentException(s"scd2 row ${cfg.pipelineDefId} lacks merge spec"))
+        Scd.writeScd2(table, processed, cfg.joinKeys, mc, um, im,
+          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+      case "scd4" =>
+        val hist = new ParquetTable(s, s"$targetRoot/${cfg.tableName}_history")
+        Scd.writeScd4(table, hist, processed, cfg.joinKeys, cfg.updatedAtCol,
+          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+      case _ =>
+        Scd.writeScd1(table, processed, cfg.joinKeys, cfg.matched, cfg.notMatched,
+          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
     }
-    journal.foreach { j =>
-      // outputRows comes from the commit metrics, NOT a full target scan
-      // (at scale that scan would dwarf the merge itself)
-      val written = metrics.get("numSourceRows").map(_.toLong).getOrElse(n)
-      j.logFact(cfg.pipelineDefId, java.util.UUID.randomUUID().toString, n,
-        written, metrics)
-    }
-    table.read
+    (table.read, Journal.Fact(cfg.pipelineDefId, java.util.UUID.randomUUID().toString,
+      metrics("numInputRows").toLong, metrics("numSourceRows").toLong, metrics))
   }
 
-  /** Run pipelines for all control rows concurrently; journal statuses.
+  /** Run pipelines for all control rows concurrently, then journal the run.
     * Returns per-pipeline success, keyed by pipeline name
     * (`pipelineDefId_tableName`). Rows whose names collide are refused
     * before any pipeline starts: their results would share one key, and
-    * the journal would log one outcome for all of them. */
+    * the journal would log one outcome for all of them.
+    *
+    * The journal takes two commits per run, after every pipeline has ended:
+    * one pipeline_fact commit with the fact of each writer that finished,
+    * then one pipeline_status commit with each pipeline's outcome. A run
+    * that dies before them journals nothing. Every job the run starts
+    * carries the local property [[Pipeline.TaskProperty]]: its pipeline and
+    * task, or `IngestionJob.run/journal` for the two journal commits. */
   def run(spark: SparkSession, controlRows: Seq[TableConfig],
           source: TableConfig => () => DataFrame,
           targetRoot: String,
@@ -100,9 +102,12 @@ object IngestionJob {
           journal: Option[Journal] = None,
           parallelism: Int = 4,
           piiRules: Seq[CdcProcessor.PiiRule] = Nil): Map[String, Boolean] = {
-    val pipelines = controlRows.map(cfg =>
-      cfg -> buildPipeline(spark, cfg, source(cfg), targetRoot, shardMappings, journal,
-        piiRules))
+    // each finished writer's fact, by control-row index
+    val facts = new java.util.concurrent.ConcurrentHashMap[Int, Journal.Fact]()
+    val pipelines = controlRows.zipWithIndex.map { case (cfg, i) =>
+      cfg -> buildPipeline(spark, cfg, source(cfg), targetRoot, shardMappings,
+        f => facts.put(i, f), piiRules)
+    }
     val collisions = pipelines.groupBy(_._2.name).filter(_._2.size > 1)
     require(collisions.isEmpty, "pipeline names collide: " + collisions.toSeq.sortBy(_._1)
       .map { case (name, ps) =>
@@ -111,11 +116,14 @@ object IngestionJob {
       }.mkString("; "))
     val results = PipelineRunner.runAll(pipelines.map(_._2), parallelism)
     journal.foreach { j =>
-      pipelines.foreach { case (cfg, p) =>
+      Pipeline.tagged(spark, "IngestionJob.run/journal") {
+        j.logFacts(pipelines.indices.flatMap(i => Option(facts.get(i))))
         // journal the REAL pipelineDefId (splitting the composite pipeline
         // name would truncate ids containing underscores)
-        j.logStatus(cfg.pipelineDefId, p.name,
-          if (results.getOrElse(p.name, false)) "Finished" else "Error")
+        j.logStatuses(pipelines.map { case (cfg, p) =>
+          Journal.Status(cfg.pipelineDefId, p.name,
+            if (results.getOrElse(p.name, false)) "Finished" else "Error")
+        })
       }
     }
     results

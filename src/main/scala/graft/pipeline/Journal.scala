@@ -17,6 +17,12 @@ import graft.merge.ParquetTable
   *   - pipeline_fact: per-run row counts + commit metrics, partitioned by
   *     (lastUpdateDate, pipelineDefId) exactly like the reference;
   *   - pipeline_error_logs: offending rows concat_ws'd into one column.
+  *
+  * Every log call is one commit of its table, whatever the number of rows:
+  * [[IngestionJob.run]] journals a whole run as one [[logFacts]] and one
+  * [[logStatuses]] after its pipelines end, while writers that journal as
+  * they go (the streaming sinks, a [[PipelineBuilder]] writer) append one
+  * row per commit.
   */
 final class Journal(spark: SparkSession, root: String) {
   import spark.implicits._
@@ -39,15 +45,27 @@ final class Journal(spark: SparkSession, root: String) {
 
   def logStatus(pipelineDefId: String, taskName: String, state: String,
                 detail: String = ""): Unit =
-    status.append(statusRows(Seq((pipelineDefId, taskName, state, detail, now))))
+    logStatuses(Seq(Journal.Status(pipelineDefId, taskName, state, detail)))
+
+  /** All of `rows` in one status commit; none when `rows` is empty. */
+  def logStatuses(rows: Seq[Journal.Status]): Unit = if (rows.nonEmpty) {
+    val at = now
+    status.append(statusRows(rows.map(r =>
+      (r.pipelineDefId, r.taskName, r.state, r.detail, at))))
+  }
 
   def logFact(pipelineDefId: String, runId: String, inputRows: Long,
-              outputRows: Long, metrics: Map[String, String] = Map.empty): Unit = {
-    val row = Seq((pipelineDefId, runId, inputRows, outputRows, metrics, now))
+              outputRows: Long, metrics: Map[String, String] = Map.empty): Unit =
+    logFacts(Seq(Journal.Fact(pipelineDefId, runId, inputRows, outputRows, metrics)))
+
+  /** All of `rows` in one fact commit; none when `rows` is empty. */
+  def logFacts(rows: Seq[Journal.Fact]): Unit = if (rows.nonEmpty) {
+    val at = now
+    facts.append(rows.map(f =>
+        (f.pipelineDefId, f.runId, f.inputRows, f.outputRows, f.metrics, at))
       .toDF("pipelineDefId", "runId", "inputRows", "outputRows",
         "operationMetrics", "lastUpdate")
-      .withColumn("lastUpdateDate", to_date(col("lastUpdate")))
-    facts.append(row)
+      .withColumn("lastUpdateDate", to_date(col("lastUpdate"))))
   }
 
   /** Error rows journaled as one pipe-joined string column (ref
@@ -80,4 +98,15 @@ final class Journal(spark: SparkSession, root: String) {
     if (!status.exists) Nil
     else latestStatus.filter(col("status") === "Error")
       .select("pipelineDefId").distinct().as[String].collect().toSeq
+}
+
+object Journal {
+
+  /** One pipeline_status row: a task's state after a run. */
+  final case class Status(pipelineDefId: String, taskName: String, state: String,
+                          detail: String = "")
+
+  /** One pipeline_fact row: a writer's row counts and its commit's metrics. */
+  final case class Fact(pipelineDefId: String, runId: String, inputRows: Long,
+                        outputRows: Long, metrics: Map[String, String])
 }

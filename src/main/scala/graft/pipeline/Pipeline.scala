@@ -88,7 +88,7 @@ final class Pipeline(val name: String, spark: SparkSession) {
           // child input = union of all parents' named outputs (ref
           // Pipeline.scala:214-223 merging parent taskOutputDataFrames)
           val in = parents(n).flatMap(p => outputs.getOrElse(p, Map.empty)).toMap
-          n -> Future(Try(tasks(n).run(spark, in)))
+          n -> Future(Try(Pipeline.tagged(spark, s"$name/$n")(tasks(n).run(spark, in))))
         }
         fs.foreach { case (n, f) =>
           Await.result(f, Duration.Inf) match {
@@ -105,6 +105,25 @@ final class Pipeline(val name: String, spark: SparkSession) {
       }
       tasks.keys.forall(status(_) == TaskStatus.Finished)
     } finally pool.shutdown()
+  }
+}
+
+object Pipeline {
+
+  /** The local property naming the `<pipeline>/<task>` whose body started
+    * a job. Spark copies local properties into the jobs AQE submits from
+    * its own threads, so every job of a task carries it. The job group and
+    * description are left alone: measurement tools attribute jobs by
+    * group. */
+  val TaskProperty = "graft.task"
+
+  /** Runs `body` with [[TaskProperty]] set to `task` on this thread, and
+    * restores the previous value afterwards. */
+  def tagged[T](spark: SparkSession, task: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(TaskProperty)
+    sc.setLocalProperty(TaskProperty, task)
+    try body finally sc.setLocalProperty(TaskProperty, prev)
   }
 }
 

@@ -136,6 +136,50 @@ class ScdRegressionSpec extends SparkSpec {
     assert(t1.read.select("k").as[Int].collect().toSeq == Seq(1))
   }
 
+  test("writers count the batch they write: empty and tombstone-only batches, each SCD type") {
+    val ts0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    def batch(rows: Seq[(Int, String, Boolean, Int)]) = rows
+      .map { case (k, v, active, t) => (k, v, false, active, new java.sql.Timestamp(ts0.getTime + t)) }
+      .toDF("k", "v", "deleted_flag", "row_active", "updated_at")
+    val empty = batch(Nil)
+    // key 1 twice: the dedup keeps its newest row
+    val tombstones = batch(Seq((1, "x", false, 0), (1, "y", false, 1), (2, "z", false, 0)))
+    val activeOnly = Seq(MergeInto.WhenNotMatched(Some("updates.row_active = true"),
+      MergeInto.InsertAll))
+    val insertMap = Map("k" -> "updates.k", "v" -> "updates.v", "current_flag" -> "true")
+    val writers: Seq[(String, ParquetTable => org.apache.spark.sql.DataFrame => Map[String, String])] = Seq(
+      "scd1" -> (t => b => Scd.writeScd1(t, b, Seq("k"), notMatched = activeOnly,
+        dedupOrderCols = Seq("updated_at"))),
+      "scd2" -> (t => b => Scd.writeScd2(t, b, Seq("k"),
+        "target.current_flag = true AND target.v <> updates.v",
+        Map("current_flag" -> "false"), insertMap, dedupOrderCols = Seq("updated_at"))),
+      "scd4" -> { t =>
+        val hist = new ParquetTable(spark, t.root + "_history")
+        b => Scd.writeScd4(t, hist, b, Seq("k"), dedupOrderCols = Seq("updated_at"))
+      })
+    def counts(in: Int, src: Int) =
+      Map("numInputRows" -> in.toString, "numSourceRows" -> src.toString)
+    for ((scd, write) <- writers) {
+      val t = new ParquetTable(spark, tmpDir(s"count_$scd"))
+      // an empty first batch creates an empty table; an empty merge commits
+      assert(write(t)(empty) == counts(0, 0) && t.lastMetrics == counts(0, 0), scd)
+      assert(t.read.count() == 0, scd)
+      assert(write(t)(empty) == counts(0, 0) && t.latestVersion == 1, scd)
+      // a first batch of delete tombstones only
+      val t2 = new ParquetTable(spark, tmpDir(s"tomb_$scd"))
+      assert(write(t2)(tombstones) == counts(3, 2) && t2.lastMetrics == counts(3, 2), scd)
+      val live = if (scd == "scd2") 2 else 0 // SCD2 has no tombstones: both keys are versions
+      assert(t2.read.count() == live, scd)
+    }
+  }
+
+  test("a batch's row count that never arrives fails with a named cause") {
+    import scala.concurrent.duration._
+    val e = intercept[IllegalStateException](
+      Scd.observedRows(org.apache.spark.sql.Observation(), "numSourceRows", 50.millis))
+    assert(e.getMessage.contains("numSourceRows") && e.getMessage.contains("not delivered"))
+  }
+
   test("operator key specs parse correctly for both sides") {
     assert(MergeInto.extractJoinKeys(Seq("a != b", "x < y", "k")) == Seq("b", "y", "k"))
     assert(MergeInto.extractTargetKeys(Seq("a != b", "x < y", "k")) == Seq("a", "x", "k"))

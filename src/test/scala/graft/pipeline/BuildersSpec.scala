@@ -89,6 +89,29 @@ class BuildersSpec extends SparkSpec {
     assert(m(2L)._2 == true)
   }
 
+  test("a journaled builder run records its fact under the runId set, else a fresh one") {
+    val journal = new Journal(spark, tmpDir("builders_journal"))
+    val root = tmpDir("builders_runid")
+    def run(runId: Option[String], batch: DataFrame): Boolean = {
+      val b = PipelineBuilder.start(spark)
+        .setPipelineDefId("pd1").setTableName("people").setJournal(journal)
+        .setMergeSCD1Options(MergeScd1Options(cfg.joinKeys, cfg.matched,
+          cfg.notMatched, cfg.dedupKeys, cfg.extraJoinCond, cfg.partitionKeys))
+      runId.foreach(b.setRunId)
+      b.addReader("r", () => batch)
+        .addProcessor("r", "p", ProcessorBuilder.start().setJoinKeys(cfg.joinKeys).build())
+        .addWriter("p", "w", root)
+        .build().run()
+    }
+    assert(run(Some("run-7"), envelope(Seq(("c", 1L, "alice", 1L), ("c", 2L, "bob", 1L)))))
+    assert(run(None, envelope(Seq(("u", 1L, "alicia", 2L)))))
+    val facts = journal.facts.read.select("runId", "inputRows", "operationMetrics")
+      .as[(String, Long, Map[String, String])].collect().sortBy(-_._2)
+    assert(facts.map(_._1).head == "run-7")
+    assert(java.util.UUID.fromString(facts(1)._1).toString == facts(1)._1)
+    assert(facts.map(f => (f._2, f._3("numSourceRows"))).toSeq == Seq((2L, "2"), (1L, "1")))
+  }
+
   test("ReaderBuilder readers are lazy and read through Sources") {
     val dir = tmpDir("builders_csv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "r.csv"), "1,a\n2,b\n")

@@ -69,12 +69,12 @@ class EntriesSpec extends SparkSpec {
     assert(new graft.merge.ParquetTable(spark, s"$root/people").read.count() == 3)
 
     // both shards write one target concurrently; each fact carries its own
-    // shard's commit metrics (every commit but the creating one is a merge,
-    // which records numSourceRows)
+    // shard's commit metrics (every commit, the creating one included,
+    // records numSourceRows)
     val facts = journal.facts.read
       .select(col("pipelineDefId"), col("outputRows"), col("operationMetrics")("numSourceRows"))
       .collect().map(r => (r.getString(0), r.getLong(1), Option(r.getString(2))))
-    assert(facts.length == 4 && facts.count(_._3.isDefined) == 3)
+    assert(facts.length == 4 && facts.count(_._3.isDefined) == 4)
     facts.foreach { case (id, out, src) =>
       val rows = Map("pdj@s1" -> 2L, "pdj@s2" -> 1L)(id)
       assert(out == rows && src.forall(_ == rows.toString), (id, out, src))

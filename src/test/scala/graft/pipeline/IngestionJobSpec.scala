@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.merge.ParquetTable
@@ -52,6 +56,14 @@ class IngestionJobSpec extends SparkSpec {
     // journal captured facts + terminal status
     assert(journal.facts.read.count() == 2)
     assert(journal.failedPipelines.isEmpty)
+    // one fact commit and one status commit per run
+    assert(journal.facts.latestVersion == 1 && journal.status.latestVersion == 1)
+    // every fact, the bootstrap's included, carries the write's row counts
+    val facts = journal.facts.read.orderBy("lastUpdate")
+      .select(col("inputRows"), col("outputRows"), col("operationMetrics")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getMap[String, String](2).toMap))
+    val counts = Map("numInputRows" -> "2", "numSourceRows" -> "2")
+    assert(facts.toSeq == Seq((2L, 2L, counts), (2L, 2L, counts)))
   }
 
   test("scd2 control row: change expires the current row via config-driven merge") {
@@ -151,6 +163,107 @@ class IngestionJobSpec extends SparkSpec {
     assert(run(Seq(("pd1", "people"), ("pd1", "people")))
       .contains("pd1_people <- rows (pd1, people), (pd1, people)"))
     assert(started.get == 0)
+  }
+
+  /** Runs `body` under a fresh job group and counts the jobs started under
+    * it by their [[Pipeline.TaskProperty]] ("" when a job has none). */
+  private def jobsByTask[T](body: => T): (T, Map[String, Int]) = {
+    val sc = spark.sparkContext
+    val group = java.util.UUID.randomUUID().toString
+    val counts = mutable.Map[String, Int]().withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = counts.synchronized {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group))
+          counts(p.flatMap(q => Option(q.getProperty(Pipeline.TaskProperty))).getOrElse("")) += 1
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val v = body
+      ListenerDrain(sc)
+      (v, counts.synchronized(counts.toMap))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** SCD1, SCD2 and SCD4 control rows, each on a region-partitioned target
+    * (`<type>p`) and an unpartitioned one (`<type>u`), deduped on
+    * updated_at. */
+  private lazy val gateCfgs: Seq[TableConfig] = {
+    val scd1 = """[{"condtionType":"match"},{"condtionType":"notmatch"}]"""
+    val scd2 = """{"matchCondition":"target.current_flag = true AND target.name <> updates.name",
+      |"updateMap":{"current_flag":"false"},
+      |"insertMap":{"id":"updates.id","name":"updates.name","region":"updates.region",
+      |"updated_at":"updates.updated_at","current_flag":"true"}}""".stripMargin
+    for {
+      (scd, cond) <- Seq(("scd1", scd1), ("scd2", scd2), ("scd4", ""))
+      part <- Seq("region", "")
+    } yield TableConfig.fromRow(Seq((
+      "gate", scd + (if (part.isEmpty) "u" else "p"), scd, "id", part, "updated_at", "",
+      """{"format":"parquet"}""", cond
+    )).toDF("pipeline_def_id", "table_name", "scd_type", "join_key",
+      "partition_id_col", "updated_at_col", "extra_join_cond", "op_config", "merge_cond")
+      .collect().head)
+  }
+
+  private def regional(rows: Seq[(String, Long, String, String, Long)]) =
+    rows.toDF("op", "id", "name", "region", "updated_at")
+      .select(struct(
+        col("op"),
+        struct(col("id"), col("name"), col("region"), col("updated_at")).as("before"),
+        struct(col("id"), col("name"), col("region"), col("updated_at")).as("after"),
+        struct(lit("db0").as("db"), lit(1L).as("server_id")).as("source")).as("value"))
+
+  /** The gate's two runs, each with its journal: a bootstrap batch over
+    * three regions, then a merge batch touching one region (key 1 twice,
+    * so the dedup drops a row). Returns each run's jobs by task. */
+  private lazy val gateRuns: (Map[String, Int], Map[String, Int]) = {
+    val root = tmpDir("ingest_gate")
+    val journal = new Journal(spark, tmpDir("ingest_gate_j"))
+    def run(b: org.apache.spark.sql.DataFrame) = jobsByTask {
+      val ok = IngestionJob.run(spark, gateCfgs, _ => () => b, root, journal = Some(journal))
+      assert(ok.size == 6 && ok.values.forall(identity), ok)
+    }._2
+    val boot = run(regional(Seq(("c", 1L, "a", "eu", 1L), ("c", 2L, "b", "us", 1L),
+      ("c", 3L, "c", "ap", 1L), ("c", 4L, "d", "eu", 1L))))
+    val merge = run(regional(Seq(("u", 1L, "a1", "eu", 2L), ("u", 1L, "a2", "eu", 3L),
+      ("u", 4L, "d2", "eu", 2L), ("c", 5L, "e", "eu", 2L))))
+    // per run, one fact per pipeline: 4 rows in; the merge batch's dedup keeps 3
+    val facts = journal.facts.read.select("inputRows", "outputRows").as[(Long, Long)]
+      .collect().toSeq.sorted
+    assert(facts == Seq.fill(6)((4L, 3L)) ++ Seq.fill(6)((4L, 4L)), facts)
+    (boot, merge)
+  }
+
+  test("every job an IngestionJob.run starts names its pipeline and task") {
+    val (boot, merge) = gateRuns
+    for (jobs <- Seq(boot, merge)) {
+      assert(!jobs.contains(""), jobs)
+      val tasks = gateCfgs.flatMap(c =>
+        Seq("reader", "processor", "writer").map(t => s"gate_${c.tableName}/${c.tableName}_$t"))
+      assert(jobs.keySet.subsetOf(tasks.toSet + "IngestionJob.run/journal"), jobs)
+      assert(jobs.contains("IngestionJob.run/journal"))
+    }
+  }
+
+  test("job-count gate: a merge batch's jobs per pipeline task, SCD1/2/4 x both layouts") {
+    // Per pipeline-batch the writer's jobs are the checkpoint that dedups
+    // and counts the batch, the collect of the touched partitions (the 2
+    // jobs a partitioned target adds), and the merge's writes, SCD4's
+    // history append included. Readers and processors start none: their
+    // plans run inside the writer's checkpoint. The journal takes one job
+    // per commit. A count of the batch anywhere on this path shows here.
+    val (_, merge) = gateRuns
+    def writer(t: String) = s"gate_$t/${t}_writer"
+    assert(merge == Map(
+      writer("scd1u") -> 5, writer("scd1p") -> 7,
+      writer("scd2u") -> 6, writer("scd2p") -> 8,
+      writer("scd4u") -> 7, writer("scd4p") -> 9,
+      "IngestionJob.run/journal" -> 2), merge)
   }
 
   test("keysFirst reorders merge keys to the front") {
