@@ -513,10 +513,11 @@ object SparkEntry {
   /** Table-backed SCD4 WRITE path gate (q17 checks the pure scd4Apply): seed
     * current through writeScd4's bootstrap, merge a mixed batch (updates +
     * soft deletes + fresh inserts) through the pruned COW path — history
-    * appended first, txn on both tables — then read CURRENT and HISTORY
-    * back as one tagged frame. */
+    * appended first, keyed by the current version it precedes — then read
+    * CURRENT and HISTORY back as one tagged frame. */
   private def q59(s: SparkSession, dir: String): DataFrame = {
-    import graft.merge.{ParquetTable, Scd}
+    import graft.merge.Scd
+    import graft.pipeline.{ScdTarget, TableConfig}
     val base = T(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val seed = base.filter(col("c_custkey") % 10 =!= 0)
@@ -529,8 +530,8 @@ object SparkEntry {
       .withColumn("deleted_flag", lit(false))
       .withColumn("updated_at", lit(1700100000L) + col("c_custkey"))
     val root = scratchDir("graft_q59")
-    val current = new ParquetTable(s, s"$root/cust", Nil)
-    val history = new ParquetTable(s, s"$root/cust_history", Nil)
+    val target = new ScdTarget(s, TableConfig("q59", "cust", "scd4"), root)
+    val (current, history) = (target.table, target.history)
     Scd.writeScd4(current, history, seed, Seq("c_custkey"))
     Scd.writeScd4(current, history, upd, Seq("c_custkey"))
     val cols = Seq("c_custkey", "c_name", "c_acctbal", "row_active",

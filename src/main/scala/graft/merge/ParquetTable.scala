@@ -49,14 +49,22 @@ import org.json4s.jackson.Serialization
   * taken at until [[vacuum]] drops that version's files.
   */
 object ParquetTable {
-  // One JVM-wide monitor per table root: multiple pipelines (IngestionJob
-  // fan-out, shared Journal tables) commit from different driver threads;
-  // without this, two writers read the same latestVersion and race the
-  // commit file / version directory. Cross-process writers would need a
-  // real lock service — out of scope for a single-driver engine.
   private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** A table's id: its root as a normalized absolute path. `t`, `./t` and
+    * `$PWD/t` name one table and get one id; symlinks are not resolved. */
+  private[merge] def idOf(root: String): String =
+    Paths.get(root).toAbsolutePath.normalize.toString
+
+  /** The JVM-wide monitor of the table at `root`, keyed by its [[idOf id]].
+    * Pipelines (IngestionJob fan-out, shared Journal tables) commit from
+    * different driver threads; without one monitor per table, two writers
+    * read the same latestVersion and race the commit file and version
+    * directory. Handles whose roots spell one directory differently share
+    * it. Cross-process writers would need a real lock service — out of
+    * scope for a single-driver engine. */
   private[merge] def monitorFor(root: String): Object =
-    monitors.computeIfAbsent(root, _ => new Object)
+    monitors.computeIfAbsent(idOf(root), _ => new Object)
 
   /** One data file: its path under the table root, its partition values in
     * Spark's string form (a key is absent when its value is NULL) and its
@@ -113,6 +121,9 @@ final class ParquetTable(val spark: SparkSession, val root: String,
 
   private val logDir = s"$root/_graft_log"
   private val monitor = ParquetTable.monitorFor(root)
+
+  /** This table's [[ParquetTable.idOf id]]: the same for every handle on it. */
+  private[merge] val id: String = ParquetTable.idOf(root)
 
   def exists: Boolean = Files.exists(Paths.get(logDir)) && latestVersion >= 0
 

@@ -80,8 +80,31 @@ object Scd {
       "numSourceRows" -> observedRows(src, "numSourceRows").toString))
   }
 
-  private def seen(table: ParquetTable, txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (a, v) => table.seenTxn(a, v) }
+  /** The one skeleton of every table-backed writer: a seen txn returns
+    * `Map.empty` before the batch is materialized; otherwise, under the
+    * table's lock, the table is created from `seed(batch)` or `merge`d
+    * into, and the commit metrics are returned. The creating commit
+    * records the txn too, so a replayed batch 0 is skipped. */
+  private def write(table: ParquetTable, updates: DataFrame, keySpecs: Seq[String],
+                    dedupOrderCols: Seq[String], txn: Option[(String, Long)])(
+                    seed: DataFrame => DataFrame)(
+                    merge: (DataFrame, Map[String, String]) => Unit): Map[String, String] = {
+    if (txn.exists { case (a, v) => table.seenTxn(a, v) }) return Map.empty
+    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
+    table.withLock {
+      if (!table.exists) table.create(seed(batch), metrics, txn)
+      else merge(batch, metrics)
+    }
+    metrics
+  }
+
+  /** The rows the not-matched clauses insert from `batch` into an empty
+    * table. A bootstrap applies the INSERT clause logic, not the raw batch:
+    * a first batch containing delete tombstones (e.g. row_active=false rows
+    * excluded by a conditional insert) must not become live rows. Joining on
+    * `false` makes every update row take the not-matched path. */
+  private def inserted(batch: DataFrame, notMatched: Seq[WhenNotMatched]): DataFrame =
+    MergeInto(batch.filter(lit(false)), batch, "false", Nil, notMatched)
 
   // -------------------------------------------------------------------------
   // SCD TYPE 1 — upsert in place (ref M/utility/Utility.scala:394-479)
@@ -102,24 +125,11 @@ object Scd {
                 notMatched: Seq[WhenNotMatched] = Seq(WhenNotMatched(None, InsertAll)),
                 dedupOrderCols: Seq[String] = Nil,
                 extraCondition: Option[String] = None,
-                txn: Option[(String, Long)] = None): Map[String, String] = {
-    if (seen(table, txn)) return Map.empty // before materializing the batch
-    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
-    table.withLock {
-      if (!table.exists) {
-        // Bootstrap applies the INSERT clause logic, not the raw batch: a
-        // first batch containing delete tombstones (e.g. row_active=false
-        // rows excluded by a conditional insert) must not become live rows.
-        // Joining on `false` makes every update row take the not-matched path.
-        val seeded = MergeInto(batch.filter(lit(false)), batch, "false",
-          Nil, notMatched)
-        table.create(seeded, metrics, txn) // txn recorded so a replayed batch 0 is skipped
-      } else
-        table.merge(batch, buildJoinCondition(keySpecs, extraCondition),
-          matched, notMatched, txn, metrics)
+                txn: Option[(String, Long)] = None): Map[String, String] =
+    write(table, updates, keySpecs, dedupOrderCols, txn)(inserted(_, notMatched)) {
+      (batch, metrics) => table.merge(batch, buildJoinCondition(keySpecs, extraCondition),
+        matched, notMatched, txn, metrics)
     }
-    metrics
-  }
 
   // -------------------------------------------------------------------------
   // SCD TYPE 2 — row-versioned history (ref M/utility/Utility.scala:493-608)
@@ -217,36 +227,29 @@ object Scd {
                 insertMap: Map[String, String],
                 dedupOrderCols: Seq[String] = Nil,
                 extraCondition: Option[String] = None,
-                txn: Option[(String, Long)] = None): Map[String, String] = {
-    if (seen(table, txn)) return Map.empty
-    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
-    table.withLock {
-      if (!table.exists) {
-        // Bootstrap must already be SCD2-SHAPED (current_flag/expiry columns
-        // the later matchCondition references): evaluate the insertMap over the
-        // batch — exactly the rows the not-matched clause would have produced.
-        val seeded = batch.alias("updates").select(insertMap.toSeq.map {
-          case (k, v) => expr(v).as(k.split('.').last)
-        }: _*)
-        table.create(seeded, metrics, txn)
-      } else {
-        // Partition-bounded SCD2 (ref splices manual DPP into its SCD2 merge,
-        // M/utility/Utility.scala:524-527,548-551): the rows-to-insert probe
-        // joins against only the partitions the batch touches, and the staged
-        // source — whose insert rows carry real partition values, so it
-        // touches exactly the batch's partitions — rides through the same
-        // files' COW. A CDC micro-batch neither reads nor rewrites untouched
-        // partitions, and collects the touched ones once.
-        val replaced = table.touchedFiles(batch)
-        val (staged, mergeCond) = scd2Source(table.readFiles(replaced), batch,
-          keySpecs, matchCondition, extraCondition)
-        table.mergeReplacing(staged, mergeCond,
-          Seq(WhenMatched(Some(matchCondition), UpdateExpr(updateMap))),
-          Seq(WhenNotMatched(None, InsertExpr(insertMap))), txn, metrics, Some(replaced))
-      }
+                txn: Option[(String, Long)] = None): Map[String, String] =
+    write(table, updates, keySpecs, dedupOrderCols, txn) {
+      // Bootstrap must already be SCD2-SHAPED (current_flag/expiry columns
+      // the later matchCondition references): evaluate the insertMap over the
+      // batch — exactly the rows the not-matched clause would have produced.
+      batch => batch.alias("updates").select(insertMap.toSeq.map {
+        case (k, v) => expr(v).as(k.split('.').last)
+      }: _*)
+    } { (batch, metrics) =>
+      // Partition-bounded SCD2 (ref splices manual DPP into its SCD2 merge,
+      // M/utility/Utility.scala:524-527,548-551): the rows-to-insert probe
+      // joins against only the partitions the batch touches, and the staged
+      // source — whose insert rows carry real partition values, so it
+      // touches exactly the batch's partitions — rides through the same
+      // files' COW. A CDC micro-batch neither reads nor rewrites untouched
+      // partitions, and collects the touched ones once.
+      val replaced = table.touchedFiles(batch)
+      val (staged, mergeCond) = scd2Source(table.readFiles(replaced), batch,
+        keySpecs, matchCondition, extraCondition)
+      table.mergeReplacing(staged, mergeCond,
+        Seq(WhenMatched(Some(matchCondition), UpdateExpr(updateMap))),
+        Seq(WhenNotMatched(None, InsertExpr(insertMap))), txn, metrics, Some(replaced))
     }
-    metrics
-  }
 
   // -------------------------------------------------------------------------
   // SCD TYPE 4 — current table + history table (ref M/utility/Utility.scala:621-707)
@@ -296,32 +299,25 @@ object Scd {
                 keySpecs: Seq[String], updatedAtCol: String = "updated_at",
                 dedupOrderCols: Seq[String] = Nil,
                 extraCondition: Option[String] = None,
-                txn: Option[(String, Long)] = None): Map[String, String] = {
-    if (seen(current, txn)) return Map.empty
-    val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
-    current.withLock {
-      if (!current.exists) {
-        // Only ACTIVE rows seed the table (a delete tombstone in the first
-        // batch must not appear as a live current row).
-        val seeded = MergeInto(batch.filter(lit(false)), batch, "false",
-          Nil, Seq(WhenNotMatched(Some("updates.row_active = true"), InsertAll)))
-        current.create(seeded, metrics, txn)
-      } else {
+                txn: Option[(String, Long)] = None): Map[String, String] =
+    // only ACTIVE rows seed current: a first-batch tombstone is no live row
+    write(current, updates, keySpecs, dedupOrderCols, txn)(inserted(_, scd4NotMatched)) {
+      (batch, metrics) =>
         // Partition-bounded SCD4: the history snapshot join reads only the
         // partitions the batch touches, and the current table takes the same
         // clause matrix through the same files' COW instead of a full-table
         // overwrite. History is appended FIRST — it materializes while
-        // current's data files are still the ones its plan reads; the txn
-        // record rides on BOTH tables so a replayed batch neither re-appends
-        // history nor re-merges current.
+        // current's data files are still the ones its plan reads. The append
+        // is keyed by the current version it precedes, read under current's
+        // lock: a rerun after a crash in current's commit window finds that
+        // key and appends nothing again, whether or not the caller passed a
+        // txn. The caller's txn rides on current.
         val replaced = current.touchedFiles(batch)
         val histRows = scd4HistoryRows(current.readFiles(replaced), batch,
           keySpecs, updatedAtCol, extraCondition)
-        history.append(histRows, txn = txn)
+        history.append(histRows,
+          txn = Some((s"scd4:${current.id}", current.latestVersion + 1)))
         current.mergeReplacing(batch, buildJoinCondition(keySpecs, extraCondition),
           scd4Matched, scd4NotMatched, txn, metrics, Some(replaced))
-      }
     }
-    metrics
-  }
 }

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.merge.MergeInto.{WhenMatched, WhenNotMatched}
 import graft.operators.CdcProcessor
 import graft.sources.Sources
 
@@ -13,37 +12,13 @@ import graft.sources.Sources
   * re-expressed over [[Pipeline]]/[[IngestionJob]]/[[graft.operators.CdcProcessor]].
   * Every builder method mutates-and-returns `this` exactly like the
   * reference; `build()` hands back the same [[Pipeline]] the functional API
-  * constructs, and the writer task delegates to [[IngestionJob.writeBatch]],
-  * so facade-built pipelines are behavior-identical to
-  * [[IngestionJob.buildPipeline]] ones by construction.
+  * constructs. Where the reference sets a `mergeSCD{1,2,4}Options` bundle
+  * (M/writter/BaseWritter.scala:21-34), the builder takes the control row
+  * itself ([[PipelineBuilder.setTableConfig]]), and its writer task calls
+  * [[IngestionJob.writeBatch]], so facade-built pipelines are
+  * behavior-identical to [[IngestionJob.buildPipeline]] ones by
+  * construction.
   */
-final case class MergeScd1Options(
-    joinKeys: Seq[String],
-    matched: Seq[WhenMatched] = Nil,
-    notMatched: Seq[WhenNotMatched] = Nil,
-    dedupOrderCols: Seq[String] = Nil,
-    extraCondition: Option[String] = None,
-    partitionKeys: Seq[String] = Nil)
-
-/** SCD2 staged-union merge options (ref mergeSCD2Options,
-  * M/writter/BaseWritter.scala:27-30). */
-final case class MergeScd2Options(
-    joinKeys: Seq[String],
-    matchCondition: String,
-    updateMap: Map[String, String],
-    insertMap: Map[String, String],
-    dedupOrderCols: Seq[String] = Nil,
-    extraCondition: Option[String] = None,
-    partitionKeys: Seq[String] = Nil)
-
-/** SCD4 current+history options (ref mergeSCD4Options,
-  * M/writter/BaseWritter.scala:31-34). */
-final case class MergeScd4Options(
-    joinKeys: Seq[String],
-    updatedAtCol: String,
-    dedupOrderCols: Seq[String] = Nil,
-    extraCondition: Option[String] = None,
-    partitionKeys: Seq[String] = Nil)
 
 /** Reader factory (ref M/reader/ReaderBuilder.scala:6-43). Returns LAZY
   * readers (`() => DataFrame`) — the reference also just news up reader
@@ -116,12 +91,7 @@ object ProcessorBuilder {
 final class PipelineBuilder private (spark: SparkSession) {
   private var pName: String = ""
   private var runId: String = ""
-  private var batchId: String = ""
-  private var pipelineDefId: String = ""
-  private var tableName: String = ""
-  private var scd1: Option[MergeScd1Options] = None
-  private var scd2: Option[MergeScd2Options] = None
-  private var scd4: Option[MergeScd4Options] = None
+  private var tableConfig: Option[TableConfig] = None
   private var journal: Option[Journal] = None
   // (key, parent, taskFn) in insertion order; parent "" = root
   private val nodes =
@@ -129,14 +99,9 @@ final class PipelineBuilder private (spark: SparkSession) {
 
   def setPipelineName(n: String): PipelineBuilder = { pName = n; this }
   def setRunId(id: String): PipelineBuilder = { runId = id; this }
-  def setBatchId(id: String): PipelineBuilder = { batchId = id; this }
-  def setPipelineDefId(id: String): PipelineBuilder = { pipelineDefId = id; this }
-  def setTableName(n: String): PipelineBuilder = { tableName = n; this }
   def setJournal(j: Journal): PipelineBuilder = { journal = Some(j); this }
-
-  def setMergeSCD1Options(o: MergeScd1Options): PipelineBuilder = { scd1 = Some(o); this }
-  def setMergeSCD2Options(o: MergeScd2Options): PipelineBuilder = { scd2 = Some(o); this }
-  def setMergeSCD4Options(o: MergeScd4Options): PipelineBuilder = { scd4 = Some(o); this }
+  /** The control row the writer merges by: its table, SCD type and keys. */
+  def setTableConfig(cfg: TableConfig): PipelineBuilder = { tableConfig = Some(cfg); this }
 
   def addTask(key: String)(
       fn: (SparkSession, Map[String, DataFrame]) => Map[String, DataFrame]): PipelineBuilder = {
@@ -157,53 +122,29 @@ final class PipelineBuilder private (spark: SparkSession) {
                    proc: DataFrame => DataFrame): PipelineBuilder =
     addAfter(afterNodeKey, key)((_, in) => Map("processedDf" -> proc(in("rawdf"))))
 
-  /** Writer node merging `processedDf` into `targetRoot/<tableName>` by
-    * whichever mergeSCD*Options was set — the exact
-    * [[IngestionJob.writeBatch]] path the functional API uses. With a
-    * journal set, the writer journals its fact as soon as it has committed,
-    * under the runId set by setRunId (a fresh UUID when none was). */
+  /** Writer node merging `processedDf` into `targetRoot/<tableName>` by the
+    * control row set with setTableConfig, through [[IngestionJob.writeBatch]]
+    * like the functional API. A writer that runs with no row set fails its
+    * task with an IllegalStateException that says so. With a journal set,
+    * the writer journals its fact as soon as it has committed, under the
+    * runId set by setRunId (a fresh UUID when none was). */
   def addWriter(afterNodeKey: String, key: String, targetRoot: String): PipelineBuilder =
     addAfter(afterNodeKey, key) { (s, in) =>
-      val (written, fact) = IngestionJob.writeBatch(s, toConfig, targetRoot,
-        in("processedDf"))
-      journal.foreach(j => j.logFacts(Seq(
-        if (runId.isEmpty) fact else fact.copy(runId = runId))))
-      Map("written" -> written)
+      val cfg = tableConfig.getOrElse(throw new IllegalStateException(
+        s"writer $key has no TableConfig: call setTableConfig before the pipeline runs"))
+      val target = new ScdTarget(s, cfg, targetRoot)
+      IngestionJob.writeBatch(target, in("processedDf")).foreach { fact =>
+        journal.foreach(_.logFacts(Seq(if (runId.isEmpty) fact else fact.copy(runId = runId))))
+      }
+      Map("written" -> target.table.read)
     }
-
-  /** The merge options re-expressed as the metadata row the functional core
-    * consumes; exactly one setMergeSCD*Options must have been called before
-    * the writer runs. */
-  private def toConfig: TableConfig = {
-    require(Seq(scd1, scd2, scd4).count(_.isDefined) == 1,
-      "exactly one of setMergeSCD{1,2,4}Options must be set before the writer runs")
-    val base = TableConfig(
-      pipelineDefId = pipelineDefId, tableName = tableName, scdType = "scd1",
-      joinKeys = Nil, partitionKeys = Nil, dedupKeys = Nil, omittedCols = Nil,
-      updatedAtCol = "updated_at", extraJoinCond = None,
-      matched = Nil, notMatched = Nil, scd2Spec = None, writeConfig = None)
-    (scd1, scd2, scd4) match {
-      case (Some(o), _, _) => base.copy(scdType = "scd1", joinKeys = o.joinKeys,
-        partitionKeys = o.partitionKeys, dedupKeys = o.dedupOrderCols,
-        extraJoinCond = o.extraCondition,
-        matched = if (o.matched.isEmpty) Seq(WhenMatched(None, graft.merge.MergeInto.UpdateAll)) else o.matched,
-        notMatched = if (o.notMatched.isEmpty) Seq(WhenNotMatched(None, graft.merge.MergeInto.InsertAll)) else o.notMatched)
-      case (_, Some(o), _) => base.copy(scdType = "scd2", joinKeys = o.joinKeys,
-        partitionKeys = o.partitionKeys, dedupKeys = o.dedupOrderCols,
-        extraJoinCond = o.extraCondition,
-        scd2Spec = Some((o.matchCondition, o.updateMap, o.insertMap)))
-      case (_, _, Some(o)) => base.copy(scdType = "scd4", joinKeys = o.joinKeys,
-        partitionKeys = o.partitionKeys, dedupKeys = o.dedupOrderCols,
-        extraJoinCond = o.extraCondition, updatedAtCol = o.updatedAtCol)
-      case _ => base // unreachable (require above)
-    }
-  }
 
   /** Assemble the [[Pipeline]]. Name defaults to the reference's composite
-    * `<pipelineDefId>_<tableName>` when setPipelineName was not called. */
+    * `<pipelineDefId>_<tableName>` of the control row when setPipelineName
+    * was not called. */
   def build(): Pipeline = {
-    val p = new Pipeline(
-      if (pName.nonEmpty) pName else s"${pipelineDefId}_$tableName", spark)
+    val p = new Pipeline(if (pName.nonEmpty) pName
+      else tableConfig.fold("")(c => s"${c.pipelineDefId}_${c.tableName}"), spark)
     nodes.foreach { case (key, parent, fn) =>
       val t = new Task {
         val name = key

@@ -5,6 +5,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.merge.{ParquetTable, Scd}
 import graft.operators.CdcProcessor
 
+/** The tables one control row writes, built once from `(cfg, targetRoot)`:
+  * `<targetRoot>/<tableName>`, partitioned by the row's partition keys, and
+  * for SCD4 its unpartitioned `<tableName>_history`. A stream keeps one
+  * target for its whole life, so each handle's txn check folds only the log
+  * records written since the previous batch. */
+final class ScdTarget(spark: SparkSession, val cfg: TableConfig, targetRoot: String) {
+  val table = new ParquetTable(spark, s"$targetRoot/${cfg.tableName}", cfg.partitionKeys)
+  lazy val history = new ParquetTable(spark, s"${table.root}_history")
+}
+
 /** Metadata-driven ingestion: one reader -> processor -> writer pipeline per
   * `table_details` row — the reference's entry-point shape (reference
   * M/configbuilder/Start.scala:70-118 building a 3-node DAG per control row
@@ -41,45 +51,48 @@ object IngestionJob {
           joinKeys = graft.merge.MergeInto.extractJoinKeys(cfg.joinKeys)))
     })
 
+    val target = new ScdTarget(spark, cfg, targetRoot)
     p.addAfter(s"${cfg.tableName}_processor", new Task {
       val name = s"${cfg.tableName}_writer"
       def run(s: SparkSession, in: Map[String, DataFrame]): Map[String, DataFrame] = {
-        val (written, fact) = writeBatch(s, cfg, targetRoot, in("processedDf"))
-        onFact(fact)
-        Map("written" -> written)
+        writeBatch(target, in("processedDf")).foreach(onFact)
+        Map("written" -> target.table.read)
       }
     })
     p
   }
 
-  /** Writer body shared by [[buildPipeline]] and the fluent
-    * [[PipelineBuilder]] facade: merge the processed batch by SCD type and
-    * return the target with the batch's journal fact.
+  /** The one writer that turns a control row into an SCD write: the
+    * pipeline writer, the [[PipelineBuilder]] writer and
+    * [[graft.streaming.StreamSink.scdBatch]] all call it. It merges the
+    * processed batch into `target` by the row's SCD type, under `txn` when
+    * one is given, and returns the batch's journal fact — `None` when the
+    * txn was already committed and the replay was skipped.
     *
     * The SCD writer materializes the batch once and returns its commit's
     * metrics, counted by that same job: `numInputRows` (the processed rows)
     * becomes the fact's inputRows and `numSourceRows` (the rows left after
     * the dedup) its outputRows. The fact's runId is a fresh UUID; the
     * caller journals it. */
-  private[pipeline] def writeBatch(s: SparkSession, cfg: TableConfig,
-                                   targetRoot: String,
-                                   processed: DataFrame): (DataFrame, Journal.Fact) = {
-    val table = new ParquetTable(s, s"$targetRoot/${cfg.tableName}", cfg.partitionKeys)
+  private[graft] def writeBatch(target: ScdTarget, processed: DataFrame,
+                                txn: Option[(String, Long)] = None): Option[Journal.Fact] = {
+    val cfg = target.cfg
     val metrics = cfg.scdType match {
       case "scd2" =>
         val (mc, um, im) = cfg.scd2Spec.getOrElse(
           throw new IllegalArgumentException(s"scd2 row ${cfg.pipelineDefId} lacks merge spec"))
-        Scd.writeScd2(table, processed, cfg.joinKeys, mc, um, im,
-          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+        Scd.writeScd2(target.table, processed, cfg.joinKeys, mc, um, im,
+          cfg.dedupKeys, cfg.extraJoinCond, txn)
       case "scd4" =>
-        val hist = new ParquetTable(s, s"$targetRoot/${cfg.tableName}_history")
-        Scd.writeScd4(table, hist, processed, cfg.joinKeys, cfg.updatedAtCol,
-          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+        Scd.writeScd4(target.table, target.history, processed, cfg.joinKeys,
+          cfg.updatedAtCol, cfg.dedupKeys, cfg.extraJoinCond, txn)
       case _ =>
-        Scd.writeScd1(table, processed, cfg.joinKeys, cfg.matched, cfg.notMatched,
-          dedupOrderCols = cfg.dedupKeys, extraCondition = cfg.extraJoinCond)
+        Scd.writeScd1(target.table, processed, cfg.joinKeys, cfg.matched, cfg.notMatched,
+          cfg.dedupKeys, cfg.extraJoinCond, txn)
     }
-    (table.read, Journal.Fact(cfg.pipelineDefId, java.util.UUID.randomUUID().toString,
+    // a skipped replay committed nothing and counted nothing
+    Option.when(metrics.nonEmpty)(Journal.Fact(cfg.pipelineDefId,
+      java.util.UUID.randomUUID().toString,
       metrics("numInputRows").toLong, metrics("numSourceRows").toLong, metrics))
   }
 

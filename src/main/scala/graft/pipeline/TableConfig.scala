@@ -24,17 +24,17 @@ import graft.streaming.WriteStreamConfig
 final case class TableConfig(
     pipelineDefId: String,
     tableName: String,
-    scdType: String,                       // scd1 | scd2 | scd4
-    joinKeys: Seq[String],                 // "a" or "a = b" specs
-    partitionKeys: Seq[String],
-    dedupKeys: Seq[String],
-    omittedCols: Seq[String],
-    updatedAtCol: String,
-    extraJoinCond: Option[String],
-    matched: Seq[WhenMatched],
-    notMatched: Seq[WhenNotMatched],
-    scd2Spec: Option[(String, Map[String, String], Map[String, String])],
-    writeConfig: Option[WriteStreamConfig])
+    scdType: String = "scd1",              // scd1 | scd2 | scd4
+    joinKeys: Seq[String] = Nil,           // "a" or "a = b" specs
+    partitionKeys: Seq[String] = Nil,
+    dedupKeys: Seq[String] = Nil,
+    omittedCols: Seq[String] = Nil,
+    updatedAtCol: String = "updated_at",
+    extraJoinCond: Option[String] = None,
+    matched: Seq[WhenMatched] = Seq(WhenMatched(None, UpdateAll)),
+    notMatched: Seq[WhenNotMatched] = Seq(WhenNotMatched(None, InsertAll)),
+    scd2Spec: Option[(String, Map[String, String], Map[String, String])] = None,
+    writeConfig: Option[WriteStreamConfig] = None)
 
 object TableConfig {
   private implicit val fmt: Formats = DefaultFormats

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.merge.{MergeInto, ParquetTable, Scd}
+import graft.merge.ParquetTable
+import graft.pipeline.{IngestionJob, ScdTarget}
 
 /** Declarative stream-writer configuration, mirroring the reference's
   * WriteStreamConfig (reference M/writter/config/WriteStreamConfig.scala:
@@ -38,48 +39,24 @@ final case class WriteStreamConfig(
   }
 }
 
-/** foreachBatch SCD sinks — the streaming twins of the batch SCD writers
+/** foreachBatch sinks — the streaming twins of the batch writers
   * (reference M/writter/DeltaWritter.scala:21-169 wrapping
-  * M/utility/Utility.scala:731-1045). Each micro-batch merges into the
-  * target ParquetTable; exactly-once comes from the checkpoint (batch replay
-  * after crash) + the (appId, batchId) txn record (replayed batches are
-  * skipped by the commit log).
+  * M/utility/Utility.scala:731-1045). Exactly-once comes from the checkpoint
+  * (batch replay after crash) + the (appId, batchId) txn record (replayed
+  * batches are skipped by the commit log).
   */
 object StreamSink {
 
-  def scd1Batch(table: ParquetTable, keySpecs: Seq[String],
-                matched: Seq[MergeInto.WhenMatched] = Seq(MergeInto.WhenMatched(None, MergeInto.UpdateAll)),
-                notMatched: Seq[MergeInto.WhenNotMatched] = Seq(MergeInto.WhenNotMatched(None, MergeInto.InsertAll)),
-                dedupOrderCols: Seq[String] = Nil,
-                appId: String = null): (DataFrame, Long) => Unit = {
-    // default appId is scoped to the table root: a fixed constant would make
-    // two queries (or a wiped checkpoint) collide on (appId, batchId) and
-    // silently skip real batches as replays
-    val id = Option(appId).getOrElse(s"graft-scd1:${table.root}")
-    (batch, batchId) =>
-      Scd.writeScd1(table, batch, keySpecs, matched, notMatched, dedupOrderCols,
-        txn = Some((id, batchId)))
-  }
-
-  def scd2Batch(table: ParquetTable, keySpecs: Seq[String],
-                matchCondition: String,
-                updateMap: Map[String, String], insertMap: Map[String, String],
-                dedupOrderCols: Seq[String] = Nil,
-                appId: String = null): (DataFrame, Long) => Unit = {
-    val id = Option(appId).getOrElse(s"graft-scd2:${table.root}")
-    (batch, batchId) =>
-      Scd.writeScd2(table, batch, keySpecs, matchCondition, updateMap, insertMap,
-        dedupOrderCols, txn = Some((id, batchId)))
-  }
-
-  def scd4Batch(current: ParquetTable, history: ParquetTable, keySpecs: Seq[String],
-                updatedAtCol: String = "updated_at",
-                dedupOrderCols: Seq[String] = Nil,
-                appId: String = null): (DataFrame, Long) => Unit = {
-    val id = Option(appId).getOrElse(s"graft-scd4:${current.root}")
-    (batch, batchId) =>
-      Scd.writeScd4(current, history, batch, keySpecs, updatedAtCol, dedupOrderCols,
-        txn = Some((id, batchId)))
+  /** The SCD sink of one control row: each micro-batch merges into
+    * `target` through [[IngestionJob.writeBatch]] — the writer batch
+    * pipelines use — under the txn `(appId, batchId)`. The fact it returns
+    * is not journaled here. The default appId is scoped to the target
+    * table's root: a fixed constant would make two queries (or a wiped
+    * checkpoint) collide on (appId, batchId) and silently skip real batches
+    * as replays. */
+  def scdBatch(target: ScdTarget, appId: String = null): (DataFrame, Long) => Unit = {
+    val id = Option(appId).getOrElse(s"graft-${target.cfg.scdType}:${target.table.root}")
+    (batch, batchId) => IngestionJob.writeBatch(target, batch, Some((id, batchId)))
   }
 
   /** Continuous exact-dedup ingestion: each micro-batch keeps only rows

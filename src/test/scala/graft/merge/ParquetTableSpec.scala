@@ -114,6 +114,33 @@ class ParquetTableSpec extends SparkSpec {
     assert(t.seenTxn("app", 7L) && !t.seenTxn("app", 8L))
   }
 
+  test("two handles whose roots spell one table differently exclude each other") {
+    val dir = tmpDir("pt_two_handles")
+    val a = new ParquetTable(spark, s"$dir/t")
+    val b = new ParquetTable(spark, s"$dir/./t")
+    a.create(Seq(0).toDF("k"))
+    val monitor = ParquetTable.monitorFor(b.root)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    var other: Thread = null
+    a.onPreCommit = () => {
+      // B appends from its own thread while A is inside its commit window;
+      // A waits (at most 5 s) until B has committed or is blocked on the
+      // table's monitor
+      other = new Thread(() => b.append(Seq(2).toDF("k")))
+      other.start()
+      def blocked = Option(mx.getThreadInfo(other.getId)).flatMap(i => Option(i.getLockInfo))
+        .exists(_.getIdentityHashCode == System.identityHashCode(monitor))
+      val deadline = System.nanoTime() + 5000000000L
+      while (other.isAlive && !blocked && System.nanoTime() < deadline) Thread.sleep(10)
+    }
+    a.append(Seq(1).toDF("k"))
+    a.onPreCommit = () => ()
+    other.join(120000)
+    assert(!other.isAlive)
+    assert(a.latestVersion == 2)
+    assert(b.read.as[Int].collect().sorted.toSeq == Seq(0, 1, 2))
+  }
+
   test("seenTxn is O(1) after the initial fold: old commits never re-read") {
     val t = new ParquetTable(spark, tmpDir("pt_txn_fold"))
     t.create(Seq((1, "a")).toDF("k", "v"))

@@ -15,11 +15,13 @@ case class Scd4PropRow(k: Int, v: Int, row_active: Boolean,
   * active state (tombstones flip ONLY deleted_flag), history accumulates
   * the pre-merge snapshot of every matched active update, stamped with
   * the update's timestamp. Then the crash-replay property over
-  * writeScd4's TWO commit windows: history appends first, current merges
-  * second, and the (appId, batchId) txn rides on both — a crash in
-  * either window followed by redelivery must land the byte-equal
-  * no-crash state on BOTH tables (the reference's Delta txn semantics,
-  * re-derived over the COW commit log). */
+  * writeScd4's TWO commit windows: history appends first, keyed by the
+  * current version it precedes, and current merges second under the
+  * caller's (appId, batchId) txn, if any — a crash in either window
+  * followed by redelivery, with or without a txn (a stream replay or a
+  * batch rerun), must land the byte-equal no-crash state on BOTH tables
+  * (the reference's Delta txn semantics, re-derived over the COW commit
+  * log). */
 class Scd4PropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -113,7 +115,8 @@ class Scd4PropertySpec extends SparkSpec {
     // tables as they were (same versions, same rows) until the redelivery
     def applyAll(prefix: String, keys: Seq[String],
                  batches: List[List[Scd4PropRow]],
-                 crashAt: Option[(Int, Boolean)]) // (batch, onHistory?)
+                 crashAt: Option[(Int, Boolean)], // (batch, onHistory?)
+                 withTxn: Boolean)
         : ((Set[Seq[Any]], Map[Seq[Any], Int]), Boolean) = {
       val curRoot = tmpDir(s"${prefix}_cur")
       val histRoot = tmpDir(s"${prefix}_hist")
@@ -125,7 +128,7 @@ class Scd4PropertySpec extends SparkSpec {
           .groupBy(identity).view.mapValues(_.length).toMap)) else None
       def write(b: List[Scd4PropRow], i: Int): Unit =
         Scd.writeScd4(cur, hist, b.toDF(), Seq("k"),
-          txn = Some(("scd4prop", i.toLong)))
+          txn = Option.when(withTxn)(("scd4prop", i.toLong)))
       batches.zipWithIndex.foreach { case (b, i) =>
         if (b.nonEmpty) {
           if (crashAt.contains((i, true)))
@@ -145,7 +148,7 @@ class Scd4PropertySpec extends SparkSpec {
               // the history commit in place, a crash on history neither
               atomic &&= (if (onHistory) (state(cur), state(hist)) == before
                           else state(cur) == before._1)
-              write(b, i) // redelivery, same txn
+              write(b, i) // redelivery, same txn (or none again)
             }
           } else write(b, i)
         }
@@ -155,13 +158,14 @@ class Scd4PropertySpec extends SparkSpec {
     }
     // both layouts: snapshot tables, and both tables partitioned by the key
     val prop = Prop.forAll(genScenario, Gen.choose(0, 3),
-      Gen.oneOf(true, false)) { (batches, crashIdx, onHistory) =>
+      Gen.oneOf(true, false), Gen.oneOf(true, false)) {
+      (batches, crashIdx, onHistory, withTxn) =>
       Seq(Nil, Seq("k")).forall { keys =>
-        val (clean, _) = applyAll("scd4p_clean", keys, batches, None)
+        val (clean, _) = applyAll("scd4p_clean", keys, batches, None, withTxn)
         val (crashed, atomic) = applyAll("scd4p_crash", keys, batches,
-          Some((crashIdx, onHistory)))
+          Some((crashIdx, onHistory)), withTxn)
         if (clean != crashed || !atomic)
-          println(s"keys=$keys crashIdx=$crashIdx onHistory=$onHistory " +
+          println(s"keys=$keys crashIdx=$crashIdx onHistory=$onHistory withTxn=$withTxn " +
             s"batches=$batches\nclean=$clean\ncrashed=$crashed\natomic=$atomic")
         clean == crashed && atomic
       }

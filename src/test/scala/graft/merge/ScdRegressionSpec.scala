@@ -104,7 +104,7 @@ class ScdRegressionSpec extends SparkSpec {
     assert(t.liveFiles.map(_.partitionValues("p")).toSet == Set("11:45"))
   }
 
-  test("writeScd4 records the txn on BOTH tables: replay appends no duplicate history") {
+  test("writeScd4 txn replay appends no duplicate history") {
     val cur = new ParquetTable(spark, tmpDir("s4cur"))
     val hist = new ParquetTable(spark, tmpDir("s4hist"))
     val ts0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
@@ -116,6 +116,30 @@ class ScdRegressionSpec extends SparkSpec {
     Scd.writeScd4(cur, hist, batch("v2"), Seq("k"), txn = Some(("a", 1L))) // replay
     assert(hist.read.count() == 1) // no duplicate snapshot
     assert(cur.read.select("v").as[String].collect().toSeq == Seq("v2"))
+  }
+
+  test("writeScd4 rerun without a txn after a crash appends history once") {
+    // the batch path passes no txn: a rerun must still not re-append the
+    // history that the crashed attempt committed before current's commit
+    val ts0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    def batch(v: String) = Seq((1, v, false, true, ts0))
+      .toDF("k", "v", "deleted_flag", "row_active", "updated_at")
+    for (keys <- Seq(Nil, Seq("k"))) {
+      val root = tmpDir("s4rerun")
+      val cur = new ParquetTable(spark, s"$root/t", keys)
+      val hist = new ParquetTable(spark, s"$root/t_history")
+      def histRows = hist.read.select("v").as[String].collect().sorted.toSeq
+      Scd.writeScd4(cur, hist, batch("v1"), Seq("k"))
+      cur.onPreCommit = () => throw new RuntimeException("injected crash")
+      intercept[RuntimeException](Scd.writeScd4(cur, hist, batch("v2"), Seq("k")))
+      cur.onPreCommit = () => ()
+      assert(histRows == Seq("v1"), s"the crashed attempt's history committed (keys=$keys)")
+      Scd.writeScd4(cur, hist, batch("v2"), Seq("k")) // the rerun
+      assert(histRows == Seq("v1"), s"the rerun appends no history again (keys=$keys)")
+      assert(cur.read.select("v").as[String].collect().toSeq == Seq("v2"))
+      Scd.writeScd4(cur, hist, batch("v3"), Seq("k")) // the next batch appends its own
+      assert(histRows == Seq("v1", "v2"), s"keys=$keys")
+    }
   }
 
   test("writeScd1/4 bootstrap applies insert-clause logic (tombstones excluded)") {

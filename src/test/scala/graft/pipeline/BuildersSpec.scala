@@ -62,9 +62,7 @@ class BuildersSpec extends SparkSpec {
     // fluent path: same scenario through the builder facade
     def fluentRun(batch: DataFrame): Boolean =
       PipelineBuilder.start(spark)
-        .setPipelineDefId("pd1").setTableName("people")
-        .setMergeSCD1Options(MergeScd1Options(cfg.joinKeys, cfg.matched,
-          cfg.notMatched, cfg.dedupKeys, cfg.extraJoinCond, cfg.partitionKeys))
+        .setTableConfig(cfg)
         .addReader("people_reader", () => batch)
         .addProcessor("people_reader", "people_processor",
           ProcessorBuilder.start()
@@ -94,9 +92,7 @@ class BuildersSpec extends SparkSpec {
     val root = tmpDir("builders_runid")
     def run(runId: Option[String], batch: DataFrame): Boolean = {
       val b = PipelineBuilder.start(spark)
-        .setPipelineDefId("pd1").setTableName("people").setJournal(journal)
-        .setMergeSCD1Options(MergeScd1Options(cfg.joinKeys, cfg.matched,
-          cfg.notMatched, cfg.dedupKeys, cfg.extraJoinCond, cfg.partitionKeys))
+        .setTableConfig(cfg).setJournal(journal)
       runId.foreach(b.setRunId)
       b.addReader("r", () => batch)
         .addProcessor("r", "p", ProcessorBuilder.start().setJoinKeys(cfg.joinKeys).build())
@@ -122,14 +118,19 @@ class BuildersSpec extends SparkSpec {
     assert(ReaderBuilder.start(spark).getParquetReader(pq, readLimit = 2)().count() == 2)
   }
 
-  test("builder validates that exactly one SCD option bundle is set") {
+  test("a writer without a TableConfig is refused with a named cause") {
+    val root = tmpDir("builders_bad")
     val p = PipelineBuilder.start(spark)
-      .setPipelineDefId("x").setTableName("t")
+      .setPipelineName("x_t")
       .addReader("r", () => Seq((1L, "a")).toDF("id", "v"))
       .addProcessor("r", "p", identity)
-      .addWriter("p", "w", tmpDir("builders_bad"))
+      .addWriter("p", "w", root)
       .build()
     assert(!p.run()) // writer throws inside the task -> pipeline reports failure
     assert(p.statusOf("w") == TaskStatus.Error)
+    val cause = p.errorOf("w").get
+    assert(cause.isInstanceOf[IllegalStateException])
+    assert(cause.getMessage.contains("writer w has no TableConfig"), cause.getMessage)
+    assert(new File(root).list().isEmpty) // nothing was written
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.merge.ParquetTable
 import graft.operators.CdcDemux
+import graft.pipeline.{IngestionJob, ScdTarget, TableConfig}
 import graft.sources.{OffsetTracker, Sources}
 
 /** End-to-end streaming CDC: envelope JSON files -> file stream -> demux ->
@@ -28,10 +29,17 @@ class StreamingSpec extends SparkSpec {
   private def env(op: String, id: Long, name: String): String =
     s"""{"value":{"op":"$op","before":{"id":$id,"name":"$name"},"after":{"id":$id,"name":"$name"},"source":{"db":"db0","server_id":1}}}"""
 
+  /** The SCD target of a control row keyed by `id`, under a fresh root. */
+  private def target(dir: String, scdType: String = "scd1",
+                     partitionKeys: Seq[String] = Nil): ScdTarget =
+    new ScdTarget(spark, TableConfig("pd_stream", "t", scdType, joinKeys = Seq("id"),
+      partitionKeys = partitionKeys), tmpDir(dir))
+
   test("CDC file stream -> demux -> foreachBatch SCD1 merge, upserts + deletes") {
     val inDir = tmpDir("cdc_in")
     val ckpt = tmpDir("cdc_ckpt")
-    val table = new ParquetTable(spark, tmpDir("cdc_table"))
+    val sink = target("cdc_table")
+    val table = sink.table
 
     writeEnvelopes(inDir, "batch1.json", Seq(
       env("c", 1, "alice"), env("c", 2, "bob"), env("u", 1, "alicia")))
@@ -48,7 +56,7 @@ class StreamingSpec extends SparkSpec {
         val deletes = demuxed.filter(!col("row_active"))
           .select(col("id"), lit("__deleted__").as("name"))
         val merged = upserts.unionByName(deletes)
-        StreamSink.scd1Batch(table, Seq("id"))(merged, batchId)
+        StreamSink.scdBatch(sink)(merged, batchId)
       })
       q.awaitTermination()
     }
@@ -74,8 +82,8 @@ class StreamingSpec extends SparkSpec {
   test("crash between data write and commit log: nothing visible, restart commits exactly once") {
     val inDir = tmpDir("crash_in")
     val ckpt = tmpDir("crash_ckpt")
-    val root = tmpDir("crash_table")
-    val table = new ParquetTable(spark, root)
+    val sink = target("crash_table")
+    val table = sink.table
     table.create(Seq((1L, "alice")).toDF("id", "name"))
 
     def runOnce(): Unit = {
@@ -84,7 +92,7 @@ class StreamingSpec extends SparkSpec {
         WriteStreamConfig(checkpointLocation = ckpt), (batch, batchId) => {
           val upserts = CdcDemux.demux(batch).filter(col("row_active"))
             .select(col("id"), col("name"))
-          StreamSink.scd1Batch(table, Seq("id"))(upserts, batchId)
+          StreamSink.scdBatch(sink)(upserts, batchId)
         })
       q.awaitTermination()
     }
@@ -123,8 +131,8 @@ class StreamingSpec extends SparkSpec {
     // version and contents as they were, and the restart commits once
     val inDir = tmpDir("pcrash_in")
     val ckpt = tmpDir("pcrash_ckpt")
-    val table = new ParquetTable(spark, tmpDir("pcrash_table"),
-      partitionKeys = Seq("region"))
+    val sink = target("pcrash_table", partitionKeys = Seq("region"))
+    val table = sink.table
     table.create(Seq((1L, "east", "alice"), (2L, "west", "bob"))
       .toDF("id", "region", "name"))
 
@@ -139,7 +147,7 @@ class StreamingSpec extends SparkSpec {
         WriteStreamConfig(checkpointLocation = ckpt), (batch, batchId) => {
           val upserts = CdcDemux.demux(batch).filter(col("row_active"))
             .select(col("id"), col("region"), col("name"))
-          StreamSink.scd1Batch(table, Seq("id"))(upserts, batchId)
+          StreamSink.scdBatch(sink)(upserts, batchId)
         })
       q.awaitTermination()
     }
@@ -196,8 +204,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming SCD4: history snapshots accumulate across micro-batches") {
     val inDir = tmpDir("scd4_in")
     val ckpt = tmpDir("scd4_ckpt")
-    val current = new ParquetTable(spark, tmpDir("scd4_cur"))
-    val history = new ParquetTable(spark, tmpDir("scd4_hist"))
+    val sink = target("scd4_cur", scdType = "scd4")
+    val (current, history) = (sink.table, sink.history)
 
     def env4(op: String, id: Long, name: String): String =
       s"""{"value":{"op":"$op","before":{"id":$id,"name":"$name"},"after":{"id":$id,"name":"$name"},"source":{"db":"db0","server_id":1}}}"""
@@ -212,7 +220,7 @@ class StreamingSpec extends SparkSpec {
           val demuxed = CdcDemux.demux(batch)
             .select(col("id"), col("name"), lit(false).as("deleted_flag"),
               col("row_active"), current_timestamp().as("updated_at"))
-          StreamSink.scd4Batch(current, history, Seq("id"))(demuxed, batchId)
+          StreamSink.scdBatch(sink)(demuxed, batchId)
         })
       q.awaitTermination()
     }
@@ -237,6 +245,21 @@ class StreamingSpec extends SparkSpec {
     // history snapshotted the pre-image of each ACTIVE update (v1 before b2,
     // v2 before b3); the soft delete (row_active=false) adds no snapshot
     assert(history.read.select("name").as[String].collect().toSet == Set("v1", "v2"))
+  }
+
+  test("a replayed micro-batch returns no fact and commits nothing") {
+    val sink = target("replay_table")
+    val batch = Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")
+    val fact = IngestionJob.writeBatch(sink, batch, Some(("app", 0L)))
+    assert(fact.map(f => (f.pipelineDefId, f.inputRows, f.outputRows)) ==
+      Some(("pd_stream", 2L, 2L)))
+    val v = sink.table.latestVersion
+    assert(IngestionJob.writeBatch(sink, batch, Some(("app", 0L))).isEmpty)
+    assert(sink.table.latestVersion == v)
+    // the sink's own replay: its first delivery of batch 1 commits, the second does not
+    StreamSink.scdBatch(sink)(batch, 1L)
+    StreamSink.scdBatch(sink)(batch, 1L)
+    assert(sink.table.latestVersion == v + 1)
   }
 
   test("withJournal contains batch failures: error rows + status journaled, then rethrow") {
