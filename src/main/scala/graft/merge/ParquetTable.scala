@@ -259,6 +259,27 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     else commit(v + 1, "APPEND", Some(df), s, Nil, metrics, txn)
   }
 
+  /** Append `df` as the rows of `txn`, for a writer whose next commit, on
+    * another table, can still crash (SCD4's history before its current
+    * table). The first attempt appends. A later attempt under the same txn
+    * commits once, replacing the live files the latest commit of that txn
+    * added with `df`'s, so the table holds the rows of the attempt that
+    * last ran, whatever batch each attempt carried. Rows of that commit
+    * that a later commit rewrote (a [[compact]]) are not replaced. A txn
+    * version below the app's high-water mark is skipped, as [[append]]
+    * skips it. */
+  private[merge] def appendAs(df: DataFrame, txn: (String, Long)): Unit = monitor.synchronized {
+    val (appId, version) = txn
+    val (v, s, files) = snapshot
+    val highWater = synchronized(txnHighWater.get(appId))
+    if (highWater.exists(version < _)) return
+    if (v < 0) return create(df, Map.empty, Some(txn))
+    val orphan = if (!highWater.contains(version)) Set.empty[String]
+      else (v to 0L by -1).iterator.flatMap(commitEntry)
+        .find(_.txn.exists(_.appId == appId)).toSeq.flatMap(_.add.map(_.path)).toSet
+    commit(v + 1, "APPEND", Some(df), s, files.filter(f => orphan(f.path)), Map.empty, Some(txn))
+  }
+
   /** MERGE the update batch in, replacing the files of the partitions it
     * touches (every file on an unpartitioned table).
     *

@@ -83,19 +83,26 @@ object Scd {
   /** The one skeleton of every table-backed writer: a seen txn returns
     * `Map.empty` before the batch is materialized; otherwise, under the
     * table's lock, the table is created from `seed(batch)` or `merge`d
-    * into, and the commit metrics are returned. The creating commit
-    * records the txn too, so a replayed batch 0 is skipped. */
+    * into, and the commit metrics are returned. The txn is checked again
+    * under the lock, before `merge` runs any of its steps: a concurrent
+    * delivery of the same batch may have committed while this one waited.
+    * The creating commit records the txn too, so a replayed batch 0 is
+    * skipped. */
   private def write(table: ParquetTable, updates: DataFrame, keySpecs: Seq[String],
                     dedupOrderCols: Seq[String], txn: Option[(String, Long)])(
                     seed: DataFrame => DataFrame)(
                     merge: (DataFrame, Map[String, String]) => Unit): Map[String, String] = {
-    if (txn.exists { case (a, v) => table.seenTxn(a, v) }) return Map.empty
+    def seen = txn.exists { case (a, v) => table.seenTxn(a, v) }
+    if (seen) return Map.empty
     val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
     table.withLock {
-      if (!table.exists) table.create(seed(batch), metrics, txn)
-      else merge(batch, metrics)
+      if (seen) Map.empty[String, String]
+      else {
+        if (!table.exists) table.create(seed(batch), metrics, txn)
+        else merge(batch, metrics)
+        metrics
+      }
     }
-    metrics
   }
 
   /** The rows the not-matched clauses insert from `batch` into an empty
@@ -310,13 +317,13 @@ object Scd {
         // current's data files are still the ones its plan reads. The append
         // is keyed by the current version it precedes, read under current's
         // lock: a rerun after a crash in current's commit window finds that
-        // key and appends nothing again, whether or not the caller passed a
+        // key and replaces the crashed attempt's history rows with its own,
+        // whatever batch it carries and whether or not the caller passed a
         // txn. The caller's txn rides on current.
         val replaced = current.touchedFiles(batch)
         val histRows = scd4HistoryRows(current.readFiles(replaced), batch,
           keySpecs, updatedAtCol, extraCondition)
-        history.append(histRows,
-          txn = Some((s"scd4:${current.id}", current.latestVersion + 1)))
+        history.appendAs(histRows, (s"scd4:${current.id}", current.latestVersion + 1))
         current.mergeReplacing(batch, buildJoinCondition(keySpecs, extraCondition),
           scd4Matched, scd4NotMatched, txn, metrics, Some(replaced))
     }

@@ -19,9 +19,10 @@ case class Scd4PropRow(k: Int, v: Int, row_active: Boolean,
   * current version it precedes, and current merges second under the
   * caller's (appId, batchId) txn, if any — a crash in either window
   * followed by redelivery, with or without a txn (a stream replay or a
-  * batch rerun), must land the byte-equal no-crash state on BOTH tables
-  * (the reference's Delta txn semantics, re-derived over the COW commit
-  * log). */
+  * batch rerun), of the same batch or of another one (a next run that
+  * reads a new batch), must land on BOTH tables the state of a no-crash
+  * run of the batches that landed (the reference's Delta txn semantics,
+  * re-derived over the COW commit log). */
 class Scd4PropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,8 +30,8 @@ class Scd4PropertySpec extends SparkSpec {
 
   // one update per key per batch (the writers' dedup contract);
   // ~1 in 4 updates is a tombstone (row_active = false)
-  private val genBatch: Gen[List[Scd4PropRow]] = for {
-    n <- Gen.choose(0, 6)
+  private def genBatch(minRows: Int): Gen[List[Scd4PropRow]] = for {
+    n <- Gen.choose(minRows, 6)
     rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 6), Gen.choose(0, 4),
       Gen.frequency(3 -> true, 1 -> false)))
   } yield rows.groupBy(_._1).values.map(_.head).toList
@@ -38,7 +39,7 @@ class Scd4PropertySpec extends SparkSpec {
       Scd4PropRow(k, v, act, deleted_flag = false, ts(0)) }
 
   private val genScenario: Gen[List[List[Scd4PropRow]]] = for {
-    b1 <- genBatch; b2 <- genBatch; b3 <- genBatch; b4 <- genBatch
+    b1 <- genBatch(0); b2 <- genBatch(0); b3 <- genBatch(0); b4 <- genBatch(0)
   } yield List(b1, b2, b3, b4).zipWithIndex
     .map { case (b, i) => b.map(_.copy(updated_at = ts(i + 1))) }
 
@@ -111,18 +112,21 @@ class Scd4PropertySpec extends SparkSpec {
   }
 
   test("writeScd4: a crash in EITHER table's commit window replays cleanly") {
-    // returns both tables' final rows, and whether every crash left both
-    // tables as they were (same versions, same rows) until the redelivery
+    // returns both tables' final rows, whether every crash left both
+    // tables as they were (same versions, same rows) until the redelivery,
+    // and the batches that landed: after a crash, `other` (if given) is
+    // redelivered in place of the crashed batch
     def applyAll(prefix: String, keys: Seq[String],
                  batches: List[List[Scd4PropRow]],
                  crashAt: Option[(Int, Boolean)], // (batch, onHistory?)
-                 withTxn: Boolean)
-        : ((Set[Seq[Any]], Map[Seq[Any], Int]), Boolean) = {
+                 withTxn: Boolean, other: Option[List[Scd4PropRow]] = None)
+        : ((Set[Seq[Any]], Map[Seq[Any], Int]), Boolean, List[List[Scd4PropRow]]) = {
       val curRoot = tmpDir(s"${prefix}_cur")
       val histRoot = tmpDir(s"${prefix}_hist")
       var cur = new ParquetTable(spark, curRoot, keys)
       var hist = new ParquetTable(spark, histRoot, keys)
       var atomic = true
+      var landed = batches
       def state(t: ParquetTable) =
         if (t.exists) Some((t.latestVersion, t.read.collect().map(_.toSeq).toSeq
           .groupBy(identity).view.mapValues(_.length).toMap)) else None
@@ -148,30 +152,39 @@ class Scd4PropertySpec extends SparkSpec {
               // the history commit in place, a crash on history neither
               atomic &&= (if (onHistory) (state(cur), state(hist)) == before
                           else state(cur) == before._1)
-              write(b, i) // redelivery, same txn (or none again)
+              val again = other.getOrElse(b)
+              landed = landed.updated(i, again)
+              write(again, i) // redelivery, same txn (or none again)
             }
           } else write(b, i)
         }
       }
       ((if (cur.exists) rowsOf(cur.read) else Set.empty,
-        state(hist).map(_._2).getOrElse(Map.empty)), atomic)
+        state(hist).map(_._2).getOrElse(Map.empty)), atomic, landed)
+    }
+    // the crashed batch's index and what is redelivered: the crashed batch,
+    // or another (non-empty) one stamped with the crashed batch's timestamp
+    val genRedelivery = Gen.choose(0, 3).flatMap { i =>
+      Gen.oneOf(Gen.const(None), genBatch(1).map(b => Some(b.map(_.copy(updated_at = ts(i + 1))))))
+        .map(i -> _)
     }
     // both layouts: snapshot tables, and both tables partitioned by the key
-    val prop = Prop.forAll(genScenario, Gen.choose(0, 3),
+    val prop = Prop.forAll(genScenario, genRedelivery,
       Gen.oneOf(true, false), Gen.oneOf(true, false)) {
-      (batches, crashIdx, onHistory, withTxn) =>
+      (batches, redelivery, onHistory, withTxn) =>
+      val (crashIdx, other) = redelivery
       Seq(Nil, Seq("k")).forall { keys =>
-        val (clean, _) = applyAll("scd4p_clean", keys, batches, None, withTxn)
-        val (crashed, atomic) = applyAll("scd4p_crash", keys, batches,
-          Some((crashIdx, onHistory)), withTxn)
+        val (crashed, atomic, landed) = applyAll("scd4p_crash", keys, batches,
+          Some((crashIdx, onHistory)), withTxn, other)
+        val (clean, _, _) = applyAll("scd4p_clean", keys, landed, None, withTxn)
         if (clean != crashed || !atomic)
           println(s"keys=$keys crashIdx=$crashIdx onHistory=$onHistory withTxn=$withTxn " +
-            s"batches=$batches\nclean=$clean\ncrashed=$crashed\natomic=$atomic")
+            s"other=$other batches=$batches\nclean=$clean\ncrashed=$crashed\natomic=$atomic")
         clean == crashed && atomic
       }
     }
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+      SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(res.passed, res.status.toString)
   }
 }

@@ -142,6 +142,63 @@ class ScdRegressionSpec extends SparkSpec {
     }
   }
 
+  test("writeScd4 rerun with a different batch after a crash keeps only that batch's history") {
+    // a plain next run after the crash reads a new batch: history must hold
+    // the snapshot of the rows it overwrote, not of the batch that never
+    // reached current
+    val ts0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    def batch(rows: (Int, String)*) = rows.map { case (k, v) => (k, v, false, true, ts0) }
+      .toDF("k", "v", "deleted_flag", "row_active", "updated_at")
+    for (keys <- Seq(Nil, Seq("k"))) {
+      val root = tmpDir("s4rerun_other")
+      val cur = new ParquetTable(spark, s"$root/t", keys)
+      val hist = new ParquetTable(spark, s"$root/t_history", keys)
+      def histRows = hist.read.select("v").as[String].collect().sorted.toSeq
+      Scd.writeScd4(cur, hist, batch(1 -> "a1", 2 -> "b1"), Seq("k"))
+      cur.onPreCommit = () => throw new RuntimeException("injected crash")
+      intercept[RuntimeException](Scd.writeScd4(cur, hist, batch(1 -> "a2"), Seq("k")))
+      cur.onPreCommit = () => ()
+      assert(histRows == Seq("a1"), s"the crashed attempt's history committed (keys=$keys)")
+      Scd.writeScd4(cur, hist, batch(2 -> "b2"), Seq("k")) // the next run, another batch
+      assert(histRows == Seq("b1"), s"keys=$keys")
+      assert(cur.read.select("v").as[String].collect().sorted.toSeq == Seq("a1", "b2"))
+      Scd.writeScd4(cur, hist, batch(1 -> "a3"), Seq("k"))
+      assert(histRows == Seq("a1", "b1"), s"keys=$keys")
+    }
+  }
+
+  test("writeScd4: a delivery whose txn commits while it waits for the lock writes nothing") {
+    val root = tmpDir("s4race")
+    val cur = new ParquetTable(spark, s"$root/t")
+    val hist = new ParquetTable(spark, s"$root/t_history")
+    val ts0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    def batch(v: String) = Seq((1, v, false, true, ts0))
+      .toDF("k", "v", "deleted_flag", "row_active", "updated_at")
+    Scd.writeScd4(cur, hist, batch("v1"), Seq("k"))
+    val monitor = ParquetTable.monitorFor(cur.root)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    @volatile var late: Map[String, String] = null
+    val other = new Thread(() =>
+      late = Scd.writeScd4(cur, hist, batch("v2"), Seq("k"), txn = Some(("app", 1L))))
+    cur.withLock {
+      // the other delivery passes the first txn check and materializes its
+      // batch, then waits for current's lock, held here
+      other.start()
+      def blocked = Option(mx.getThreadInfo(other.getId)).flatMap(i => Option(i.getLockInfo))
+        .exists(_.getIdentityHashCode == System.identityHashCode(monitor))
+      val deadline = System.nanoTime() + 120000000000L
+      while (other.isAlive && !blocked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(blocked, "the other delivery is waiting for current's lock")
+      Scd.writeScd4(cur, hist, batch("v2"), Seq("k"), txn = Some(("app", 1L)))
+    }
+    other.join(120000)
+    assert(!other.isAlive)
+    assert(late == Map.empty)
+    assert(cur.latestVersion == 1 && hist.latestVersion == 0)
+    assert(hist.read.select("v").as[String].collect().toSeq == Seq("v1"))
+    assert(cur.read.select("v").as[String].collect().toSeq == Seq("v2"))
+  }
+
   test("writeScd1/4 bootstrap applies insert-clause logic (tombstones excluded)") {
     val cur = new ParquetTable(spark, tmpDir("s4boot"))
     val hist = new ParquetTable(spark, tmpDir("s4bootH"))
