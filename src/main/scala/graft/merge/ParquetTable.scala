@@ -226,26 +226,13 @@ final class ParquetTable(val spark: SparkSession, val root: String,
       files.filter(f => hit(f.values(partitionKeys)))
     }
 
-  /** The live files of the partitions `batch` touches — the same manual
-    * DPP `merge` applies, for writers that stage multi-step merge sources
-    * (SCD2's rows-to-insert probe, SCD4's history snapshot join): they
-    * collect the files once, under this table's lock, read only those with
-    * [[readFiles]] and replace them with [[mergeReplacing]]. Every live
-    * file when the table is unpartitioned. */
-  private[merge] def touchedFiles(batch: DataFrame): Seq[DataFile] =
-    touched(liveFiles, batch)
-
-  private[merge] def readFiles(files: Seq[DataFile]): DataFrame = {
-    val (v, s, _) = snapshot
-    require(v >= 0, s"table $root does not exist")
-    scan(s, files)
-  }
-
   /** Create with initial contents (ref create-if-absent probe `checkTable`,
     * M/utility/Utility.scala:361-371). The creating batch's txn is recorded
-    * so a checkpoint replay of batch 0 is skipped like any other batch. */
+    * so a checkpoint replay of batch 0 is skipped like any other batch. An
+    * existing table is refused: its version 0 would be replaced. */
   def create(df: DataFrame, metrics: Map[String, String] = Map.empty,
              txn: Option[(String, Long)] = None): Unit = monitor.synchronized {
+    require(!exists, s"table $root already exists")
     commit(0L, "CREATE", Some(df), new StructType(), Nil, metrics, txn)
   }
 
@@ -280,39 +267,35 @@ final class ParquetTable(val spark: SparkSession, val root: String,
     commit(v + 1, "APPEND", Some(df), s, files.filter(f => orphan(f.path)), Map.empty, Some(txn))
   }
 
-  /** MERGE the update batch in, replacing the files of the partitions it
-    * touches (every file on an unpartitioned table).
+  /** Rewrite the partitions `keyedBy` touches (every file on an
+    * unpartitioned table): `f` maps their rows to the rows that replace
+    * them, committed as one MERGE at the next version. The touched files
+    * are collected once, under this table's lock, so the files `f` reads
+    * are the files the commit replaces. A seen `txn` returns at once.
     *
     * CONTRACT (standard for hive-partitioned tables): partition-key values
     * are immutable under updates. The manual DPP scans only the partitions
-    * named by the update batch's CURRENT values — an update that moved a
-    * row's partition key would leave the stale row in its old partition
+    * named by `keyedBy`'s CURRENT values — an update that moved a row's
+    * partition key would leave the stale row in its old partition
     * unscanned (choose stable columns as partition keys). */
+  private[merge] def rewrite(keyedBy: DataFrame, txn: Option[(String, Long)],
+                             metrics: Map[String, String])(
+                             f: DataFrame => DataFrame): Unit = monitor.synchronized {
+    if (txn.exists { case (a, v) => seenTxn(a, v) }) return
+    val (v, s, files) = snapshot
+    require(v >= 0, s"merge target $root does not exist")
+    val replaced = touched(files, keyedBy)
+    commit(v + 1, "MERGE", Some(f(scan(s, replaced))), s, replaced, metrics, txn)
+  }
+
+  /** MERGE the update batch in, replacing the files of the partitions it
+    * touches under [[rewrite]]'s partition-key contract. */
   def merge(updates: DataFrame, condition: String,
             matched: Seq[MergeInto.WhenMatched],
             notMatched: Seq[MergeInto.WhenNotMatched],
             txn: Option[(String, Long)] = None,
             metrics: Map[String, String] = Map.empty): Unit =
-    mergeReplacing(updates, condition, matched, notMatched, txn, metrics, None)
-
-  /** [[merge]], replacing `given` files when the caller has already
-    * collected the partitions `updates` touches ([[touchedFiles]] under this
-    * table's lock): they must all still be live. */
-  private[merge] def mergeReplacing(updates: DataFrame, condition: String,
-                                    matched: Seq[MergeInto.WhenMatched],
-                                    notMatched: Seq[MergeInto.WhenNotMatched],
-                                    txn: Option[(String, Long)],
-                                    metrics: Map[String, String],
-                                    given: Option[Seq[DataFile]]): Unit = monitor.synchronized {
-    if (txn.exists { case (a, v) => seenTxn(a, v) }) return
-    val (v, s, files) = snapshot
-    require(v >= 0, s"merge target $root does not exist")
-    val replaced = given.getOrElse(touched(files, updates))
-    require(replaced.map(_.path).toSet.subsetOf(files.map(_.path).toSet),
-      s"merge into $root names files that are no longer live")
-    val merged = MergeInto(scan(s, replaced), updates, condition, matched, notMatched)
-    commit(v + 1, "MERGE", Some(merged), s, replaced, metrics, txn)
-  }
+    rewrite(updates, txn, metrics)(MergeInto(_, updates, condition, matched, notMatched))
 
   /** `DELETE WHERE condition` — the GDPR-erasure primitive on the COW
     * table. SQL DELETE semantics: rows where the predicate is TRUE go;

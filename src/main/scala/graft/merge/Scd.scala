@@ -11,13 +11,12 @@ import MergeInto._
 
 /** SCD Type 1 / 2 / 4 maintenance, the reference's flagship capability
   * (reference M/utility/Utility.scala:394-707 batch,
-  * :731-1045 streaming twins). Each SCD is exposed twice:
-  *
-  *   - `scdNApply`: PURE DataFrame -> DataFrame semantics (target contents +
-  *     update batch -> post-merge contents). This is the unit the DuckDB
-  *     oracle can check and the form used by `SparkEntry.queries`.
-  *   - `writeScdN`: table-backed variant over [[ParquetTable]] with dedup,
-  *     partition-pruned COW rewrite and commit metrics.
+  * :731-1045 streaming twins). Each SCD is defined once, as `scdNApply`:
+  * PURE DataFrame -> DataFrame semantics (target contents + update batch ->
+  * post-merge contents), the unit the DuckDB oracle checks and the form
+  * `SparkEntry.queries` uses. The table-backed writer `writeScdN` is that
+  * applier run over the rows of the partitions its batch touches
+  * ([[ParquetTable.rewrite]]), with dedup and commit metrics around it.
   *
   * A table-backed writer materializes its batch once: the deduped rows are
   * checkpointed by one job, outside the table's lock, and that job also
@@ -82,16 +81,17 @@ object Scd {
 
   /** The one skeleton of every table-backed writer: a seen txn returns
     * `Map.empty` before the batch is materialized; otherwise, under the
-    * table's lock, the table is created from `seed(batch)` or `merge`d
-    * into, and the commit metrics are returned. The txn is checked again
-    * under the lock, before `merge` runs any of its steps: a concurrent
-    * delivery of the same batch may have committed while this one waited.
-    * The creating commit records the txn too, so a replayed batch 0 is
+    * table's lock, the table is created from `seed(batch)`, or the rows of
+    * the partitions the batch touches are rewritten to `merge(rows, batch)`,
+    * and the commit metrics are returned. The txn is checked again under
+    * the lock, before `merge` runs any of its steps: a concurrent delivery
+    * of the same batch may have committed while this one waited. The
+    * creating commit records the txn too, so a replayed batch 0 is
     * skipped. */
   private def write(table: ParquetTable, updates: DataFrame, keySpecs: Seq[String],
                     dedupOrderCols: Seq[String], txn: Option[(String, Long)])(
                     seed: DataFrame => DataFrame)(
-                    merge: (DataFrame, Map[String, String]) => Unit): Map[String, String] = {
+                    merge: (DataFrame, DataFrame) => DataFrame): Map[String, String] = {
     def seen = txn.exists { case (a, v) => table.seenTxn(a, v) }
     if (seen) return Map.empty
     val (batch, metrics) = materialize(updates, keySpecs, dedupOrderCols)
@@ -99,7 +99,7 @@ object Scd {
       if (seen) Map.empty[String, String]
       else {
         if (!table.exists) table.create(seed(batch), metrics, txn)
-        else merge(batch, metrics)
+        else table.rewrite(batch, txn, metrics)(merge(_, batch))
         metrics
       }
     }
@@ -134,8 +134,7 @@ object Scd {
                 extraCondition: Option[String] = None,
                 txn: Option[(String, Long)] = None): Map[String, String] =
     write(table, updates, keySpecs, dedupOrderCols, txn)(inserted(_, notMatched)) {
-      (batch, metrics) => table.merge(batch, buildJoinCondition(keySpecs, extraCondition),
-        matched, notMatched, txn, metrics)
+      scd1Apply(_, _, keySpecs, matched, notMatched, extraCondition)
     }
 
   // -------------------------------------------------------------------------
@@ -155,13 +154,11 @@ object Scd {
     *                        (e.g. "current_flag" -> "false", "expiry_at" -> "updates.eff_date")
     * @param insertMap       VALUES map creating the new current row
     */
-  /** The staged merge source + condition implementing the union trick —
-    * shared by the pure `scd2Apply` and the table-backed `writeScd2` so the
-    * write path can route the SAME source through the partition-pruned
-    * `ParquetTable.merge` instead of a full-table rewrite. */
-  private def scd2Source(target: DataFrame, updates: DataFrame, keySpecs: Seq[String],
-                         matchCondition: String,
-                         extraCondition: Option[String]): (DataFrame, String) = {
+  def scd2Apply(target: DataFrame, updates: DataFrame, keySpecs: Seq[String],
+                matchCondition: String,
+                updateMap: Map[String, String],
+                insertMap: Map[String, String],
+                extraCondition: Option[String] = None): DataFrame = {
     val uKeys = extractJoinKeys(keySpecs)
     val tKeys = extractTargetKeys(keySpecs)
 
@@ -187,16 +184,6 @@ object Scd {
     val mergeCond = tKeys.zip(mergeKeyCols)
       .map { case (tk, mk) => s"target.$tk = updates.$mk" }
       .++(extraCondition.toSeq).mkString(" AND ")
-    (staged, mergeCond)
-  }
-
-  def scd2Apply(target: DataFrame, updates: DataFrame, keySpecs: Seq[String],
-                matchCondition: String,
-                updateMap: Map[String, String],
-                insertMap: Map[String, String],
-                extraCondition: Option[String] = None): DataFrame = {
-    val (staged, mergeCond) = scd2Source(target, updates, keySpecs,
-      matchCondition, extraCondition)
     MergeInto(target, staged, mergeCond,
       matched = Seq(WhenMatched(Some(matchCondition), UpdateExpr(updateMap))),
       notMatched = Seq(WhenNotMatched(None, InsertExpr(insertMap))))
@@ -242,25 +229,28 @@ object Scd {
       batch => batch.alias("updates").select(insertMap.toSeq.map {
         case (k, v) => expr(v).as(k.split('.').last)
       }: _*)
-    } { (batch, metrics) =>
+    } {
       // Partition-bounded SCD2 (ref splices manual DPP into its SCD2 merge,
       // M/utility/Utility.scala:524-527,548-551): the rows-to-insert probe
-      // joins against only the partitions the batch touches, and the staged
-      // source — whose insert rows carry real partition values, so it
-      // touches exactly the batch's partitions — rides through the same
-      // files' COW. A CDC micro-batch neither reads nor rewrites untouched
-      // partitions, and collects the touched ones once.
-      val replaced = table.touchedFiles(batch)
-      val (staged, mergeCond) = scd2Source(table.readFiles(replaced), batch,
-        keySpecs, matchCondition, extraCondition)
-      table.mergeReplacing(staged, mergeCond,
-        Seq(WhenMatched(Some(matchCondition), UpdateExpr(updateMap))),
-        Seq(WhenNotMatched(None, InsertExpr(insertMap))), txn, metrics, Some(replaced))
+      // and the merge read only the partitions the batch touches — the
+      // staged insert rows carry the batch's own partition values — so a CDC
+      // micro-batch neither reads nor rewrites untouched partitions.
+      scd2Apply(_, _, keySpecs, matchCondition, updateMap, insertMap, extraCondition)
     }
 
   // -------------------------------------------------------------------------
   // SCD TYPE 4 — current table + history table (ref M/utility/Utility.scala:621-707)
   // -------------------------------------------------------------------------
+
+  /** SCD4's current-table clause matrix: `row_active = false` soft-deletes,
+    * everything else upserts; only active rows are inserted, which is also
+    * how `writeScd4` seeds a new current table. */
+  private val scd4Matched = Seq(
+    WhenMatched(Some("updates.row_active = false"),
+      UpdateExpr(Map("deleted_flag" -> "true"))),
+    WhenMatched(None, UpdateAll))
+  private val scd4NotMatched =
+    Seq(WhenNotMatched(Some("updates.row_active = true"), InsertAll))
 
   /** Returns (newCurrent, historyAppendRows).
     *
@@ -269,33 +259,15 @@ object Scd {
     * ref M/utility/Utility.scala:645-676), then the current table takes an
     * SCD1 merge where `row_active = false` updates soft-delete
     * (`deleted_flag = true`) instead of updating. */
-  /** SCD4's current-table clause matrix: `row_active = false` soft-deletes,
-    * everything else upserts. Shared by the pure and table-backed paths. */
-  private val scd4Matched = Seq(
-    WhenMatched(Some("updates.row_active = false"),
-      UpdateExpr(Map("deleted_flag" -> "true"))),
-    WhenMatched(None, UpdateAll))
-  private val scd4NotMatched =
-    Seq(WhenNotMatched(Some("updates.row_active = true"), InsertAll))
-
-  /** Matched current rows snapshotted for the history table, stamped with the
-    * update's timestamp (ref M/utility/Utility.scala:645-676). */
-  private def scd4HistoryRows(current: DataFrame, updates: DataFrame,
-                              keySpecs: Seq[String], updatedAtCol: String,
-                              extraCondition: Option[String]): DataFrame = {
+  def scd4Apply(current: DataFrame, updates: DataFrame, keySpecs: Seq[String],
+                updatedAtCol: String = "updated_at",
+                extraCondition: Option[String] = None): (DataFrame, DataFrame) = {
     val joinCond = expr(buildJoinCondition(keySpecs, extraCondition))
-    current.alias("target")
+    val historyRows = current.alias("target")
       .join(updates.alias("updates"),
         joinCond && col("updates.row_active") === lit(true), "inner")
       .select(current.columns.map(c => col(s"target.$c")) :+
         col(s"updates.$updatedAtCol").cast("timestamp").as("history_created_at"): _*)
-  }
-
-  def scd4Apply(current: DataFrame, updates: DataFrame, keySpecs: Seq[String],
-                updatedAtCol: String = "updated_at",
-                extraCondition: Option[String] = None): (DataFrame, DataFrame) = {
-    val historyRows = scd4HistoryRows(current, updates, keySpecs, updatedAtCol,
-      extraCondition)
     val newCurrent = scd1Apply(current, updates, keySpecs,
       matched = scd4Matched, notMatched = scd4NotMatched,
       extraCondition = extraCondition)
@@ -309,22 +281,18 @@ object Scd {
                 txn: Option[(String, Long)] = None): Map[String, String] =
     // only ACTIVE rows seed current: a first-batch tombstone is no live row
     write(current, updates, keySpecs, dedupOrderCols, txn)(inserted(_, scd4NotMatched)) {
-      (batch, metrics) =>
-        // Partition-bounded SCD4: the history snapshot join reads only the
-        // partitions the batch touches, and the current table takes the same
-        // clause matrix through the same files' COW instead of a full-table
-        // overwrite. History is appended FIRST — it materializes while
-        // current's data files are still the ones its plan reads. The append
-        // is keyed by the current version it precedes, read under current's
-        // lock: a rerun after a crash in current's commit window finds that
-        // key and replaces the crashed attempt's history rows with its own,
-        // whatever batch it carries and whether or not the caller passed a
-        // txn. The caller's txn rides on current.
-        val replaced = current.touchedFiles(batch)
-        val histRows = scd4HistoryRows(current.readFiles(replaced), batch,
-          keySpecs, updatedAtCol, extraCondition)
-        history.appendAs(histRows, (s"scd4:${current.id}", current.latestVersion + 1))
-        current.mergeReplacing(batch, buildJoinCondition(keySpecs, extraCondition),
-          scd4Matched, scd4NotMatched, txn, metrics, Some(replaced))
+      (rows, batch) =>
+        // Partition-bounded SCD4: the history snapshot join and the current
+        // table's merge read only the partitions the batch touches. History
+        // is appended FIRST — it materializes while current's data files are
+        // still the ones its plan reads. The append is keyed by the current
+        // version it precedes, read under current's lock: a rerun after a
+        // crash in current's commit window finds that key and replaces the
+        // crashed attempt's history rows with its own, whatever batch it
+        // carries and whether or not the caller passed a txn. The caller's
+        // txn rides on current.
+        val (next, hist) = scd4Apply(rows, batch, keySpecs, updatedAtCol, extraCondition)
+        history.appendAs(hist, (s"scd4:${current.id}", current.latestVersion + 1))
+        next
     }
 }

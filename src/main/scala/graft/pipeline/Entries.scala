@@ -52,7 +52,8 @@ object ShardedJdbcLoad {
           readLimit: Int = 1000,
           journal: Option[Journal] = None,
           piiRules: Seq[CdcProcessor.PiiRule] = Nil,
-          parallelism: Int = 4): Map[String, Boolean] = {
+          parallelism: Int = SparkSession.active.sparkContext.defaultParallelism):
+      Map[String, Boolean] = {
     val perShardRows = for {
       shard <- shards
       cfg <- controlRows
@@ -84,7 +85,8 @@ object Dispatch {
           targetRoot: String,
           journal: Journal,
           piiRules: Seq[CdcProcessor.PiiRule] = Nil,
-          parallelism: Int = 4): Map[String, Boolean] = {
+          parallelism: Int = SparkSession.active.sparkContext.defaultParallelism):
+      Map[String, Boolean] = {
     // the reference receives one space-joined arg ("RERUN_BATCH 1,2");
     // accept both that form and pre-split argv
     val parts = args.flatMap(_.split(" ")).filter(_.nonEmpty)

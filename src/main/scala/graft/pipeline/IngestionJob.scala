@@ -100,7 +100,9 @@ object IngestionJob {
     * Returns per-pipeline success, keyed by pipeline name
     * (`pipelineDefId_tableName`). Rows whose names collide are refused
     * before any pipeline starts: their results would share one key, and
-    * the journal would log one outcome for all of them.
+    * the journal would log one outcome for all of them. At most
+    * `parallelism` pipelines run at once; the default is the session's
+    * default parallelism.
     *
     * The journal takes two commits per run, after every pipeline has ended:
     * one pipeline_fact commit with the fact of each writer that finished,
@@ -113,7 +115,7 @@ object IngestionJob {
           targetRoot: String,
           shardMappings: Option[DataFrame] = None,
           journal: Option[Journal] = None,
-          parallelism: Int = 4,
+          parallelism: Int = SparkSession.active.sparkContext.defaultParallelism,
           piiRules: Seq[CdcProcessor.PiiRule] = Nil): Map[String, Boolean] = {
     // each finished writer's fact, by control-row index
     val facts = new java.util.concurrent.ConcurrentHashMap[Int, Journal.Fact]()

@@ -130,7 +130,7 @@ object Pipeline {
 /** Run many pipelines concurrently on a bounded pool (ref
   * M/configbuilder/Start.scala:111-118's invokeAll fan-out). */
 object PipelineRunner {
-  def runAll(pipelines: Seq[Pipeline], parallelism: Int = 4): Map[String, Boolean] = {
+  def runAll(pipelines: Seq[Pipeline], parallelism: Int): Map[String, Boolean] = {
     val ec = ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism)))
     try {

@@ -105,6 +105,21 @@ class ParquetTableSpec extends SparkSpec {
     }
   }
 
+  test("create on an existing table is refused and loses no row") {
+    for (keys <- layouts) {
+      val t = new ParquetTable(spark, tmpDir("pt_create_twice"), keys)
+      t.create(Seq((1, "a", "p1")).toDF("k", "v", "p"))
+      t.append(Seq((2, "b", "p2")).toDF("k", "v", "p"))
+      val e = intercept[IllegalArgumentException](
+        t.create(Seq((9, "z", "p1")).toDF("k", "v", "p")))
+      assert(e.getMessage.contains(s"table ${t.root} already exists"), s"keys=$keys")
+      assert(t.latestVersion == 1L, s"keys=$keys")
+      assert(t.read.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2), s"keys=$keys")
+      val fresh = new ParquetTable(spark, t.root, keys)
+      assert(fresh.read.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2), s"keys=$keys")
+    }
+  }
+
   test("txn idempotency via seenTxn") {
     val t = new ParquetTable(spark, tmpDir("pt_txn"))
     t.create(Seq((1, "a")).toDF("k", "v"))
@@ -238,14 +253,15 @@ class ParquetTableSpec extends SparkSpec {
     }
   }
 
-  /** The rewriting operations, each committing one version. */
-  private val rewrites: Seq[(String, ParquetTable => Unit)] = Seq(
-    "compact" -> (_.compact()),
+  /** The rewriting operations, each committing one version under `txn`. */
+  private def rewrites(txn: Option[(String, Long)] = None)
+      : Seq[(String, ParquetTable => Unit)] = Seq(
+    "compact" -> (_.compact(txn = txn)),
     "merge" -> (_.merge(Seq((1, "a2", "p1"), (7, "g", "p1")).toDF("k", "v", "p"),
       "target.k = updates.k", Seq(WhenMatched(None, UpdateAll)),
-      Seq(WhenNotMatched(None, InsertAll)))),
-    "delete" -> (_.delete("k = 2")),
-    "overwrite" -> (_.overwrite(Seq((9, "z", "p9")).toDF("k", "v", "p"))))
+      Seq(WhenNotMatched(None, InsertAll)), txn)),
+    "delete" -> (_.delete("k = 2", txn = txn)),
+    "overwrite" -> (_.overwrite(Seq((9, "z", "p9")).toDF("k", "v", "p"), txn = txn)))
 
   private def sixRows(root: String, keys: Seq[String]): ParquetTable = {
     val t = new ParquetTable(spark, root, keys)
@@ -257,7 +273,7 @@ class ParquetTableSpec extends SparkSpec {
   test("a DataFrame read before a commit keeps returning the version it was read at") {
     for (keys <- layouts) {
       val t = sixRows(tmpDir("pt_iso"), keys)
-      rewrites.foreach { case (name, op) =>
+      rewrites().foreach { case (name, op) =>
         val before = t.read
         val expected = rowsOf(before)
         val v = t.latestVersion
@@ -272,7 +288,7 @@ class ParquetTableSpec extends SparkSpec {
     for (keys <- layouts) {
       val root = tmpDir("pt_op_crash")
       val t = sixRows(root, keys)
-      rewrites.foreach { case (name, op) =>
+      rewrites().foreach { case (name, op) =>
         val v = t.latestVersion
         val expected = rowsOf(t.read)
         t.onPreCommit = () => throw new RuntimeException("injected crash")
@@ -283,6 +299,24 @@ class ParquetTableSpec extends SparkSpec {
         assert(rowsOf(restarted.read) == expected, s"$name crash visible (keys=$keys)")
         op(t) // the retry commits the same version
         assert(t.latestVersion == v + 1)
+      }
+    }
+  }
+
+  test("merge, delete, compact or overwrite replayed under a committed txn changes nothing") {
+    for (keys <- layouts) {
+      val t = sixRows(tmpDir("pt_op_replay"), keys)
+      rewrites().indices.foreach { i =>
+        val txn = Some(("app", i.toLong))
+        val (name, op) = rewrites(txn)(i)
+        op(t)
+        // a row the replay would rewrite (and compact would repack) if it ran
+        t.append(Seq((10 + i, "x", "p1")).toDF("k", "v", "p"))
+        val v = t.latestVersion
+        val expected = rowsOf(t.read)
+        op(t)
+        assert(t.latestVersion == v, s"$name replay committed (keys=$keys)")
+        assert(rowsOf(t.read) == expected, s"$name replay changed rows (keys=$keys)")
       }
     }
   }

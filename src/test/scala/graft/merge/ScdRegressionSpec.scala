@@ -7,7 +7,7 @@ import graft.SparkSpec
 class ScdRegressionSpec extends SparkSpec {
   import spark.implicits._
 
-  test("writeScd2 works on a PARTITIONED table across batches (read-then-overwrite)") {
+  test("writeScd2 works on a PARTITIONED table across batches") {
     val table = new ParquetTable(spark, tmpDir("scd2part"), partitionKeys = Seq("region"))
     val insertMap = Map(
       "k" -> "updates.k", "v" -> "updates.v", "region" -> "updates.region",
@@ -92,7 +92,7 @@ class ScdRegressionSpec extends SparkSpec {
     assert(hist.read.count() == 1) // old eu row snapshotted
   }
 
-  test("emptied-partition cleanup handles Hive-escaped partition values") {
+  test("a merge emptying a Hive-escaped partition leaves no live file there") {
     val t = new ParquetTable(spark, tmpDir("esc"), partitionKeys = Seq("p"))
     // ':' is Hive-escaped to %3A in directory names
     t.create(Seq((1, "10:30"), (2, "11:45")).toDF("k", "p"))
